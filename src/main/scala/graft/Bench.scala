@@ -1,5 +1,9 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+
 object Bench {
   /** One timed run of a single query; `err` is the exception class+message
     * when the query failed (its wall time then measures a stack unwind,
@@ -147,21 +151,13 @@ object Bench {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         (json + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(cpus)
     // Warm-up: JVM/JIT, parquet footer caches, codegen compilation —
     // so the first timed query doesn't absorb cold-start cost and
     // numbers are comparable across rounds.

@@ -2,370 +2,69 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AudioAlawLevels, AudioFp, AudioLevels, AudioMeta, AudioUlawLevels, CdcBoundaries, DHash64, DeflateRatio, DeflateZlib, DotProductLong, ExifMeta, FlacTags, H264PcmMbs, H264Sps, Id3Tags, ImageDims, ImageLevels, InflateZlib, IsValidIri, JpegLuma, Mp3Count1, Mp3Meta, Mp3SideInfo, Mp3Vbr, Mp4Samples, NearestCentroid, NfcNormalize, PngLevels, TopKByLong, TopKByLongStr, UrlCanon, VecSumLong, VideoMeta, VorbisBooks, VorbisFloor, VorbisFloorCurve, VorbisResidue, VorbisVq, WarcRecords, WordNgrams, ZstdFrames, ZstdFseCompress, ZstdFseDecompress, ZstdFseDictDecompress, ZstdMultiFrame, ZstdSplitDecode, GzipMember, FlacPcmLevels, Mp3Bigvalues, Mp3Part3, H264CavlcExpr, H264CavlcLumaExpr, H264CavlcFullExpr, H264CavlcAcExpr, H264CavlcMbExpr, VorbisResidueApply, VorbisResidueScale}
+import graft.functions.{DeflateRatio, DotProductLong, IsValidIri, NativeCall, NativeFunctions, TopKByLong, TopKByLongStr, VecSumLong}
 
-/** Session extensions exposing the engine's native expressions to
-  * SQL users (`spark.sql.extensions=graft.GraftExtensions`):
-  *
-  *   - `is_valid_iri(str)` — the O5/O7 cleaning predicate
-  *   - `dot_product_l(array<bigint>, array<bigint>)` — quantized
-  *     similarity kernel
-  *   - `top_k_l(score, id, k)` — bounded-heap per-group top-k
-  *     aggregate (k must be a literal)
-  *   - `top_k_ls(score, id, k)` — the string-labelled sibling
-  *
-  * Registered through the public `SparkSessionExtensions.injectFunction`
-  * API, so the library is usable from pure `spark.sql(...)` — no
-  * Scala required.
+/** Session extensions exposing the engine's native functions to SQL
+  * users (`spark.sql.extensions=graft.GraftExtensions`): every entry
+  * of [[graft.functions.NativeFunctions]] under its SQL name, plus
+  * the hand-written `is_valid_iri`, `deflate_ratio`, `dot_product_l`
+  * and the `vec_sum_l`, `top_k_l` and `top_k_ls` aggregates.
   *
   * Also injects [[graft.plans.DotProductRewrite]], an optimizer rule
   * that turns the naive `aggregate(zip_with(a, b, (x,y) -> x*y), 0L,
-  * (s,x) -> s+x)` spelling into the `dot_product_l` codegen kernel.
+  * (s,x) -> s+x)` spelling into the `dot_product_l` codegen kernel,
+  * and the planner strategy of the native as-of join.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: naive HOF dot product → codegen kernel
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    // planner strategy: native as-of join (graft.plans.AsofJoin)
     ext.injectPlannerStrategy(_ => new graft.plans.AsofStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("is_valid_iri"),
-      new ExpressionInfo(classOf[IsValidIri].getName, "is_valid_iri"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        IsValidIri(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "deflate_ratio"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DeflateRatio(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_l"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "dot_product_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductLong(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName,
-        "nearest_centroid"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NearestCentroid(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sum_l"),
-      new ExpressionInfo(classOf[VecSumLong].getName, "vec_sum_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(args.length == 1,
-          "vec_sum_l(array<bigint>): exactly one argument")
-        VecSumLong(args.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_l"),
-      new ExpressionInfo(classOf[TopKByLong].getName, "top_k_l"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val msg = "top_k_l(score, id, k): k must be a literal integer"
-        require(args.length == 3 && args(2).foldable, msg)
-        // validate the literal's type, not just foldability — a
-        // foldable string would otherwise die later with an opaque
-        // ClassCastException, and a fractional k would silently
-        // truncate
-        val k = args(2).eval() match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long => l.intValue()
-          case s: java.lang.Short => s.intValue()
-          case b: java.lang.Byte => b.intValue()
-          case _ => throw new IllegalArgumentException(msg)
-        }
-        // Returning the bare AggregateFunction — the analyzer wraps it
-        // in an AggregateExpression during function resolution.
-        TopKByLong(args(0), args(1), k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_ls"),
-      new ExpressionInfo(classOf[TopKByLongStr].getName, "top_k_ls"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val msg = "top_k_ls(score, id, k): k must be a literal integer"
-        require(args.length == 3 && args(2).foldable, msg)
-        val k = args(2).eval() match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long => l.intValue()
-          case s: java.lang.Short => s.intValue()
-          case b: java.lang.Byte => b.intValue()
-          case _ => throw new IllegalArgumentException(msg)
-        }
-        TopKByLongStr(args(0), args(1), k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(args.length == 2,
-          "word_ngrams(array<string>, n): exactly two arguments")
-        WordNgrams(args(0), args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("image_dims"),
-      new ExpressionInfo(classOf[ImageDims].getName, "image_dims"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageDims(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("audio_meta"),
-      new ExpressionInfo(classOf[AudioMeta].getName, "audio_meta"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AudioMeta(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("warc_records"),
-      new ExpressionInfo(classOf[WarcRecords].getName, "warc_records"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WarcRecords(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("flac_tags"),
-      new ExpressionInfo(classOf[FlacTags].getName, "flac_tags"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FlacTags(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("id3_tags"),
-      new ExpressionInfo(classOf[Id3Tags].getName, "id3_tags"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Id3Tags(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("exif_meta"),
-      new ExpressionInfo(classOf[ExifMeta].getName, "exif_meta"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ExifMeta(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("image_levels"),
-      new ExpressionInfo(classOf[ImageLevels].getName, "image_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ImageLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("audio_levels"),
-      new ExpressionInfo(classOf[AudioLevels].getName, "audio_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AudioLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("video_meta"),
-      new ExpressionInfo(classOf[VideoMeta].getName, "video_meta"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VideoMeta(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("png_levels"),
-      new ExpressionInfo(classOf[PngLevels].getName, "png_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PngLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("jpeg_luma"),
-      new ExpressionInfo(classOf[JpegLuma].getName, "jpeg_luma"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        JpegLuma(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("luma_cells"),
-      new ExpressionInfo(classOf[graft.functions.LumaCells].getName,
-        "luma_cells"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.LumaCells(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("audio_fp"),
-      new ExpressionInfo(classOf[AudioFp].getName, "audio_fp"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AudioFp(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("audio_ulaw_levels"),
-      new ExpressionInfo(classOf[AudioUlawLevels].getName,
-        "audio_ulaw_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AudioUlawLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("audio_alaw_levels"),
-      new ExpressionInfo(classOf[AudioAlawLevels].getName,
-        "audio_alaw_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        AudioAlawLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dhash64"),
-      new ExpressionInfo(classOf[DHash64].getName, "dhash64"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_meta"),
-      new ExpressionInfo(classOf[Mp3Meta].getName, "mp3_meta"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3Meta(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_vbr"),
-      new ExpressionInfo(classOf[Mp3Vbr].getName, "mp3_vbr"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3Vbr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_side_info"),
-      new ExpressionInfo(classOf[Mp3SideInfo].getName, "mp3_side_info"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3SideInfo(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_count1"),
-      new ExpressionInfo(classOf[Mp3Count1].getName, "mp3_count1"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3Count1(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_sps"),
-      new ExpressionInfo(classOf[H264Sps].getName, "h264_sps"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264Sps(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_pcm_mbs"),
-      new ExpressionInfo(classOf[H264PcmMbs].getName, "h264_pcm_mbs"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264PcmMbs(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_boundaries"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName,
-        "cdc_boundaries"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CdcBoundaries(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NfcNormalize(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("url_canon"),
-      new ExpressionInfo(classOf[UrlCanon].getName, "url_canon"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        UrlCanon(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("inflate_zlib"),
-      new ExpressionInfo(classOf[InflateZlib].getName, "inflate_zlib"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        InflateZlib(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("deflate_zlib"),
-      new ExpressionInfo(classOf[DeflateZlib].getName, "deflate_zlib"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DeflateZlib(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_books"),
-      new ExpressionInfo(classOf[VorbisBooks].getName, "vorbis_books"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisBooks(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_floor"),
-      new ExpressionInfo(classOf[VorbisFloor].getName, "vorbis_floor"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisFloor(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_floor_curve"),
-      new ExpressionInfo(classOf[VorbisFloorCurve].getName, "vorbis_floor_curve"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisFloorCurve(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_vq"),
-      new ExpressionInfo(classOf[VorbisVq].getName, "vorbis_vq"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisVq(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_residue"),
-      new ExpressionInfo(classOf[VorbisResidue].getName, "vorbis_residue"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisResidue(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp4_samples"),
-      new ExpressionInfo(classOf[Mp4Samples].getName, "mp4_samples"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp4Samples(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_frames"),
-      new ExpressionInfo(classOf[ZstdFrames].getName, "zstd_frames"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdFrames(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_fse_compress"),
-      new ExpressionInfo(classOf[ZstdFseCompress].getName, "zstd_fse_compress"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdFseCompress(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_fse_decompress"),
-      new ExpressionInfo(classOf[ZstdFseDecompress].getName, "zstd_fse_decompress"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdFseDecompress(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_fse_dict_decompress"),
-      new ExpressionInfo(classOf[ZstdFseDictDecompress].getName,
-        "zstd_fse_dict_decompress"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdFseDictDecompress(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_multi_frame"),
-      new ExpressionInfo(classOf[ZstdMultiFrame].getName,
-        "zstd_multi_frame"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdMultiFrame(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("zstd_split_decode"),
-      new ExpressionInfo(classOf[ZstdSplitDecode].getName,
-        "zstd_split_decode"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ZstdSplitDecode(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("gzip_member"),
-      new ExpressionInfo(classOf[GzipMember].getName, "gzip_member"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GzipMember(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("flac_pcm_levels"),
-      new ExpressionInfo(classOf[FlacPcmLevels].getName,
-        "flac_pcm_levels"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FlacPcmLevels(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_bigvalues"),
-      new ExpressionInfo(classOf[Mp3Bigvalues].getName, "mp3_bigvalues"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3Bigvalues(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mp3_part3"),
-      new ExpressionInfo(classOf[Mp3Part3].getName, "mp3_part3"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Mp3Part3(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_cavlc"),
-      new ExpressionInfo(classOf[H264CavlcExpr].getName, "h264_cavlc"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264CavlcExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_residue_apply"),
-      new ExpressionInfo(classOf[VorbisResidueApply].getName,
-        "vorbis_residue_apply"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisResidueApply(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vorbis_residue_scale"),
-      new ExpressionInfo(classOf[VorbisResidueScale].getName,
-        "vorbis_residue_scale"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VorbisResidueScale(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_cavlc_luma"),
-      new ExpressionInfo(classOf[H264CavlcLumaExpr].getName,
-        "h264_cavlc_luma"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264CavlcLumaExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_cavlc_full"),
-      new ExpressionInfo(classOf[H264CavlcFullExpr].getName,
-        "h264_cavlc_full"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264CavlcFullExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_cavlc_ac"),
-      new ExpressionInfo(classOf[H264CavlcAcExpr].getName,
-        "h264_cavlc_ac"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264CavlcAcExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h264_cavlc_mb"),
-      new ExpressionInfo(classOf[H264CavlcMbExpr].getName,
-        "h264_cavlc_mb"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H264CavlcMbExpr(args.head)))
+    NativeFunctions.all.foreach { fn =>
+      register(ext, fn.name, classOf[NativeCall], fn.usage)(
+        NativeCall(fn, _))
+    }
+    register(ext, "is_valid_iri", classOf[IsValidIri])(
+      args => IsValidIri(args.head))
+    register(ext, "deflate_ratio", classOf[DeflateRatio])(
+      args => DeflateRatio(args.head))
+    register(ext, "dot_product_l", classOf[DotProductLong])(
+      args => DotProductLong(args(0), args(1)))
+    register(ext, "vec_sum_l", classOf[VecSumLong]) { args =>
+      require(args.length == 1,
+        "vec_sum_l(array<bigint>): exactly one argument")
+      VecSumLong(args.head)
+    }
+    // Returning the bare AggregateFunction — the analyzer wraps it in
+    // an AggregateExpression during function resolution.
+    register(ext, "top_k_l", classOf[TopKByLong])(
+      args => TopKByLong(args(0), args(1), literalK("top_k_l", args)))
+    register(ext, "top_k_ls", classOf[TopKByLongStr])(
+      args => TopKByLongStr(args(0), args(1), literalK("top_k_ls", args)))
+  }
+
+  private def register(ext: SparkSessionExtensions, name: String,
+      cls: Class[_], usage: String = null)(
+      build: Seq[Expression] => Expression): Unit =
+    ext.injectFunction((FunctionIdentifier(name),
+      new ExpressionInfo(cls.getName, null, name, usage, "", "", "", "",
+        "", "", ""),
+      build))
+
+  /** `k` of `top_k_l(score, id, k)`: an integral literal. The literal's
+    * type is validated, not just its foldability — a foldable string
+    * would otherwise die later with an opaque ClassCastException, and
+    * a fractional k would silently truncate. */
+  private def literalK(name: String, args: Seq[Expression]): Int = {
+    val msg = s"$name(score, id, k): k must be a literal integer"
+    require(args.length == 3 && args(2).foldable, msg)
+    args(2).eval() match {
+      case i: java.lang.Integer => i.intValue()
+      case l: java.lang.Long => l.intValue()
+      case s: java.lang.Short => s.intValue()
+      case b: java.lang.Byte => b.intValue()
+      case _ => throw new IllegalArgumentException(msg)
+    }
   }
 }

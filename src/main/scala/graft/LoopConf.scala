@@ -33,17 +33,8 @@ object LoopConf {
     * ccFromPairs constant, promoted to the shared discipline. */
   val RowsPerPartition = 500000L
 
-  /** Dev experiment knob ONLY (unset in every shipped path): floors
-    * the derived width so a loop's width sensitivity can be measured
-    * without a rebuild. */
-  private val devMinWidth =
-    sys.env.get("SPARK_GRAFT_LOOP_MIN_WIDTH").map(_.toInt)
-
-  def partsFor(rows: Long): Int = {
-    val w = math.max(1L, rows / RowsPerPartition)
-      .min(Int.MaxValue.toLong).toInt
-    devMinWidth.fold(w)(math.max(_, w))
-  }
+  def partsFor(rows: Long): Int =
+    math.max(1L, rows / RowsPerPartition).min(Int.MaxValue.toLong).toInt
 
   /** Run `body` with the interior shuffle width derived from `rows`
     * (the loop's measured state size); restores the session width

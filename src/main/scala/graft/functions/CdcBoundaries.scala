@@ -1,11 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `cdc_boundaries(text)` → `array<bigint>` of content-defined chunk
@@ -15,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (mod D) — the [[graft.llm.CdcChunks]] boundary rule as ONE O(len)
   * rolling pass per document.
   *
-  * Why an expression and not a `substr` fold: the unrolled
+  * Why a kernel and not a `substr` fold: the unrolled
   * 16-step Column fold evaluates `substr(text, i+j, 1)` per window
   * position — each substr re-scans the string from its start
   * (UTF-8 offsets), the full text is duplicated across every
@@ -27,30 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the scan. The fold Column survives in `CdcChunks.foldHashCol`
   * solely so a spec can prove the two never drift.
   */
-case class CdcBoundaries(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcBoundaries.kernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CdcBoundaries.kernel($c);")
-
-  override protected def withNewChildInternal(
-      c: Expression): CdcBoundaries = copy(child = c)
-  override def prettyName: String = "cdc_boundaries"
-}
-
 object CdcBoundaries {
-  def apply(c: Column): Column =
-    ColumnBridge.column(CdcBoundaries(ColumnBridge.expression(c)))
-
   /** One rolling pass; positions/windows count CODEPOINTS (the unit
     * `length()`/`substr()` count in both Spark and DuckDB, so the
     * oracle's `ord(substr(text, i+j, 1))` sees the same values).

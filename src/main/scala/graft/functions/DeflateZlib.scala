@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
-
 /** `deflate_zlib(binary, level)` → the RFC 1950 zlib stream of the
   * input at the given DEFLATE level (0–9), via the JDK's Deflater —
   * the CONSTRUCT half of the `llm_inflate` round-trip, deliberately
@@ -16,31 +10,7 @@ import org.apache.spark.sql.types._
   * high levels dynamic blocks — cycling levels per row walks the
   * decoder through all three block types. Deterministic for a given
   * (input, level). */
-case class DeflateZlib(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(b: Any, l: Any): Any =
-    DeflateZlib.compress(b.asInstanceOf[Array[Byte]],
-      l.asInstanceOf[Int])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, l) =>
-      s"${ev.value} = graft.functions.DeflateZlib.compress($b, $l);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DeflateZlib = copy(left = l, right = r)
-  override def prettyName: String = "deflate_zlib"
-}
-
 object DeflateZlib {
-  def apply(b: Column, level: Column): Column =
-    ColumnBridge.column(DeflateZlib(
-      ColumnBridge.expression(b), ColumnBridge.expression(level)))
-
   def compress(b: Array[Byte], level: Int): Array[Byte] = {
     val d = new java.util.zip.Deflater(math.max(0, math.min(9, level)))
     d.setInput(b)

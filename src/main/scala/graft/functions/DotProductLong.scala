@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Integer dot product over two `array<bigint>` columns — the hot
   * inner loop of the similarity-search operators
@@ -98,36 +98,4 @@ object DotProductLong {
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductLong(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-}
-
-/** Map-side nearest-centroid argmax: `left` is the row's quantized
-  * vector (`array<bigint>`), `right` the broadcast centroid table
-  * collapsed to ONE `array<struct<cid:int, cv:array<bigint>>>`
-  * literal-ish column (sorted by cid; ties break to the smallest).
-  *
-  * This is the IVF assignment kernel: with the centroids riding along
-  * as a single broadcast row, the nearest-centroid id is computable
-  * row-locally inside whole-stage codegen — no corpus multiplication,
-  * no per-vector reduce exchange. (The previous shape —
-  * `crossJoin(centroids).groupBy(vec_id).agg(max(...))` — shuffled
-  * every embedding once and blew the corpus up 16×; at 100 TB that
-  * exchange was the scale-killer.)
-  */
-case class NearestCentroid(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecUtil.nearestCid(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.VecUtil.nearestCid($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): NearestCentroid = copy(left = l, right = r)
-}
-
-object NearestCentroid {
-  def apply(qv: Column, cents: Column): Column =
-    ColumnBridge.column(NearestCentroid(
-      ColumnBridge.expression(qv), ColumnBridge.expression(cents)))
 }

@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
-
 /** `gzip_member(binary)` → one complete gzip member (RFC 1952) of
   * the input bytes — the building block of `.warc.gz` archives,
   * which concatenate one member PER RECORD so consumers can start
@@ -13,34 +7,8 @@ import org.apache.spark.sql.types._
   * the JDK writer emits a fixed header (MTIME 0, no name/comment)
   * and DEFLATE at the default level, so the same input always
   * yields the same bytes — fixture archives rebuilt on both sides
-  * of a replay agree bit-for-bit.
-  *
-  * Native Catalyst expression so archive construction stays inside
-  * whole-stage codegen next to [[WarcRecords]]'s parse in the
-  * round-trip queries. */
-case class GzipMember(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(input: Any): Any =
-    GzipMember.compress(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GzipMember.compress($c);")
-
-  override protected def withNewChildInternal(c: Expression): GzipMember =
-    copy(child = c)
-  override def prettyName: String = "gzip_member"
-}
-
+  * of a replay agree bit-for-bit. */
 object GzipMember {
-  def apply(c: Column): Column =
-    ColumnBridge.column(GzipMember(ColumnBridge.expression(c)))
-
   /** One gzip member of `b` (JDK GZIPOutputStream: fixed header,
     * default-level DEFLATE, CRC32 + ISIZE trailer). */
   def compress(b: Array[Byte]): Array[Byte] = {

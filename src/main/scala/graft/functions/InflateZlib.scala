@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
-
 /** `inflate_zlib(binary)` → the inflated bytes, decoded by the
   * engine's OWN RFC 1951/1950 implementation
   * ([[graft.llm.Inflate]]: canonical Huffman construction, dynamic
@@ -13,36 +7,8 @@ import org.apache.spark.sql.types._
   * the JDK. Null on any malformed stream (fail-closed: bad
   * wrapper, over-subscribed codes, walks into unassigned codewords,
   * out-of-window copies, trailing garbage, wrong checksum, bomb
-  * cap). Native Catalyst expression like [[FlacPcmLevels]]: one
-  * static call inside whole-stage codegen, interpreted and codegen
-  * paths sharing one decoder. */
-case class InflateZlib(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-
-  // nullable even for non-null input: malformed stream → null
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    InflateZlib.inflate(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.InflateZlib.inflate($c);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(c: Expression): InflateZlib =
-    copy(child = c)
-  override def prettyName: String = "inflate_zlib"
-}
-
+  * cap). */
 object InflateZlib {
-  def apply(c: Column): Column =
-    ColumnBridge.column(InflateZlib(ColumnBridge.expression(c)))
-
   /** Null (not an exception) on malformed input — the codegen
     * contract. */
   def inflate(b: Array[Byte]): Array[Byte] =

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `nfc_normalize(string)` → the Unicode NFC (canonical
@@ -12,36 +7,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * text-canonicalization pass before dedup/tokenization, where
   * visually identical strings with different codepoint sequences
   * ("é" vs "e" + U+0301) must hash identically. Spark ships no
-  * normalization built-in; this is a native Catalyst expression
-  * over the JDK's `java.text.Normalizer` (Unicode-standard NFC, the
-  * same form DuckDB's `nfc_normalize` and Python's
+  * normalization built-in; this kernel runs the JDK's
+  * `java.text.Normalizer` (Unicode-standard NFC, the same form
+  * DuckDB's `nfc_normalize` and Python's
   * `unicodedata.normalize("NFC", …)` produce, which is what makes
-  * it oracle-checkable). One static call inside whole-stage
-  * codegen; ASCII fast-path (NFC is the identity on ASCII, the bulk
-  * of a web corpus) avoids the Normalizer walk entirely. */
-case class NfcNormalize(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.normalize($c);")
-
-  override protected def withNewChildInternal(c: Expression): NfcNormalize =
-    copy(child = c)
-  override def prettyName: String = "nfc_normalize"
-}
-
+  * it oracle-checkable). The ASCII fast-path (NFC is the identity
+  * on ASCII, the bulk of a web corpus) avoids the Normalizer walk
+  * entirely. */
 object NfcNormalize {
-  def apply(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
-
   def normalize(s: UTF8String): UTF8String = {
     // ASCII fast-path: NFC is the identity on ASCII and most web
     // text is ASCII — skip the String round-trip entirely

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, ExpectsInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `url_canon(string)` → the RFC 3986 syntax-based normalization of
@@ -21,34 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * never reach the server). Null for inputs without a
   * scheme://authority shape (fail-closed — a gate should surface
   * junk, not guess). Spark ships `parse_url` extraction but no
-  * normalizer; this is a native codegen expression. */
-case class UrlCanon(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-
-  // nullable even for non-null input: non-absolute URL → null
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanon.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.UrlCanon.normalize($c);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(c: Expression): UrlCanon =
-    copy(child = c)
-  override def prettyName: String = "url_canon"
-}
-
+  * normalizer. */
 object UrlCanon {
-  def apply(c: Column): Column =
-    ColumnBridge.column(UrlCanon(ColumnBridge.expression(c)))
-
   def normalize(s: UTF8String): UTF8String = {
     val out = normalizeStr(s.toString)
     if (out == null) null else UTF8String.fromString(out)

@@ -1,23 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram (shingle) construction — the hot first step of every
   * text-dedup/sketch operator (MinHash signatures, KMV, novelty,
   * winnowing, passage dedup, decontamination 5-grams).
   *
-  * Why a native expression and not
+  * Why a native function and not
   * `transform(sequence(1, size(w)-n+1), i -> concat(...))`: Spark's
   * higher-order functions are CodegenFallback — the lambda is
   * evaluated INTERPRETED, one expression-tree walk per produced
   * shingle, and the `sequence()` materializes an index array first.
-  * This expression compiles to one generated call whose kernel runs
+  * `word_ngrams` compiles to one generated call whose kernel runs
   * a primitive loop over the token array's UTF8Strings — it stays
   * inside whole-stage codegen like the dot-product kernel.
   *
@@ -54,35 +49,4 @@ object TextKernels {
     }
     new GenericArrayData(res)
   }
-}
-
-case class WordNgrams(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  // analyzer-time contract: a wrong-typed argument fails analysis
-  // instead of class-casting at runtime. (No explicit
-  // Seq[AbstractDataType] annotation — that type is private[sql];
-  // the inferred covariant type satisfies the override.)
-  override def inputTypes = Seq(ArrayType(StringType), IntegerType)
-  // output may contain null shingles ONLY when the input array may
-  // contain null tokens (null-in → null-out, see TextKernels)
-  override def dataType: DataType = left.dataType match {
-    case ArrayType(_, cn) => ArrayType(StringType, containsNull = cn)
-    case _ => ArrayType(StringType, containsNull = false)
-  }
-  override def prettyName: String = "word_ngrams"
-  override protected def nullSafeEval(words: Any, n: Any): Any =
-    TextKernels.wordNgrams(words.asInstanceOf[ArrayData],
-      n.asInstanceOf[Int])
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (w, n) => s"graft.functions.TextKernels.wordNgrams($w, $n)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): WordNgrams = copy(left = l, right = r)
-}
-
-object WordNgrams {
-  def of(words: Column, n: Int): Column =
-    ColumnBridge.column(WordNgrams(ColumnBridge.expression(words),
-      ColumnBridge.expression(org.apache.spark.sql.functions.lit(n))))
 }

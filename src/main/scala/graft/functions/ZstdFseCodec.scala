@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types._
-
-/** `zstd_fse_compress(binary, explicit)` → a zstd frame of FSE
+/** `zstd_fse_compress(binary, explicit)`: a zstd frame of FSE
   * Compressed blocks built by the engine's own greedy-LZ encoder
   * ([[graft.llm.ZstdFse.compress]]) — the CONSTRUCT half of the
   * `llm_zstd_fse` roundtrip. `explicit != 0` transmits per-block
@@ -14,73 +8,24 @@ import org.apache.spark.sql.types._
   * histogram); otherwise the RFC 8878 predefined distributions are
   * used — cycling the flag per row walks the decoder through both
   * table sources. Deterministic for a given (input, flag). */
-case class ZstdFseCompress(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(b: Any, e: Any): Any =
-    ZstdFseCompress.compress(b.asInstanceOf[Array[Byte]],
-      e.asInstanceOf[Int])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, e) =>
-      s"${ev.value} = graft.functions.ZstdFseCompress.compress($b, $e);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZstdFseCompress =
-    copy(left = l, right = r)
-  override def prettyName: String = "zstd_fse_compress"
-}
-
 object ZstdFseCompress {
-  def apply(b: Column, explicitTables: Column): Column =
-    ColumnBridge.column(ZstdFseCompress(
-      ColumnBridge.expression(b), ColumnBridge.expression(explicitTables)))
-
   def compress(b: Array[Byte], explicitTables: Int): Array[Byte] =
     graft.llm.ZstdFse.compress(b, explicitTables != 0)
 }
 
-/** `zstd_fse_decompress(binary)` → the regenerated bytes, decoded
+/** `zstd_fse_decompress(binary)`: the regenerated bytes, decoded
   * by the engine's own RFC 8878 walk ([[graft.llm.Zstd.walk]] +
   * [[graft.llm.ZstdFse.decodeBlock]]: FSE table construction,
   * backward bitstream, sequence execution with repeat offsets).
   * Null on any malformed stream (fail-closed: truncation, reserved
   * bits, Huffman literals, content-size mismatch, out-of-window
   * copies, bomb cap). */
-case class ZstdFseDecompress(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    ZstdFseDecompress.decompress(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.ZstdFseDecompress.decompress($c);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(c: Expression): ZstdFseDecompress =
-    copy(child = c)
-  override def prettyName: String = "zstd_fse_decompress"
-}
-
 object ZstdFseDecompress {
-  def apply(c: Column): Column =
-    ColumnBridge.column(ZstdFseDecompress(ColumnBridge.expression(c)))
-
   def decompress(b: Array[Byte]): Array[Byte] =
     graft.llm.ZstdFse.decompress(b).orNull
 }
 
-/** `zstd_jni_compress(binary, level)` → a REAL zstd frame produced
+/** `zstd_jni_compress(binary, level)`: a REAL zstd frame produced
   * by zstd-jni (the reference implementation Spark itself ships for
   * parquet codecs) — the CONSTRUCT half of the `llm_zstd_real`
   * roundtrip, deliberately the INDEPENDENT codec so the engine's
@@ -90,72 +35,19 @@ object ZstdFseDecompress {
   * decoder through raw/RLE/Huffman literals, predefined and
   * explicit FSE tables, treeless and repeat modes. Deterministic
   * for a given (input, level, library version). */
-case class ZstdJniCompress(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(b: Any, l: Any): Any =
-    ZstdJniCompress.compress(b.asInstanceOf[Array[Byte]],
-      l.asInstanceOf[Int])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, l) =>
-      s"${ev.value} = graft.functions.ZstdJniCompress.compress($b, $l);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZstdJniCompress =
-    copy(left = l, right = r)
-  override def prettyName: String = "zstd_jni_compress"
-}
-
 object ZstdJniCompress {
-  def apply(b: Column, level: Column): Column =
-    ColumnBridge.column(ZstdJniCompress(
-      ColumnBridge.expression(b), ColumnBridge.expression(level)))
-
   def compress(b: Array[Byte], level: Int): Array[Byte] =
     com.github.luben.zstd.Zstd.compress(b,
       math.max(1, math.min(19, level)))
 }
 
-/** `zstd_jni_dict_compress(binary, dict, level)` → a zstd frame
+/** `zstd_jni_dict_compress(binary, dict, level)`: a zstd frame
   * compressed AGAINST A DICTIONARY by zstd-jni — the construct
   * half of the `llm_zstd_dict` roundtrip (the reference
   * implementation again, so the engine's §5 dictionary decode is
   * pinned independently). Deterministic for a given
   * (input, dict, level, library version). */
-case class ZstdJniDictCompress(first: Expression, second: Expression,
-    third: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(b: Any, d: Any, l: Any): Any =
-    ZstdJniDictCompress.compress(b.asInstanceOf[Array[Byte]],
-      d.asInstanceOf[Array[Byte]], l.asInstanceOf[Int])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, d, l) =>
-      s"${ev.value} = graft.functions.ZstdJniDictCompress" +
-        s".compress($b, $d, $l);")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression): ZstdJniDictCompress =
-    copy(first = a, second = b, third = c)
-  override def prettyName: String = "zstd_jni_dict_compress"
-}
-
 object ZstdJniDictCompress {
-  def apply(b: Column, dict: Column, level: Column): Column =
-    ColumnBridge.column(ZstdJniDictCompress(ColumnBridge.expression(b),
-      ColumnBridge.expression(dict), ColumnBridge.expression(level)))
-
   def compress(b: Array[Byte], dict: Array[Byte],
       level: Int): Array[Byte] = {
     val bound = com.github.luben.zstd.Zstd
@@ -169,76 +61,23 @@ object ZstdJniDictCompress {
   }
 }
 
-/** `zstd_fse_dict_decompress(binary, dict)` → the regenerated
+/** `zstd_fse_dict_decompress(binary, dict)`: the regenerated
   * bytes, decoded by the engine's own RFC 8878 walk WITH the §5
   * dictionary: entropy tables preloaded, repeat offsets
   * initialized, matches reaching into the dict content,
   * Dictionary_ID verified. Null fail-closed. */
-case class ZstdFseDictDecompress(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(b: Any, d: Any): Any =
-    ZstdFseDictDecompress.decompress(b.asInstanceOf[Array[Byte]],
-      d.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, d) => s"""
-        ${ev.value} =
-          graft.functions.ZstdFseDictDecompress.decompress($b, $d);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZstdFseDictDecompress =
-    copy(left = l, right = r)
-  override def prettyName: String = "zstd_fse_dict_decompress"
-}
-
 object ZstdFseDictDecompress {
-  def apply(b: Column, dict: Column): Column =
-    ColumnBridge.column(ZstdFseDictDecompress(
-      ColumnBridge.expression(b), ColumnBridge.expression(dict)))
-
   def decompress(b: Array[Byte], dict: Array[Byte]): Array[Byte] =
     graft.llm.ZstdFse.decompressWithDict(b, dict).orNull
 }
 
-/** `zstd_multi_frame(binary, seed)` → a MULTI-FRAME zstd stream:
+/** `zstd_multi_frame(binary, seed)`: a MULTI-FRAME zstd stream:
   * the input split into three chunks, each its own independent
   * frame (alternating predefined / explicit FSE tables by seed),
   * with a skippable frame spliced between — the layout of real
   * `.zst` dumps built for range-readable parallel ingest. The
   * construct half of `llm_zstd_split`. */
-case class ZstdMultiFrame(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(b: Any, s: Any): Any =
-    ZstdMultiFrame.build(b.asInstanceOf[Array[Byte]],
-      s.asInstanceOf[Int])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, s) =>
-      s"${ev.value} = graft.functions.ZstdMultiFrame.build($b, $s);")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZstdMultiFrame =
-    copy(left = l, right = r)
-  override def prettyName: String = "zstd_multi_frame"
-}
-
 object ZstdMultiFrame {
-  def apply(b: Column, seed: Column): Column =
-    ColumnBridge.column(ZstdMultiFrame(
-      ColumnBridge.expression(b), ColumnBridge.expression(seed)))
-
   def build(raw: Array[Byte], seed: Int): Array[Byte] = {
     val n = raw.length
     val cuts = Seq(0, n / 3, 2 * (n / 3), n)
@@ -261,37 +100,13 @@ object ZstdMultiFrame {
   }
 }
 
-/** `zstd_split_decode(binary)` → the regenerated bytes of a
+/** `zstd_split_decode(binary)`: the regenerated bytes of a
   * multi-frame stream via header-only frame-boundary discovery +
   * INDEPENDENT per-frame decode + in-order reassembly
   * ([[graft.llm.ZstdFse.splitDecode]]) — the parallel-ingest shape
   * proven as a roundtrip: the split points must land exactly on
   * decodable units or the digest diverges. Null fail-closed. */
-case class ZstdSplitDecode(child: Expression) extends UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    ZstdSplitDecode.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.ZstdSplitDecode.decode($c);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(c: Expression): ZstdSplitDecode =
-    copy(child = c)
-  override def prettyName: String = "zstd_split_decode"
-}
-
 object ZstdSplitDecode {
-  def apply(c: Column): Column =
-    ColumnBridge.column(ZstdSplitDecode(ColumnBridge.expression(c)))
-
   def decode(b: Array[Byte]): Array[Byte] =
     graft.llm.ZstdFse.splitDecode(b).orNull
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
+
 /** Cross-snapshot incremental ANN: the persisted-index side of IVF
   * vector search — the same maintenance ladder [[DedupIndex]] gives
   * MinHash dedup (build once → persist → probe arriving shards
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    index build can train on the index corpus only.
   *  - [[assign]]: fully map-side nearest-centroid assignment — the
   *    centroid table collapses to one broadcast row and the argmax
-  *    is the codegen'd [[graft.functions.NearestCentroid]] kernel;
+  *    is the codegen'd `nearest_centroid` kernel;
   *    zero corpus exchange.
   *  - [[write]] / [[read]] / [[Stored]]: persist centroids +
   *    assignments as parquet, assignments PARTITIONED BY `cid` — on
@@ -55,7 +57,7 @@ object AnnIndex {
     * (vec_id, qv) against `cent` (cid, cv): the centroid table is
     * collapsed to a single sorted array-of-structs row and
     * broadcast; the argmax is row-local codegen
-    * ([[graft.functions.NearestCentroid]]: max inner product, ties
+    * (`nearest_centroid`: max inner product, ties
     * to smallest cid). The corpus streams through untouched — the
     * shape that survives 100 TB. */
   def assign(vectors: DataFrame, cent: DataFrame): DataFrame = {
@@ -64,7 +66,7 @@ object AnnIndex {
         .as("cents"))
     vectors.crossJoin(broadcast(centArr))
       .select(col("vec_id"), col("qv"),
-        graft.functions.NearestCentroid(col("qv"), col("cents")).as("cid"))
+        NativeFunctions.nearestCentroid(col("qv"), col("cents")).as("cid"))
   }
 
   /** Capped-Lloyd k-means over a quantized vector table
@@ -376,7 +378,7 @@ object AnnIndex {
       dim: Int): DataFrame =
     residuals.crossJoin(broadcast(arr))
       .select(col("vec_id") +: col("cid") +: (1 to m).map(j =>
-        graft.functions.NearestCentroid(
+        NativeFunctions.nearestCentroid(
           expr(s"slice(rv, ${(j - 1) * dim + 1}, $dim)"),
           col(s"cents$j")).as(s"c$j")): _*)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.NativeFunctions
 
 /** Content-defined chunking (CDC): chunk boundaries are a pure
   * function of a rolling polynomial hash of the LOCAL window, so
@@ -76,7 +77,7 @@ object CdcChunks {
     * the property that makes the stored-digest probe exact). */
   def chunksOfDocs(docsDf: DataFrame): DataFrame = {
     val starts = concat(array(lit(1L)),
-      graft.functions.CdcBoundaries(col("text")))
+      NativeFunctions.cdcBoundaries(col("text")))
     // each start's successor (the next start, or len+1 for the last)
     // by per-row array arithmetic — no window, no join, no shuffle
     val nexts = concat(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.NativeFunctions
 
 /** LLM-training-data pipeline operators over the driver's `documents`
   * and `embeddings` tables (TESTDATA.md) — deduplication, similarity
@@ -1154,7 +1155,7 @@ object LlmQueries {
   /** One shingle-construction expression for every 3-gram consumer
     * (MinHash chain keyed by doc_id, KMV sketch keyed by source) —
     * a normalization change here MUST reach all of them at once.
-    * Backed by the codegen [[graft.functions.WordNgrams]] kernel;
+    * Backed by the codegen `word_ngrams` kernel;
     * the interpreted HOF spelling it replaced is kept below as
     * [[shingle3HofExpr]] and spec-pinned equal (WordNgramsSpec), so
     * the fast path is cross-checked against the independent one. */
@@ -2065,7 +2066,7 @@ object LlmQueries {
     * (16 rows) is collapsed to a single sorted array-of-structs row
     * and broadcast (a 1-row nested-loop "join" = each task holds the
     * centroids); the argmax is then a row-local codegen'd kernel
-    * ([[graft.functions.NearestCentroid]]: max ip, ties to smallest
+    * (`nearest_centroid`: max ip, ties to smallest
     * cid via the cid-ascending sort). Zero corpus-wide exchange — the
     * corpus streams through assignment untouched, which is the shape
     * that survives 100 TB (the previous crossJoin+groupBy reduce
@@ -2498,7 +2499,7 @@ object LlmQueries {
   private def computePqCodes(s: SparkSession, d: String): DataFrame =
     quantized(s, d).crossJoin(broadcast(pqCentArr(s, d)))
       .select(col("vec_id") +: (1 to pqSub).map(j =>
-        graft.functions.NearestCentroid(
+        NativeFunctions.nearestCentroid(
           expr(s"slice(qv, ${(j - 1) * pqDim + 1}, $pqDim)"),
           col(s"cents$j")).as(s"c$j")): _*)
 
@@ -2576,7 +2577,7 @@ object LlmQueries {
   private def ivfpqCodes(s: SparkSession, d: String): DataFrame =
     ivfpqResiduals(s, d).crossJoin(broadcast(ivfpqCentArr(s, d)))
       .select(col("vec_id") +: col("cid") +: (1 to pqSub).map(j =>
-        graft.functions.NearestCentroid(
+        NativeFunctions.nearestCentroid(
           expr(s"slice(rv, ${(j - 1) * pqDim + 1}, $pqDim)"),
           col(s"cents$j")).as(s"c$j")): _*)
 
@@ -2667,7 +2668,7 @@ object LlmQueries {
     * WARC): per-document two-record archives (a warcinfo, then a
     * response whose WARC/1.1 version line, target URI and varying
     * body length exercise the walk) are parsed by the native
-    * [[graft.functions.WarcRecords]] codegen expression — a
+    * `warc_records` codegen expression — a
     * CONTENT-LENGTH-DRIVEN walk, never a magic scan, fail-closed on
     * malformed streams — and exploded to one row per record with
     * the body fingerprinted. The oracle rebuilds the identical
@@ -2698,7 +2699,7 @@ object LlmQueries {
            |  'WARC-Target-URI: ', uri, $crlf,
            |  'Content-Length: ', CAST(octet_length(b2) AS STRING), $crlf,
            |  $crlf, b2, $crlf, $crlf) AS BINARY)""".stripMargin))
-      .withColumn("recs", graft.functions.WarcRecords(col("payload")))
+      .withColumn("recs", NativeFunctions.warcRecords(col("payload")))
       .select(col("doc_id"),
         posexplode(col("recs")).as(Seq("rec_idx", "r")))
       .select(col("doc_id"), col("rec_idx").cast("int").as("rec_idx"),
@@ -2741,9 +2742,9 @@ object LlmQueries {
            |  'Content-Length: ', CAST(octet_length(b2) AS STRING), $crlf,
            |  $crlf, b2, $crlf, $crlf) AS BINARY)""".stripMargin))
       .withColumn("payload", concat(
-        graft.functions.GzipMember(col("r1")),
-        graft.functions.GzipMember(col("r2"))))
-      .withColumn("recs", graft.functions.WarcRecords(col("payload")))
+        NativeFunctions.gzipMember(col("r1")),
+        NativeFunctions.gzipMember(col("r2"))))
+      .withColumn("recs", NativeFunctions.warcRecords(col("payload")))
       .select(col("doc_id"),
         posexplode(col("recs")).as(Seq("rec_idx", "r")))
       .select(col("doc_id"), col("rec_idx").cast("int").as("rec_idx"),
@@ -2827,7 +2828,7 @@ object LlmQueries {
       keep: Seq[org.apache.spark.sql.Column]): DataFrame = {
     val crlf = "chr(13) || chr(10)"
     in
-      .withColumn("recs", graft.functions.WarcRecords(col("payload")))
+      .withColumn("recs", NativeFunctions.warcRecords(col("payload")))
       .select(keep :+ explode(col("recs")).as("r"): _*)
       .filter(col("r.rec_type") === "response")
       .withColumn("msg", col("r.body"))
@@ -4702,7 +4703,7 @@ object LlmQueries {
     * PNG/JPEG byte streams per document (deterministic dims from
     * doc_id, via [[graft.multimodal.ImageHex]] → `unhex`), then parse
     * width/height back out of the actual bytes with the native
-    * [[graft.functions.ImageDims]] codegen expression — PNG IHDR
+    * `image_dims` codegen expression — PNG IHDR
     * big-endian u32s, JPEG marker-segment walk to SOF0 (the walk has
     * to skip a real 16-byte APP0/JFIF segment here). The oracle
     * builds the SAME bytes through DuckDB's `from_hex` blob and
@@ -4724,7 +4725,7 @@ object LlmQueries {
           .stripMargin))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("dims", graft.functions.ImageDims(col("payload")))
+      .withColumn("dims", NativeFunctions.imageDims(col("payload")))
       .groupBy(col("dims.kind").as("kind"))
       .agg(count(lit(1)).as("n_imgs"),
         sum(col("dims.width")).as("sum_w"),
@@ -4751,7 +4752,7 @@ object LlmQueries {
         expr("((doc_id * 11) % 900) + 1").as("h0"))
       .withColumn("payload",
         unhex(expr(ImageHex.gifHex("w0", "h0", "div"))))
-      .withColumn("dims", graft.functions.ImageDims(col("payload")))
+      .withColumn("dims", NativeFunctions.imageDims(col("payload")))
       .select(col("doc_id"), col("dims.kind").as("kind"),
         col("dims.width").cast("bigint").as("width"),
         col("dims.height").cast("bigint").as("height"))
@@ -4777,7 +4778,7 @@ object LlmQueries {
         when(col("doc_id") % 2 === 0,
           expr(ImageHex.tiffHexLE("w0", "h0", "div")))
           .otherwise(expr(ImageHex.tiffHexBE("w0", "h0", "div")))))
-      .withColumn("dims", graft.functions.ImageDims(col("payload")))
+      .withColumn("dims", NativeFunctions.imageDims(col("payload")))
       .select(col("doc_id"), col("dims.kind").as("kind"),
         col("dims.width").cast("bigint").as("width"),
         col("dims.height").cast("bigint").as("height"))
@@ -4802,7 +4803,7 @@ object LlmQueries {
            |  THEN ${ImageHex.webpVp8Hex("w0", "h0", "div")}
            |  ELSE ${ImageHex.webpVp8xHex("w0", "h0", "div")} END"""
           .stripMargin)))
-      .withColumn("dims", graft.functions.ImageDims(col("payload")))
+      .withColumn("dims", NativeFunctions.imageDims(col("payload")))
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, lit("vp8"))
           .otherwise(lit("vp8x")).as("form"),
@@ -4819,7 +4820,7 @@ object LlmQueries {
     * immediately. Keys are case-insensitive per spec (the fixture
     * writes canonical uppercase); two of three docs carry ALBUM —
     * absence is a null field, not an error. Decoded by the native
-    * [[graft.functions.FlacTags]] expression; component-replay
+    * `flac_tags` expression; component-replay
     * oracle proves the strings survive the walk byte-exactly.
     * Map-side construct → parse → project. */
   def flacTags(s: SparkSession, d: String): DataFrame = {
@@ -4839,7 +4840,7 @@ object LlmQueries {
       .withColumn("payload", unhex(expr(AudioHex.flacTagsHex(
         "rate0", "ch0", "bits0", "total0", "t1", "t2", "t3",
         "hasalb", "div", hexStr))))
-      .withColumn("m", graft.functions.FlacTags(col("payload")))
+      .withColumn("m", NativeFunctions.flacTags(col("payload")))
       .select(col("doc_id"), col("m.title").as("title"),
         col("m.artist").as("artist"), col("m.album").as("album"))
   }
@@ -4852,7 +4853,7 @@ object LlmQueries {
     * streams whose second page carries the `0x03 "vorbis"` packet —
     * reassembled from LACING values, the little-endian
     * length-prefixed comment structure, the mandatory framing
-    * bit — decoded by [[graft.functions.FlacTags]]' "OggS" dispatch
+    * bit — decoded by `flac_tags`' "OggS" dispatch
     * ([[graft.multimodal.AudioHeaders.parseOggTags]]). The oracle
     * re-reads every comment POSITIONALLY through the packet's own
     * length chain, the [[flacTags]] discipline. Map-side construct
@@ -4874,7 +4875,7 @@ object LlmQueries {
       .withColumn("payload", unhex(expr(AudioHex.oggTagsHex(
         "rate0", "ch0", "total0", "pad0", "t1", "t2", "t3",
         "hasalb", "div", hexStr))))
-      .withColumn("m", graft.functions.FlacTags(col("payload")))
+      .withColumn("m", NativeFunctions.flacTags(col("payload")))
       .select(col("doc_id"), col("m.title").as("title"),
         col("m.artist").as("artist"), col("m.album").as("album"))
   }
@@ -4903,7 +4904,7 @@ object LlmQueries {
         expr("CAST(doc_id % 40 AS INT) + 1").as("pad0"))
       .withColumn("payload", unhex(expr(AudioHex.oggHex(
         "rate0", "ch0", "total0", "pad0", "div"))))
-      .withColumn("m", graft.functions.AudioMeta(col("payload")))
+      .withColumn("m", NativeFunctions.audioMeta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -4915,7 +4916,7 @@ object LlmQueries {
     * pipeline must honor BEFORE any resize plan: a corpus mixing
     * EXIF-less JPEGs (orientation defaults to 1), little-endian
     * ("II") and big-endian ("MM") embedded TIFF blocks is decoded
-    * by the native [[graft.functions.ExifMeta]] codegen expression,
+    * by the native `exif_meta` codegen expression,
     * and the DISPLAY dimensions are derived per the spec —
     * orientations 5–8 transpose, so `oriented_w/h` swap. The oracle
     * re-reads orientation positionally with the matching per-row
@@ -4938,7 +4939,7 @@ object LlmQueries {
            |  THEN ${ImageHex.jpegExifHex("w0", "h0", "or0", le = true, "div")}
            |  ELSE ${ImageHex.jpegExifHex("w0", "h0", "or0", le = false, "div")}
            |END""".stripMargin)))
-      .withColumn("m", graft.functions.ExifMeta(col("payload")))
+      .withColumn("m", NativeFunctions.exifMeta(col("payload")))
       .select(col("doc_id"),
         col("m.width").cast("bigint").as("width"),
         col("m.height").cast("bigint").as("height"),
@@ -4953,7 +4954,7 @@ object LlmQueries {
     * sibling: build genuine PCM WAV headers per document
     * (deterministic rate/channels/size from doc_id, via
     * [[graft.multimodal.AudioHex]] → `unhex`), parse them back with
-    * the native [[graft.functions.AudioMeta]] codegen expression —
+    * the native `audio_meta` codegen expression —
     * RIFF chunk walk that must skip a real 20-byte LIST chunk before
     * "fmt " — and roll up per (sample_rate, channels) with exact
     * integer durations (n_samples · 1000 div rate). The oracle
@@ -4975,7 +4976,7 @@ object LlmQueries {
         expr(AudioHex.wavHex("rate0", "ch0", "db0", "div")))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.AudioMeta(col("payload")))
+      .withColumn("m", NativeFunctions.audioMeta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5001,7 +5002,7 @@ object LlmQueries {
         expr("(doc_id * 37) % 96000 + 4").as("nv0"))
       .withColumn("payload", unhex(
         expr(AudioHex.wavHexFloat("rate0", "ch0", "nv0", "div"))))
-      .withColumn("m", graft.functions.AudioMeta(col("payload")))
+      .withColumn("m", NativeFunctions.audioMeta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"),
         col("m.bits").cast("bigint").as("bits"))
@@ -5037,7 +5038,7 @@ object LlmQueries {
         expr("CAST(doc_id % 16 AS INT)").as("pad0"))
       .withColumn("payload", unhex(expr(AudioHex.flacHex(
         "rate0", "ch0", "bits0", "total0", "haspad0", "pad0", "div"))))
-      .withColumn("m", graft.functions.AudioMeta(col("payload")))
+      .withColumn("m", NativeFunctions.audioMeta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"),
         col("m.bits").cast("bigint").as("bits"))
@@ -5058,7 +5059,7 @@ object LlmQueries {
     * (STREAMINFO + one audio FRAME whose channel 0 is a VERBATIM
     * subframe of real 16-bit samples and channel 1, when present, a
     * CONSTANT subframe), walk the frame with the native
-    * [[graft.functions.FlacPcmLevels]] bit reader (sync code,
+    * `flac_pcm_levels` bit reader (sync code,
     * blocksize/rate/sample-size codes, UTF-8 frame number, subframe
     * headers, sign extension, CONSTANT block expansion), and meter
     * the decoded samples with the family's exact-integer meter
@@ -5083,7 +5084,7 @@ object LlmQueries {
           s"${AudioHex.flacFrameHex("ch0", "ns0", FlacSampleExpr,
             FlacConstExpr, "div", spark = true)})"))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.FlacPcmLevels(col("payload")))
+      .withColumn("m", NativeFunctions.flacPcmLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5666,9 +5667,9 @@ object LlmQueries {
     * complete FLAC streams whose frames carry FIXED-predictor
     * subframes (orders 0–4, cycling per doc) with genuine
     * Rice-coded residuals, built by a real encoder
-    * ([[graft.functions.FlacFixedFixture]] — bit writer, predictor
+    * (`flac_fixed_fixture` — bit writer, predictor
     * residuals, zigzag + unary/binary Rice emission) and decoded
-    * back by [[graft.functions.FlacPcmLevels]]' frame walk
+    * back by `flac_pcm_levels`' frame walk
     * (quotient/remainder reads, zigzag, §9.2.2 recurrence
     * reconstruction). The oracle replays the expected SAMPLES in
     * closed form from doc_id — the [[warcGz]] round-trip
@@ -5680,8 +5681,8 @@ object LlmQueries {
   def flacFixed(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.FlacFixedFixture(col("doc_id")))
-      .withColumn("m", graft.functions.FlacPcmLevels(col("payload")))
+        NativeFunctions.flacFixedFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.flacPcmLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5696,8 +5697,8 @@ object LlmQueries {
     * carry §9.2.4 LPC subframes — quantized signed coefficients at
     * per-doc precision (5–7 bits), per-doc shift (2–5), orders 1–4
     * cycling, BOTH Rice methods — built by inverting the quantized
-    * predictor ([[graft.functions.FlacLpcFixture]]) and decoded
-    * back through [[graft.functions.FlacPcmLevels]]' coefficient
+    * predictor (`flac_lpc_fixture`) and decoded
+    * back through `flac_pcm_levels`' coefficient
     * walk + all-integer recurrence. The oracle replays the expected
     * SAMPLES in closed form from doc_id (the [[flacFixed]]
     * discipline), so any disagreement about coefficient sign
@@ -5709,8 +5710,8 @@ object LlmQueries {
   def flacLpc(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.FlacLpcFixture(col("doc_id")))
-      .withColumn("m", graft.functions.FlacPcmLevels(col("payload")))
+        NativeFunctions.flacLpcFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.flacPcmLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5727,7 +5728,7 @@ object LlmQueries {
     * pairs — the side channel one bit WIDER, mid recovering its
     * dropped LSB from side's parity — FIXED-coded and cycled
     * through all three assignments by doc_id, decoded back through
-    * [[graft.functions.FlacPcmLevels]]' channel reconstruction.
+    * `flac_pcm_levels`' channel reconstruction.
     * The oracle replays the LEFT/RIGHT meter in closed form from
     * doc_id (the [[flacFixed]] discipline): the decorrelation
     * shapes only the bits, never the expected samples, so a decoder
@@ -5738,8 +5739,8 @@ object LlmQueries {
   def flacStereo(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.FlacStereoFixture(col("doc_id")))
-      .withColumn("m", graft.functions.FlacPcmLevels(col("payload")))
+        NativeFunctions.flacStereoFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.flacPcmLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5753,7 +5754,7 @@ object LlmQueries {
     * masters shipped as 16-bit): every fixture sample is a base
     * value left-shifted by k = 1–3, each subframe coding the base
     * at width 16 − k behind a wasted-bits header (flag + unary k),
-    * decoded back through [[graft.functions.FlacPcmLevels]] — the
+    * decoded back through `flac_pcm_levels` — the
     * subframe decodes at the reduced width, the predictor
     * recurrence runs in the SHIFTED-DOWN domain, and the left shift
     * restores actual samples only after reconstruction. The oracle
@@ -5765,8 +5766,8 @@ object LlmQueries {
   def flacWasted(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.FlacWastedFixture(col("doc_id")))
-      .withColumn("m", graft.functions.FlacPcmLevels(col("payload")))
+        NativeFunctions.flacWastedFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.flacPcmLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -5785,8 +5786,8 @@ object LlmQueries {
     * all three header paths (unordered dense / unordered sparse /
     * ordered run-length) and whose symbol packet the engine must
     * decode bit-by-bit through the canonical trees it builds from
-    * the parsed lengths ([[graft.functions.VorbisBooks]] over
-    * [[graft.functions.VorbisFixture]]). The oracle replays the
+    * the parsed lengths (`vorbis_books` over
+    * `vorbis_fixture`). The oracle replays the
     * decoded symbol census in closed form from doc_id — the
     * [[flacFixed]] discipline: the length multisets shape only the
     * BITS, never the symbols, so any bitpacker/assignment/walk
@@ -5798,8 +5799,8 @@ object LlmQueries {
   def vorbisBooks(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisFixture(col("doc_id")))
-      .withColumn("m", graft.functions.VorbisBooks(col("payload")))
+        NativeFunctions.vorbisFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.vorbisBooks(col("payload")))
       .groupBy(col("m.n_books").cast("bigint").as("n_books"))
       .agg(count(lit(1)).as("n_clips"),
         sum(col("m.n_entries")).as("sum_entries"),
@@ -5816,8 +5817,8 @@ object LlmQueries {
     * multiplicands, 2 = explicit entries×dims table), the
     * packed-float min/delta read raw and the full integer
     * multiplicand arrays walked bit-exactly
-    * ([[graft.functions.VorbisVq]] over
-    * [[graft.functions.VorbisVqFixture]]). The oracle replays the
+    * (`vorbis_vq` over
+    * `vorbis_vq_fixture`). The oracle replays the
     * lookup census — type counts, lookup1_values (re-derived by
     * exact integer power search), multiplicand count and SUM — in
     * closed form, plus the decoded symbol sum proving the scalar
@@ -5826,8 +5827,8 @@ object LlmQueries {
   def vorbisVq(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisVqFixture(col("doc_id")))
-      .withColumn("m", graft.functions.VorbisVq(col("payload")))
+        NativeFunctions.vorbisVqFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.vorbisVq(col("payload")))
       .groupBy(col("m.n_books").cast("bigint").as("n_books"))
       .agg(count(lit(1)).as("n_clips"),
         sum(col("m.n_lookup1")).as("sum_l1"),
@@ -5845,8 +5846,8 @@ object LlmQueries {
     * amplitude synthesis — low/high neighbor search, render_point's
     * integer line predictor, the room-saturated residual merge — to
     * the final_Y vector, all exact integer arithmetic
-    * ([[graft.functions.VorbisFloor]] over
-    * [[graft.functions.VorbisFloorFixture]]). The oracle UNROLLS
+    * (`vorbis_floor` over
+    * `vorbis_floor_fixture`). The oracle UNROLLS
     * the synthesis for the fixture's static-neighbor post shape
     * (three X bands) while the engine searches neighbors
     * generically — a wrong neighbor, a rounding slip in the
@@ -5857,8 +5858,8 @@ object LlmQueries {
   def vorbisFloor(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisFloorFixture(col("doc_id")))
-      .withColumn("m", graft.functions.VorbisFloor(col("payload")))
+        NativeFunctions.vorbisFloorFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.vorbisFloor(col("payload")))
       .select(col("doc_id"),
         col("m.n_values").cast("bigint").as("n_values"),
         col("m.y_sum").as("y_sum"),
@@ -5870,7 +5871,7 @@ object LlmQueries {
     * step2-flagged posts scaled by the multiplier and rasterized by
     * the render_line integer Bresenham over n = blocksize0/2 bins,
     * the past-last-post tail held flat
-    * ([[graft.functions.VorbisFloorCurve]] over the same fixture as
+    * (`vorbis_floor_curve` over the same fixture as
     * [[vorbisFloor]]). One more honest rung off the declared
     * synthesis fake: only the dB → linear float lookup and MDCT
     * remain. The oracle replays the curve POSITIONALLY — per bin,
@@ -5881,8 +5882,8 @@ object LlmQueries {
   def vorbisFloorCurve(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisFloorFixture(col("doc_id")))
-      .withColumn("m", graft.functions.VorbisFloorCurve(col("payload")))
+        NativeFunctions.vorbisFloorFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.vorbisFloorCurve(col("payload")))
       .select(col("doc_id"),
         col("m.n_bins").cast("bigint").as("n_bins"),
         col("m.curve_sum").as("curve_sum"),
@@ -5895,8 +5896,8 @@ object LlmQueries {
     * bitmaps with their book slots) and §8.6.2's CLASSIFICATION
     * cascade — classwords decoded through the classbook and
     * unpacked last-slot-first by integer divmod into per-partition
-    * classes, ragged tails dropped ([[graft.functions.VorbisResidue]]
-    * over [[graft.functions.VorbisResidueFixture]]). The fixture's
+    * classes, ragged tails dropped (`vorbis_residue`
+    * over `vorbis_residue_fixture`). The fixture's
     * cascades are EMPTY (a conformant silent residue), which is
     * exactly the declared boundary: classification is integer and
     * proven here; cascade value passes are VQ float lookups and
@@ -5907,8 +5908,8 @@ object LlmQueries {
   def vorbisResidue(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisResidueFixture(col("doc_id")))
-      .withColumn("m", graft.functions.VorbisResidue(col("payload")))
+        NativeFunctions.vorbisResidueFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.vorbisResidue(col("payload")))
       .select(col("doc_id"),
         col("m.n_partitions").cast("bigint").as("n_partitions"),
         col("m.n_classwords").as("n_classwords"),
@@ -5933,9 +5934,9 @@ object LlmQueries {
   def vorbisResidueApply(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisResidueApplyFixture(col("doc_id")))
+        NativeFunctions.vorbisResidueApplyFixture(col("doc_id")))
       .withColumn("m",
-        graft.functions.VorbisResidueApply(col("payload")))
+        NativeFunctions.vorbisResidueApply(col("payload")))
       .select(col("doc_id"),
         col("m.n_slots").as("n_slots"),
         col("m.n_values").as("n_values"),
@@ -5959,9 +5960,9 @@ object LlmQueries {
   def vorbisResidueScale(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.VorbisResidueScaleFixture(col("doc_id")))
+        NativeFunctions.vorbisResidueScaleFixture(col("doc_id")))
       .withColumn("m",
-        graft.functions.VorbisResidueScale(col("payload")))
+        NativeFunctions.vorbisResidueScale(col("payload")))
       .select(col("doc_id"),
         col("m.n_slots").as("n_slots"),
         col("m.n_values").as("n_values"),
@@ -5975,8 +5976,8 @@ object LlmQueries {
     * §8.5.3 stsz sample-size box in BOTH layouts (uniform
     * sample_size with no per-sample table — the form a naive parser
     * reads as empty — and the per-sample u32 table), and §8.7.5
-    * stco's chunk count ([[graft.functions.Mp4Samples]] over
-    * [[graft.functions.Mp4SampleFixture]]). The oracle replays the
+    * stco's chunk count (`mp4_samples` over
+    * `mp4_sample_fixture`). The oracle replays the
     * census closed-form; a walk that misses a nesting level,
     * mis-handles the uniform layout, or lets a table overrun its
     * box diverges. Map-side construct → decode → project; no
@@ -5984,8 +5985,8 @@ object LlmQueries {
   def mp4Samples(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp4SampleFixture(col("doc_id")))
-      .withColumn("m", graft.functions.Mp4Samples(col("payload")))
+        NativeFunctions.mp4SampleFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp4Samples(col("payload")))
       .select(col("doc_id"),
         col("m.n_samples").as("n_samples"),
         col("m.sum_sizes").as("sum_sizes"),
@@ -6019,7 +6020,7 @@ object LlmQueries {
       |   '.example.com/s?b=2&a=1#x') END""".stripMargin)
     docs(s, d).select(col("doc_id"), raw.as("url"))
       .select(col("doc_id"),
-        graft.functions.UrlCanon(col("url")).as("canon_url"))
+        NativeFunctions.urlCanon(col("url")).as("canon_url"))
   }
 
   /** Zstandard frame layer (`mm_zstd_frames`) — the modern
@@ -6030,8 +6031,8 @@ object LlmQueries {
     * 3-byte LE block headers, and REAL regeneration of the two
     * entropy-free block classes (Raw, RLE) with the declared
     * content size enforced against what the blocks actually
-    * regenerate ([[graft.functions.ZstdFrames]] over
-    * [[graft.functions.ZstdFixture]]); since round 15 the same
+    * regenerate (`zstd_frames` over
+    * `zstd_fixture`); since round 15 the same
     * walk also decodes Compressed blocks end to end
     * ([[graft.llm.ZstdFse]] — `llm_zstd_fse`/`_real`/`_dict`), so
     * this query's raw/RLE fixtures exercise the container grammar
@@ -6041,8 +6042,8 @@ object LlmQueries {
     * Map-side; no shuffle. */
   def zstdFrames(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
-      .withColumn("payload", graft.functions.ZstdFixture(col("doc_id")))
-      .withColumn("m", graft.functions.ZstdFrames(col("payload")))
+      .withColumn("payload", NativeFunctions.zstdFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.zstdFrames(col("payload")))
       .select(col("doc_id"),
         col("m.n_frames").as("n_frames"),
         col("m.n_skippable").as("n_skippable"),
@@ -6087,9 +6088,9 @@ object LlmQueries {
   def zstdFseRoundtrip(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("raw"))
-      .withColumn("z", graft.functions.ZstdFseCompress(col("raw"),
+      .withColumn("z", NativeFunctions.zstdFseCompress(col("raw"),
         expr("CAST(doc_id % 2 AS INT)")))
-      .withColumn("u", graft.functions.ZstdFseDecompress(col("z")))
+      .withColumn("u", NativeFunctions.zstdFseDecompress(col("z")))
       .select(col("doc_id"),
         length(col("u")).cast("bigint").as("n_bytes"),
         md5(col("u")).as("digest"))
@@ -6110,9 +6111,9 @@ object LlmQueries {
   def zstdRealRoundtrip(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("raw"))
-      .withColumn("z", graft.functions.ZstdJniCompress(col("raw"),
+      .withColumn("z", NativeFunctions.zstdJniCompress(col("raw"),
         expr("CAST(1 + doc_id % 19 AS INT)")))
-      .withColumn("u", graft.functions.ZstdFseDecompress(col("z")))
+      .withColumn("u", NativeFunctions.zstdFseDecompress(col("z")))
       .select(col("doc_id"),
         length(col("u")).cast("bigint").as("n_bytes"),
         md5(col("u")).as("digest"))
@@ -6163,10 +6164,10 @@ object LlmQueries {
     docs(s, d)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("raw"))
       .crossJoin(dict)
-      .withColumn("z", graft.functions.ZstdJniDictCompress(col("raw"),
+      .withColumn("z", NativeFunctions.zstdJniDictCompress(col("raw"),
         col("dict"), expr("CAST(1 + doc_id % 19 AS INT)")))
       .withColumn("u",
-        graft.functions.ZstdFseDictDecompress(col("z"), col("dict")))
+        NativeFunctions.zstdFseDictDecompress(col("z"), col("dict")))
       .select(col("doc_id"),
         length(col("u")).cast("bigint").as("n_bytes"),
         md5(col("u")).as("digest"))
@@ -6188,9 +6189,9 @@ object LlmQueries {
   def zstdSplitRoundtrip(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("raw"))
-      .withColumn("z", graft.functions.ZstdMultiFrame(col("raw"),
+      .withColumn("z", NativeFunctions.zstdMultiFrame(col("raw"),
         expr("CAST(doc_id % 14 AS INT)")))
-      .withColumn("u", graft.functions.ZstdSplitDecode(col("z")))
+      .withColumn("u", NativeFunctions.zstdSplitDecode(col("z")))
       .select(col("doc_id"),
         length(col("u")).cast("bigint").as("n_bytes"),
         md5(col("u")).as("digest"))
@@ -6200,9 +6201,9 @@ object LlmQueries {
   def inflateOf(src: DataFrame): DataFrame =
     src
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("raw"))
-      .withColumn("z", graft.functions.DeflateZlib(col("raw"),
+      .withColumn("z", NativeFunctions.deflateZlib(col("raw"),
         expr("CAST(doc_id % 10 AS INT)")))
-      .withColumn("u", graft.functions.InflateZlib(col("z")))
+      .withColumn("u", NativeFunctions.inflateZlib(col("z")))
       .select(col("doc_id"),
         length(col("u")).cast("bigint").as("n_bytes"),
         md5(col("u")).as("digest"))
@@ -6283,7 +6284,7 @@ object LlmQueries {
         concat(col("text"), lit(" cafe\u0301 no\u0308el")))
       .otherwise(concat(col("text"), lit(" caf\u00e9 d\u00e9j\u00e0")))
     src.select(col("doc_id"), raw.as("raw"))
-      .withColumn("nfc", graft.functions.NfcNormalize(col("raw")))
+      .withColumn("nfc", NativeFunctions.nfcNormalize(col("raw")))
       .select(col("doc_id"),
         length(col("raw")).cast("bigint").as("n_chars_raw"),
         length(col("nfc")).cast("bigint").as("n_chars_nfc"),
@@ -6532,7 +6533,7 @@ object LlmQueries {
     * complete PCM WAV FILES (header + an actual little-endian 16-bit
     * sample payload, deterministic full-range signal from doc_id —
     * [[graft.multimodal.AudioHex.SampleExpr]]), then decode the raw
-    * samples with the native [[graft.functions.AudioLevels]] codegen
+    * samples with the native `audio_levels` codegen
     * expression — per-file energy (exact integer sum of squares),
     * peak |s|, and digital-full-scale clip count, the audio-QA pass
     * a training pipeline runs before transcription. The oracle
@@ -6547,7 +6548,7 @@ object LlmQueries {
   /** 8-BIT and 24-BIT PCM metering (`mm_audio_widths`) — the other
     * two integer widths real WAV corpora actually carry (8-bit
     * voice/legacy, 24-bit studio masters), through the same
-    * [[graft.functions.AudioLevels]] expression as the 16-bit lane:
+    * `audio_levels` expression as the 16-bit lane:
     * 8-bit is UNSIGNED with a 128 bias (the WAV spec's one
     * asymmetry — a decoder that sign-extends it inverts half the
     * signal), 24-bit is signed little-endian with rails at ±2²³.
@@ -6577,7 +6578,7 @@ object LlmQueries {
            |    ${AudioHex.pcmPayloadNHexSpark("nv0", u24e, 3)})
            |END""".stripMargin))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.AudioLevels(col("payload")))
+      .withColumn("m", NativeFunctions.audioLevels(col("payload")))
       .select(col("doc_id"),
         expr("CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 24 END")
           .cast("bigint").as("width"),
@@ -6605,7 +6606,7 @@ object LlmQueries {
           s"${AudioHex.pcmPayloadHexSpark("nv0", AudioHex.SampleExpr)})"))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.AudioLevels(col("payload")))
+      .withColumn("m", NativeFunctions.audioLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -6621,7 +6622,7 @@ object LlmQueries {
     * one-byte-per-value code payload spanning the full code range,
     * [[graft.multimodal.AudioHex.UlawCodeExpr]]), expand each code
     * through the ITU segment/mantissa arithmetic with the native
-    * [[graft.functions.AudioUlawLevels]] codegen expression, and
+    * `audio_ulaw_levels` codegen expression, and
     * meter the EXPANDED samples — exact integer energy, peak |s|,
     * and digital-rail count (|s| = 32124, the codec's full scale).
     * The oracle rebuilds the same bytes through a DuckDB BLOB and
@@ -6648,7 +6649,7 @@ object LlmQueries {
           s"${AudioHex.ulawPayloadHexSpark("nv0", AudioHex.UlawCodeExpr)})"))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.AudioUlawLevels(col("payload")))
+      .withColumn("m", NativeFunctions.audioUlawLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -6659,7 +6660,7 @@ object LlmQueries {
   }
 
   /** [[audioUlawLevels]]' A-law twin (`mm_audio_alaw`) — WAVE format
-    * tag 6 through [[graft.functions.AudioAlawLevels]]: the European
+    * tag 6 through `audio_alaw_levels`: the European
     * G.711 half, whose expansion is a genuinely different arithmetic
     * (XOR-0x55 alternate-bit inversion, bias-free linear segment 0,
     * no zero code — quietest samples are ±8 — and the inverted sign
@@ -6681,7 +6682,7 @@ object LlmQueries {
           s"${AudioHex.ulawPayloadHexSpark("nv0", AudioHex.AlawCodeExpr)})"))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.AudioAlawLevels(col("payload")))
+      .withColumn("m", NativeFunctions.audioAlawLevels(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -6716,7 +6717,7 @@ object LlmQueries {
         s"concat(${AudioHex.wavHex("rate0", "1", "nv0 * 2", "div")}, " +
           s"${AudioHex.pcmPayloadHexSpark("nv0", AudioHex.SampleExpr)})"))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.AudioFp(col("payload")))
+      .withColumn("m", NativeFunctions.audioFp(col("payload")))
       .select(col("doc_id"), col("m.sample_rate").as("sample_rate"),
         col("m.n_frames").as("n_frames"), col("m.fp").as("fp"))
   }
@@ -6815,7 +6816,7 @@ object LlmQueries {
     * to entropy-coded payloads only: build complete 24-bit BI_RGB
     * BMP FILES (real 54-byte header + raw BGR rows with 4-byte row
     * padding, deterministic per-pixel bytes from (doc_id, x, y, c)),
-    * decode with the native [[graft.functions.ImageLevels]] codegen
+    * decode with the native `image_levels` codegen
     * expression — per-file exact integer channel sums, the
     * brightness/color-cast QA pass of a vision-data pipeline — and
     * roll up per width. The oracle rebuilds the SAME bytes through a
@@ -6834,7 +6835,7 @@ object LlmQueries {
         ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.ImageLevels(col("payload")))
+      .withColumn("m", NativeFunctions.imageLevels(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -6851,7 +6852,7 @@ object LlmQueries {
     * files whose DEFLATE stream is a stored-mode block
     * ([[graft.multimodal.ImageHex.pngFileHex]] — the one DEFLATE
     * shape SQL can construct), decode with the native
-    * [[graft.functions.PngLevels]] codegen expression (full
+    * `png_levels` codegen expression (full
     * container walk → Inflater → §9 un-filtering → exact channel
     * sums), roll up per width. The oracle rebuilds the SAME bytes in
     * DuckDB and replays the pixel walk BYTE-POSITIONALLY over the
@@ -6873,7 +6874,7 @@ object LlmQueries {
         "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.PngLevels(col("payload")))
+      .withColumn("m", NativeFunctions.pngLevels(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -6905,7 +6906,7 @@ object LlmQueries {
         "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.PngLevels(col("payload")))
+      .withColumn("m", NativeFunctions.pngLevels(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -6932,7 +6933,7 @@ object LlmQueries {
       .withColumn("hs", expr(ImageHex.pngFile16Hex("w0", "h0", sample,
         "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.PngLevels(col("payload")))
+      .withColumn("m", NativeFunctions.pngLevels(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -6959,7 +6960,7 @@ object LlmQueries {
         j => s"(doc_id * 7 + ($j) * 37) % 256",
         "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.PngLevels(col("payload")))
+      .withColumn("m", NativeFunctions.pngLevels(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -6978,7 +6979,7 @@ object LlmQueries {
       s"ELSE 127 - ((doc_id * 11 + ($j) * 5) % 60) END)"
 
   /** REAL baseline-JPEG luma decode
-    * ([[graft.functions.JpegLuma]] / [[graft.multimodal.JpegDecode]])
+    * (`jpeg_luma` / [[graft.multimodal.JpegDecode]])
     * — the lossy-codec lane, previously the one declared stub. The
     * fixture is a BYTE-ALIGNED entropy stream
     * ([[graft.multimodal.ImageHex.jpegGrayFileHex]]): single
@@ -7002,7 +7003,7 @@ object LlmQueries {
       .withColumn("hs", expr(ImageHex.jpegGrayFileHex("w0", "h0",
         jpegBits, "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.JpegLuma(col("payload")))
+      .withColumn("m", NativeFunctions.jpegLuma(col("payload")))
       .groupBy(col("m.width").cast("bigint").as("width"))
       .agg(count(lit(1)).as("n_images"),
         sum(col("m.n_px")).as("sum_px"),
@@ -7028,7 +7029,7 @@ object LlmQueries {
     * attachment-bearing subset (doc_id % 23 = 0 — media rows are a
     * sparse sidecar of a text corpus, and the fixture build is the
     * per-row cost cap), PNG-gray fixture construct → REAL decode →
-    * [[graft.functions.DHash64]], all map-side in one codegen stage
+    * `dhash64`, all map-side in one codegen stage
     * next to the scan. MEMOIZED per snapshot: three queries (and
     * both sides of the near-dup self-join) consume it, and a
     * production pipeline computes fingerprints once and stores them
@@ -7050,7 +7051,7 @@ object LlmQueries {
         dhashPixel("CAST(doc_id % 5 AS INT)"), "div",
         ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.DHash64(col("payload")))
+      .withColumn("m", NativeFunctions.dhash64(col("payload")))
       .select(col("doc_id"), col("m.width").as("width"),
         col("m.height").as("height"), col("m.dh_hi").as("dh_hi"),
         col("m.dh_lo").as("dh_lo"))
@@ -7058,7 +7059,7 @@ object LlmQueries {
 
   /** Shared REAL-feature frame for the image similarity lane: the
     * same attachment fixture as [[dhashFp]] pushed through
-    * [[graft.functions.LumaCells]] (decode → 4×4 cell grid, exact
+    * `luma_cells` (decode → 4×4 cell grid, exact
     * integer sums/counts) into BOTH consumable shapes at once — the
     * long-form cell table and the fixed-width 16-dim mean-luma
     * vector with its precomputed self-inner-product. MEMOIZED per
@@ -7081,7 +7082,7 @@ object LlmQueries {
           dhashPixel("CAST(doc_id % 5 AS INT)"), "div",
           ImageHex.seqJoinSpark)))
         .withColumn("cells",
-          graft.functions.LumaCells(unhex(col("hs"))))
+          NativeFunctions.lumaCells(unhex(col("hs"))))
         .filter(col("cells").isNotNull)
         .withColumn("fv",
           expr("transform(cells, c -> c.lsum div c.lcnt)"))
@@ -7255,7 +7256,7 @@ object LlmQueries {
     * metadata stub: build genuine minimal MP4 files per document
     * (deterministic dims/timescale/duration from doc_id, via
     * [[graft.multimodal.VideoHex]] → `unhex`), parse them back with
-    * the native [[graft.functions.VideoMeta]] codegen expression —
+    * the native `video_meta` codegen expression —
     * an ISO-BMFF box walk that must skip a real `free` box inside
     * `moov` before `mvhd`, then descend `trak`→`tkhd` for the 16.16
     * fixed-point dimensions — and roll up per timescale with exact
@@ -7278,7 +7279,7 @@ object LlmQueries {
         expr(VideoHex.mp4Hex("w0", "h0", "ts0", "dur0", "div")))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.VideoMeta(col("payload")))
+      .withColumn("m", NativeFunctions.videoMeta(col("payload")))
       .groupBy(col("m.timescale").cast("bigint").as("timescale"))
       .agg(count(lit(1)).as("n_videos"),
         sum(col("m.duration")).as("sum_dur"),
@@ -7311,7 +7312,7 @@ object LlmQueries {
         expr("(doc_id * 31) % 100000 + 1").as("nf0"))
       .withColumn("payload", unhex(
         expr(VideoHex.aviHex("w0", "h0", "usf0", "nf0", "div"))))
-      .withColumn("m", graft.functions.VideoMeta(col("payload")))
+      .withColumn("m", NativeFunctions.videoMeta(col("payload")))
       .select(col("doc_id"),
         col("m.width").cast("bigint").as("width"),
         col("m.height").cast("bigint").as("height"),
@@ -7323,7 +7324,7 @@ object LlmQueries {
     * Layer III streams per document (deterministic VBR bitrate
     * sequence, sample rate, channel mode, and an ID3v2 tag to skip
     * on 3 of 4 docs — via [[graft.multimodal.Mp3Hex]] → `unhex`),
-    * walk them back with the native [[graft.functions.Mp3Meta]]
+    * walk them back with the native `mp3_meta`
     * codegen expression (syncsafe ID3 skip + derived-frame-length
     * chain), and roll up per (sample_rate, channels) with exact
     * integer durations (`n_frames · 1152000 div rate`). The oracle
@@ -7346,7 +7347,7 @@ object LlmQueries {
         Mp3Hex.ModeE, "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
     payload
-      .withColumn("m", graft.functions.Mp3Meta(col("payload")))
+      .withColumn("m", NativeFunctions.mp3Meta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -7365,7 +7366,7 @@ object LlmQueries {
     * channel mode) for declared total frames/bytes and the derived
     * duration estimate, without walking every frame. Fixture
     * streams embed the block inside a genuine first frame followed
-    * by plain frames; the native [[graft.functions.Mp3Vbr]]
+    * by plain frames; the native `mp3_vbr`
     * expression re-locates it through the real header arithmetic
     * (ID3 skip, frame geometry, side-info offset). The oracle reads
     * magic, counts, and rate POSITIONALLY from the rebuilt hex and
@@ -7375,7 +7376,7 @@ object LlmQueries {
   /** ID3v2 text-frame extraction (`mm_id3_tags`) — the metadata
     * half of the tag the frame walk only skips: per-document tags
     * carrying TIT2/TPE1 (+ TALB on two of three docs) are decoded by
-    * the native [[graft.functions.Id3Tags]] expression. Even docs
+    * the native `id3_tags` expression. Even docs
     * build v2.4 (SYNCSAFE frame sizes), odd v2.3 (plain u32be) — the
     * version split is the point: a parser applying one size
     * discipline to both halves walks into the middle of a frame and
@@ -7396,7 +7397,7 @@ object LlmQueries {
                 ver24 = true, "div", hexStr)}
            |  ELSE ${Mp3Hex.id3TagsHex("t1", "t2", "t3", "hasalb",
                 ver24 = false, "div", hexStr)} END""".stripMargin)))
-      .withColumn("m", graft.functions.Id3Tags(col("payload")))
+      .withColumn("m", NativeFunctions.id3Tags(col("payload")))
       .select(col("doc_id"), col("m.title").as("title"),
         col("m.artist").as("artist"), col("m.album").as("album"),
         col("m.version").cast("bigint").as("version"))
@@ -7408,7 +7409,7 @@ object LlmQueries {
     * in BOTH LSF versions (MPEG-2 on even docs, 2.5 on odd — their
     * own bitrate table, HALF the frame-size coefficient because a
     * frame holds 576 samples, and version-specific rate tables)
-    * walked by the same [[graft.functions.Mp3Meta]] expression,
+    * walked by the same `mp3_meta` expression,
     * which now reports the version's samples-per-frame so duration
     * math stays exact (`n_frames · spf · 1000 div rate`). The
     * oracle replays the walk POSITIONALLY with the LSF frame-length
@@ -7425,7 +7426,7 @@ object LlmQueries {
         Mp3Hex.Id3PadE, Mp3Hex.NframesE, Mp3Hex.SrIdxE, rateE,
         Mp3Hex.Mode2E, Mp3Hex.V25E, "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.Mp3Meta(col("payload")))
+      .withColumn("m", NativeFunctions.mp3Meta(col("payload")))
       .groupBy(col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.channels").cast("bigint").as("channels"))
       .agg(count(lit(1)).as("n_clips"),
@@ -7454,7 +7455,7 @@ object LlmQueries {
         expr("doc_id % 4 != 1").as("hasalb"))
       .withColumn("payload", unhex(expr(Mp3Hex.id3Tags22Hex(
         "t1", "t2", "t3", "hasalb", "div", hexStr))))
-      .withColumn("m", graft.functions.Id3Tags(col("payload")))
+      .withColumn("m", NativeFunctions.id3Tags(col("payload")))
       .select(col("doc_id"), col("m.title").as("title"),
         col("m.artist").as("artist"), col("m.album").as("album"),
         col("m.version").cast("bigint").as("version"))
@@ -7470,7 +7471,7 @@ object LlmQueries {
         Mp3Hex.ModeE, Mp3Hex.VbrMagicHexE, Mp3Hex.VbrFramesE,
         Mp3Hex.VbrBytesE, "div", ImageHex.seqJoinSpark)))
       .withColumn("payload", unhex(col("hs")))
-      .withColumn("m", graft.functions.Mp3Vbr(col("payload")))
+      .withColumn("m", NativeFunctions.mp3Vbr(col("payload")))
       .select(col("doc_id"), col("m.tag").as("tag"),
         col("m.sample_rate").cast("bigint").as("sample_rate"),
         col("m.n_frames").as("vbr_frames"),
@@ -7484,8 +7485,8 @@ object LlmQueries {
     * Huffman/IMDCT stub): per-document streams whose first frame
     * carries genuine ISO 11172-3 §2.4.1.7 side information and
     * §2.4.2.7 main-data scalefactors — every field deterministic in
-    * doc_id, bit-packed by [[graft.functions.Mp3SideFixtureExpr]] —
-    * decoded back through [[graft.functions.Mp3SideInfo]]'s bounded
+    * doc_id, bit-packed by `mp3_side_fixture` —
+    * decoded back through `mp3_side_info`'s bounded
     * bit walk: the window-switching branch split, the slen1/slen2
     * scalefac_compress table, granule-1 scfsi COPY semantics (set
     * groups are not transmitted; the decoder must reuse granule 0's
@@ -7503,8 +7504,8 @@ object LlmQueries {
   def mp3SideInfo(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp3SideFixtureExpr(col("doc_id")))
-      .withColumn("m", graft.functions.Mp3SideInfo(col("payload")))
+        NativeFunctions.mp3SideFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp3SideInfo(col("payload")))
       .select(col("doc_id"),
         col("m.main_data_begin").cast("bigint").as("main_data_begin"),
         col("m.channels").cast("bigint").as("channels"),
@@ -7542,8 +7543,8 @@ object LlmQueries {
   def mp3Count1(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp3Count1FixtureExpr(col("doc_id")))
-      .withColumn("m", graft.functions.Mp3Count1(col("payload")))
+        NativeFunctions.mp3Count1Fixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp3Count1(col("payload")))
       .select(col("doc_id"),
         col("m.n_quads").as("n_quads"),
         col("m.n_nonzero").as("n_nonzero"),
@@ -7563,8 +7564,8 @@ object LlmQueries {
   def mp3Count1A(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp3Count1AFixtureExpr(col("doc_id")))
-      .withColumn("m", graft.functions.Mp3Count1(col("payload")))
+        NativeFunctions.mp3Count1aFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp3Count1(col("payload")))
       .select(col("doc_id"),
         col("m.n_quads").as("n_quads"),
         col("m.n_nonzero").as("n_nonzero"),
@@ -7589,8 +7590,8 @@ object LlmQueries {
   def mp3Bigvalues(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp3BigvaluesFixtureExpr(col("doc_id")))
-      .withColumn("m", graft.functions.Mp3Bigvalues(col("payload")))
+        NativeFunctions.mp3BigvaluesFixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp3Bigvalues(col("payload")))
       .select(col("doc_id"),
         col("m.n_regions").as("n_regions"),
         col("m.n_pairs").as("n_pairs"),
@@ -7621,7 +7622,7 @@ object LlmQueries {
           (id, graft.multimodal.H264Fixture.annexBCavlcLuma(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264CavlcLumaExpr(col("payload")))
+      .withColumn("m", NativeFunctions.h264CavlcLuma(col("payload")))
       .select(col("doc_id"),
         col("m.n_mbs").as("n_mbs"),
         col("m.n_coeffs").as("n_coeffs"),
@@ -7651,7 +7652,7 @@ object LlmQueries {
           (id, graft.multimodal.H264Fixture.annexBCavlcFull(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264CavlcFullExpr(col("payload")))
+      .withColumn("m", NativeFunctions.h264CavlcFull(col("payload")))
       .select(col("doc_id"),
         col("m.n_mbs").as("n_mbs"),
         col("m.n_luma").as("n_luma"),
@@ -7689,7 +7690,7 @@ object LlmQueries {
           (id, graft.multimodal.H264Fixture.annexBCavlcAc(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264CavlcAcExpr(col("payload")))
+      .withColumn("m", NativeFunctions.h264CavlcAc(col("payload")))
       .select(col("doc_id"),
         col("m.n_mbs").as("n_mbs"),
         col("m.n_dc").as("n_dc"),
@@ -7727,7 +7728,7 @@ object LlmQueries {
           (id, graft.multimodal.H264Fixture.annexBCavlcMb(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264CavlcMbExpr(col("payload")))
+      .withColumn("m", NativeFunctions.h264CavlcMb(col("payload")))
       .select(col("doc_id"),
         col("m.n_mbs").as("n_mbs"),
         col("m.luma_dc").as("luma_dc"),
@@ -7753,8 +7754,8 @@ object LlmQueries {
   def mp3Part3(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"))
       .withColumn("payload",
-        graft.functions.Mp3Part3FixtureExpr(col("doc_id")))
-      .withColumn("m", graft.functions.Mp3Part3(col("payload")))
+        NativeFunctions.mp3Part3Fixture(col("doc_id")))
+      .withColumn("m", NativeFunctions.mp3Part3(col("payload")))
       .select(col("doc_id"),
         col("m.n_regions").as("n_regions"),
         col("m.n_pairs").as("n_pairs"),
@@ -7769,7 +7770,7 @@ object LlmQueries {
     * streams with [[graft.multimodal.H264Fixture]]'s independent
     * bit writer (SEI zero runs force emulation-prevention
     * escaping), decode them back with the native
-    * [[graft.functions.H264Sps]] expression (start-code walk, RBSP
+    * `h264_sps` expression (start-code walk, RBSP
     * unescape, the §7.3.2.1 field chain to the DERIVED cropped
     * dimensions), and roll up per (profile, level). The oracle
     * replays the parameter derivation arithmetically — since width/
@@ -7785,7 +7786,7 @@ object LlmQueries {
         it.map(id => (id, graft.multimodal.H264Fixture.annexB(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264Sps(col("payload")))
+      .withColumn("m", NativeFunctions.h264Sps(col("payload")))
       .groupBy(col("m.profile_idc").cast("bigint").as("profile_idc"),
         col("m.level_idc").cast("bigint").as("level_idc"))
       .agg(count(lit(1)).as("n_videos"),
@@ -7819,7 +7820,7 @@ object LlmQueries {
       }.toDF("doc_id", "payload")
     payloads
       .select(col("doc_id"),
-        explode(graft.functions.H264PcmMbs(col("payload"))).as("m"))
+        explode(NativeFunctions.h264PcmMbs(col("payload"))).as("m"))
       .select(col("doc_id"),
         col("m.mb_i").cast("bigint").as("mb_i"),
         col("m.luma_sum").as("luma_sum"),
@@ -7853,7 +7854,7 @@ object LlmQueries {
         it.map(id => (id, graft.multimodal.H264Fixture.annexBCavlc(id)))
       }.toDF("doc_id", "payload")
     payloads
-      .withColumn("m", graft.functions.H264CavlcExpr(col("payload")))
+      .withColumn("m", NativeFunctions.h264Cavlc(col("payload")))
       .select(col("doc_id"),
         col("m.n_mbs").as("n_mbs"),
         col("m.n_coeffs").as("n_coeffs"),

@@ -352,10 +352,11 @@ object SuffixArray {
           // pure map over the clustered frame: clustering and order
           // are preserved, checkpoint directly — no exchange.
           // Radix halfBound+3, NOT +2: the low slot holds rank2+2 ∈
-          // {1} ∪ [3, halfBound+2], so +2 would let the max-rank2
-          // digit equal the radix and alias into the hi digit under
-          // the div/mod decode of lcpSql (order/equality would still
-          // hold — the decode would not).
+          // {1} ∪ [2, halfBound+2] (rank2 = -1 past the corpus end),
+          // so radix +2 would let the max-rank2 digit equal the radix
+          // and alias into the high digit; +3 keeps every low digit
+          // below the radix, so the packed value also decodes by
+          // div/mod.
           val k = halfBound + 3
           chkDisk(keys.select(col("gpos"),
             (col("rank") * k + (col("rank2") + 2)).as("rank"),

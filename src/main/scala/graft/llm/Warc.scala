@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Real WARC (ISO 28500) record-stream parsing — the wire format of
@@ -218,9 +219,18 @@ object Warc {
     if (recs.isEmpty) None else Some(recs)
   }
 
+  /** The `parseArray` result array. */
+  val parseArrayType: ArrayType =
+    ArrayType(StructType(Seq(
+      StructField("rec_type", StringType, nullable = false),
+      StructField("uri", StringType, nullable = true),
+      StructField("content_length", LongType, nullable = false),
+      StructField("body", StringType, nullable = false))),
+      containsNull = false)
+
   /** [[parseAuto]] as Catalyst ArrayData of
     * (rec_type, uri, content_length, body) rows for the
-    * [[graft.functions.WarcRecords]] codegen path — transparently
+    * `warc_records` codegen path — transparently
     * handles both `.warc` and member-per-record `.warc.gz`; null =
     * malformed payload. */
   def parseArray(b: Array[Byte]): ArrayData = parseAuto(b) match {

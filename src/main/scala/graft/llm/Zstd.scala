@@ -1,6 +1,9 @@
 package graft.llm
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Zstandard FRAME layer (RFC 8878) — the container walk around the
   * entropy coding: magic dispatch including SKIPPABLE frames, the
@@ -147,6 +150,12 @@ object Zstd {
     Some((frames, skippable, contentLen, out.sumFrom(0), windowSum,
       out.bytes))
   }
+
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("n_frames" -> LongType, "n_skippable" -> LongType,
+      "content_len" -> LongType, "content_sum" -> LongType,
+      "window_sum" -> LongType)
 
   def parseRow(b: Array[Byte]): InternalRow = parse(b) match {
     case Some((f, s, l, cs, w)) => InternalRow(f, s, l, cs, w)

@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Real RIFF/WAVE header parsing — pure byte arithmetic, no codec
   * library; the little-endian complement of [[ImageHeaders]]' walks.
@@ -155,8 +158,14 @@ object AudioHeaders {
       case _ => None
     }
 
+  /** The `levelsRow` result row. */
+  val levelsRowType: StructType =
+    row("channels" -> IntegerType, "sample_rate" -> IntegerType,
+      "n_values" -> LongType, "sum_sq" -> LongType, "peak" -> IntegerType,
+      "n_clipped" -> LongType)
+
   /** [[levels]] as an `InternalRow` for the
-    * [[graft.functions.AudioLevels]] codegen path. Null = not a
+    * `audio_levels` codegen path. Null = not a
     * 16-bit PCM WAV. */
   def levelsRow(b: Array[Byte]): InternalRow = levels(b) match {
     case Some((ch, rate, nv, ssq, pk, cl)) =>
@@ -589,8 +598,14 @@ object AudioHeaders {
     Some((ch, rate, bits0, nValues, sumSq, peak, nClipped))
   }
 
+  /** The `flacPcmRow` result row. */
+  val flacPcmRowType: StructType =
+    row("channels" -> IntegerType, "sample_rate" -> IntegerType,
+      "bits" -> IntegerType, "n_values" -> LongType, "sum_sq" -> LongType,
+      "peak" -> IntegerType, "n_clipped" -> LongType)
+
   /** [[parseFlacPcm]] as an `InternalRow` for the
-    * [[graft.functions.FlacPcmLevels]] codegen path. Null = not a
+    * `flac_pcm_levels` codegen path. Null = not a
     * FLAC stream of uncoded (CONSTANT/VERBATIM) frames. */
   def flacPcmRow(b: Array[Byte]): InternalRow = parseFlacPcm(b) match {
     case Some((ch, rate, bits, nv, ssq, pk, cl)) =>
@@ -726,7 +741,7 @@ object AudioHeaders {
   }
 
   /** [[parseFlacTags]] as an `InternalRow` for the
-    * [[graft.functions.FlacTags]] codegen path. Null = not FLAC or
+    * `flac_tags` codegen path. Null = not FLAC or
     * a malformed comment block. */
   /** Ogg/Vorbis COMMENT-header tags — the tag half [[parseOgg]]'s
     * page walk only skips: packets are reassembled from LACING
@@ -832,6 +847,11 @@ object AudioHeaders {
     Some((title, artist, album))
   }
 
+  /** The `flacTagsRow` result row. */
+  val flacTagsRowType: StructType =
+    StructType(Seq("title", "artist", "album")
+      .map(StructField(_, StringType, nullable = true)))
+
   /** Tag extraction for BOTH Vorbis-comment carriers,
     * magic-dispatched like [[metaRow]]: "OggS" → the page-walk
     * comment-packet path, anything else → the FLAC metadata-block
@@ -851,8 +871,13 @@ object AudioHeaders {
     }
   }
 
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("channels" -> IntegerType, "sample_rate" -> IntegerType,
+      "bits" -> IntegerType, "n_samples" -> LongType)
+
   /** [[parse]] as an `InternalRow` for the
-    * [[graft.functions.AudioMeta]] codegen path (called from
+    * `audio_meta` codegen path (called from
     * generated Java — keep the signature static-friendly). One
     * expression, three containers: dispatches on the in-band magic —
     * "fLaC" → [[parseFlac]], "OggS" → [[parseOgg]], RIFF/WAVE →
@@ -926,8 +951,13 @@ object AudioHeaders {
       case _ => None
     }
 
+  /** The `fingerprintRow` result row. */
+  val fingerprintRowType: StructType =
+    row("sample_rate" -> IntegerType, "n_frames" -> LongType,
+      "fp" -> LongType)
+
   /** [[fingerprint]] as an `InternalRow` for the
-    * [[graft.functions.AudioFp]] codegen path. Null = not 16-bit
+    * `audio_fp` codegen path. Null = not 16-bit
     * PCM, or too short to frame. */
   def fingerprintRow(b: Array[Byte]): InternalRow = fingerprint(b) match {
     case Some((rate, nf, fp)) => InternalRow(rate, nf, fp)
@@ -1030,8 +1060,14 @@ object AudioHeaders {
       case _ => None
     }
 
+  /** The `ulawLevelsRow` result row. */
+  val ulawLevelsRowType: StructType =
+    row("channels" -> IntegerType, "sample_rate" -> IntegerType,
+      "n_values" -> LongType, "sum_sq" -> LongType, "peak" -> IntegerType,
+      "n_fullscale" -> LongType)
+
   /** [[ulawLevels]] as an `InternalRow` for the
-    * [[graft.functions.AudioUlawLevels]] codegen path. Null = not a
+    * `audio_ulaw_levels` codegen path. Null = not a
     * µ-law WAV. */
   def ulawLevelsRow(b: Array[Byte]): InternalRow = ulawLevels(b) match {
     case Some((ch, rate, nv, ssq, pk, fs)) =>
@@ -1039,8 +1075,11 @@ object AudioHeaders {
     case None => null
   }
 
+  /** The `alawLevelsRow` result row. */
+  val alawLevelsRowType: StructType = ulawLevelsRowType
+
   /** [[alawLevels]] as an `InternalRow` for the
-    * [[graft.functions.AudioAlawLevels]] codegen path. Null = not an
+    * `audio_alaw_levels` codegen path. Null = not an
     * A-law WAV. */
   def alawLevelsRow(b: Array[Byte]): InternalRow = alawLevels(b) match {
     case Some((ch, rate, nv, ssq, pk, fs)) =>

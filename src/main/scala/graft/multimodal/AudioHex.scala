@@ -4,7 +4,7 @@ package graft.multimodal
   * uppercase hex text — the little-endian sibling of [[ImageHex]],
   * used by the `mm_audio_meta` fixture: the Spark query materializes
   * the blob and parses it with the native
-  * [[graft.functions.AudioMeta]] expression; the DuckDB oracle
+  * `audio_meta` expression; the DuckDB oracle
   * round-trips the same hex through a real BLOB and extracts the
   * fields independently by offset arithmetic.
   *

@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Real EXIF orientation decode from JPEG APP1 — the metadata every
   * photo pipeline must honor before any pixel work (a portrait shot
@@ -113,8 +116,13 @@ object ExifHeaders {
     None
   }
 
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType,
+      "orientation" -> IntegerType)
+
   /** [[parse]] as an `InternalRow` for the
-    * [[graft.functions.ExifMeta]] codegen path. Null = not a
+    * `exif_meta` codegen path. Null = not a
     * parseable JPEG, or a malformed EXIF block. */
   def parseRow(b: Array[Byte]): InternalRow = parse(b) match {
     case Some((w, h, o)) => InternalRow(w, h, o)

@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** REAL H.264 CAVLC residual decode for chroma-DC-coded pictures —
   * the entropy rung above [[H264Pcm]]'s raw-sample one: walk the
@@ -575,8 +578,13 @@ object H264Cavlc {
       }
     } catch { case _: IndexOutOfBoundsException => None }
 
+  /** The `decodeRow` result row. */
+  val decodeRowType: StructType =
+    row("n_mbs" -> LongType, "n_coeffs" -> LongType, "n_t1" -> LongType,
+      "n_neg" -> LongType, "sum_levels" -> LongType, "sum_tz" -> LongType)
+
   /** [[decode]] as an `InternalRow` for the
-    * [[graft.functions.H264CavlcExpr]] codegen path. Null = not a
+    * `h264_cavlc` codegen path. Null = not a
     * chroma-DC-CAVLC-decodable stream. */
   def decodeRow(b: Array[Byte]): InternalRow = decode(b) match {
     case Some((nm, nc, t1, nn, sl, tz)) =>
@@ -634,16 +642,25 @@ object H264Cavlc {
       }
     } catch { case _: IndexOutOfBoundsException => None }
 
+  /** The `decodeFullRow` result row. */
+  val decodeFullRowType: StructType =
+    row("n_mbs" -> LongType, "n_luma" -> LongType, "luma_sum" -> LongType,
+      "n_chroma" -> LongType, "chroma_sum" -> LongType, "n_neg" -> LongType,
+      "sum_tz" -> LongType)
+
   /** [[decodeFull]] as an `InternalRow` for the
-    * [[graft.functions.H264CavlcFullExpr]] codegen path. */
+    * `h264_cavlc_full` codegen path. */
   def decodeFullRow(b: Array[Byte]): InternalRow = decodeFull(b) match {
     case Some((nm, nl, ls, nc, cs, nn, tz)) =>
       InternalRow(nm, nl, ls, nc, cs, nn, tz)
     case None => null
   }
 
+  /** The `decodeLumaRow` result row. */
+  val decodeLumaRowType: StructType = decodeRowType
+
   /** [[decodeLuma]] as an `InternalRow` for the
-    * [[graft.functions.H264CavlcLumaExpr]] codegen path. Null = not
+    * `h264_cavlc_luma` codegen path. Null = not
     * a luma-DC-CAVLC-decodable stream. */
   def decodeLumaRow(b: Array[Byte]): InternalRow = decodeLuma(b) match {
     case Some((nm, nc, t1, nn, sl, tz)) =>
@@ -720,8 +737,14 @@ object H264Cavlc {
       }
     } catch { case _: IndexOutOfBoundsException => None }
 
+  /** The `decodeAcRow` result row. */
+  val decodeAcRowType: StructType =
+    row("n_mbs" -> LongType, "n_dc" -> LongType, "dc_sum" -> LongType,
+      "n_ac" -> LongType, "ac_sum" -> LongType, "n_t1" -> LongType,
+      "n_neg" -> LongType, "sum_tz" -> LongType, "sum_nc" -> LongType)
+
   /** [[decodeAc]] as an `InternalRow` for the
-    * [[graft.functions.H264CavlcAcExpr]] codegen path. Null = not a
+    * `h264_cavlc_ac` codegen path. Null = not a
     * luma-AC-CAVLC-decodable stream. */
   def decodeAcRow(b: Array[Byte]): InternalRow = decodeAc(b) match {
     case Some((nm, nd, ds, na, as_, t1, nn, tz, nc)) =>
@@ -849,8 +872,15 @@ object H264Cavlc {
       }
     } catch { case _: IndexOutOfBoundsException => None }
 
+  /** The `decodeMbRow` result row. */
+  val decodeMbRowType: StructType =
+    row("n_mbs" -> LongType, "luma_dc" -> LongType, "luma_ac" -> LongType,
+      "chroma_dc" -> LongType, "chroma_ac" -> LongType,
+      "sum_levels" -> LongType, "n_t1" -> LongType, "n_neg" -> LongType,
+      "sum_tz" -> LongType, "sum_nc" -> LongType)
+
   /** [[decodeMb]] as an `InternalRow` for the
-    * [[graft.functions.H264CavlcMbExpr]] codegen path. */
+    * `h264_cavlc_mb` codegen path. */
   def decodeMbRow(b: Array[Byte]): InternalRow = decodeMb(b) match {
     case Some((nm, ld, la, cd, ca, sl, t1, nn, tz, nc)) =>
       InternalRow(nm, ld, la, cd, ca, sl, t1, nn, tz, nc)

@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Real H.264/AVC Annex-B NAL walk + SPS (sequence parameter set)
   * parse — Exp-Golomb bit arithmetic on the bare JDK, the video
@@ -225,8 +228,14 @@ object H264Headers {
     sps.map { case (p, l, w, h) => (p, l, w, h, nNals) }
   }
 
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("profile_idc" -> IntegerType, "level_idc" -> IntegerType,
+      "width" -> IntegerType, "height" -> IntegerType,
+      "n_nals" -> IntegerType)
+
   /** [[parse]] as an `InternalRow` for the
-    * [[graft.functions.H264Sps]] codegen path. Null = no parseable
+    * `h264_sps` codegen path. Null = no parseable
     * SPS. */
   def parseRow(b: Array[Byte]): InternalRow = parse(b) match {
     case Some((p, l, w, h, nn)) => InternalRow(p, l, w, h, nn)

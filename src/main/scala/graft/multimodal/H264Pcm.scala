@@ -3,6 +3,9 @@ package graft.multimodal
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+
+import graft.functions.NativeFn.row
 
 /** REAL H.264 SAMPLE decode for PCM-coded pictures — the first
   * payload-decode rung of the video lane (the container/SPS walks in
@@ -185,8 +188,16 @@ object H264Pcm {
     }
   }
 
+  /** The `decodeRows` result array. */
+  val decodeRowsType: ArrayType =
+    ArrayType(row("mb_i" -> IntegerType, "luma_sum" -> LongType,
+      "luma_min" -> IntegerType, "luma_max" -> IntegerType,
+      "cbcr_sum" -> LongType, "width" -> IntegerType,
+      "height" -> IntegerType),
+      containsNull = false)
+
   /** [[decode]] as Catalyst rows for the
-    * [[graft.functions.H264PcmMbs]] codegen path:
+    * `h264_pcm_mbs` codegen path:
     * `array<struct<mb_i:int, luma_sum:bigint, luma_min:int,
     * luma_max:int, cbcr_sum:bigint, width:int, height:int>>`, null
     * when the stream is not a decodable PCM picture. */

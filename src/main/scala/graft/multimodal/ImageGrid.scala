@@ -2,6 +2,9 @@ package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Luma-plane PNG decode + 64-bit difference-hash (dHash) — the
   * engine's REAL pixel-derived image fingerprint, closing the
@@ -185,8 +188,13 @@ object ImageGrid {
     Some((hiB, loB))
   }
 
+  /** The `dhashRow` result row. */
+  val dhashRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType,
+      "dh_hi" -> LongType, "dh_lo" -> LongType)
+
   /** Decode + fingerprint as an `InternalRow` for the
-    * [[graft.functions.DHash64]] codegen path: null = undecodable
+    * `dhash64` codegen path: null = undecodable
     * payload or an image too small to fingerprint. */
   def dhashRow(b: Array[Byte]): InternalRow = lumaGrid(b) match {
     case Some((w, h, luma)) => dhash64(w, h, luma) match {
@@ -228,9 +236,15 @@ object ImageGrid {
     Some((sum, cnt))
   }
 
+  /** The `cellRows` result array. */
+  val cellRowsType: ArrayType =
+    ArrayType(row("cell_i" -> IntegerType, "cell_j" -> IntegerType,
+      "lsum" -> LongType, "lcnt" -> LongType),
+      containsNull = false)
+
   /** Decode + cell grid as Catalyst `ArrayData` of
     * `struct<cell_i:int, cell_j:int, lsum:bigint, lcnt:bigint>` rows
-    * for the [[graft.functions.LumaCells]] codegen path: null =
+    * for the `luma_cells` codegen path: null =
     * undecodable payload or an image smaller than the grid. */
   def cellRows(b: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =
     lumaGrid(b) match {

@@ -1,7 +1,10 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.NativeFn.row
 
 /** Real image-container header parsing — pure byte arithmetic, no
   * codec library. This replaces the multimodal decode stub for the
@@ -195,7 +198,12 @@ object ImageHeaders {
     None
   }
 
-  /** [[parse]] as an `InternalRow` for the [[graft.functions.ImageDims]]
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("kind" -> StringType, "width" -> IntegerType,
+      "height" -> IntegerType)
+
+  /** [[parse]] as an `InternalRow` for the `image_dims`
     * codegen path (called from generated Java — keep the signature
     * static-friendly). Null = not a parseable image. */
   def parseRow(b: Array[Byte]): InternalRow = parse(b) match {
@@ -265,8 +273,13 @@ object ImageHeaders {
     Some((w.toInt, h.toInt, n, sumR, sumG, sumB))
   }
 
+  /** The `bmpLevelsRow` result row. */
+  val bmpLevelsRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType, "n_px" -> LongType,
+      "sum_r" -> LongType, "sum_g" -> LongType, "sum_b" -> LongType)
+
   /** [[bmpLevels]] as an `InternalRow` for the
-    * [[graft.functions.ImageLevels]] codegen path. Null = not an
+    * `image_levels` codegen path. Null = not an
     * uncompressed 24-bit BMP. */
   def bmpLevelsRow(b: Array[Byte]): InternalRow = bmpLevels(b) match {
     case Some((w, h, n, r, g, bl)) => InternalRow(w, h, n, r, g, bl)
@@ -510,8 +523,13 @@ object ImageHeaders {
     true
   }
 
+  /** The `pngLevelsRow` result row. */
+  val pngLevelsRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType, "n_px" -> LongType,
+      "sum_r" -> LongType, "sum_g" -> LongType, "sum_b" -> LongType)
+
   /** [[pngLevels]] as an `InternalRow` for the
-    * [[graft.functions.PngLevels]] codegen path. Null = not a
+    * `png_levels` codegen path. Null = not a
     * decodable 8-bit-depth PNG (any of the five color types). */
   def pngLevelsRow(b: Array[Byte]): InternalRow = pngLevels(b) match {
     case Some((w, h, n, r, g, bl)) => InternalRow(w, h, n, r, g, bl)

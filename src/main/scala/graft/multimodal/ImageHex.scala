@@ -4,7 +4,7 @@ package graft.multimodal
   * streams as uppercase hex text (one `unhex`/`from_hex` from a
   * genuine binary payload). Used by the `mm_image_dims` fixture: the
   * Spark query materializes the blob and parses it with the native
-  * [[graft.functions.ImageDims]] expression; the DuckDB oracle
+  * `image_dims` expression; the DuckDB oracle
   * round-trips the same hex through a real BLOB (`hex(from_hex(..))`)
   * and extracts the header fields independently by offset arithmetic.
   * Every fragment is plain ANSI-ish text parameterized only by the

@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** REAL baseline-JPEG pixel decode — no codec library. The one
   * multimodal lane previously declared a stub (lossy-codec payload
@@ -384,6 +387,11 @@ object JpegDecode {
     }
     Some((w, h, w.toLong * h, sum))
   }
+
+  /** The `lumaLevelsRow` result row. */
+  val lumaLevelsRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType, "n_px" -> LongType,
+      "sum_y" -> LongType)
 
   /** [[lumaLevels]] as an `InternalRow` for the codegen path. */
   def lumaLevelsRow(b: Array[Byte]): InternalRow = lumaLevels(b) match {

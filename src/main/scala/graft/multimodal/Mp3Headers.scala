@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Real MPEG-1 Layer III (MP3) frame-walk metadata — pure byte
   * arithmetic, no codec library; the compressed-audio sibling of
@@ -170,8 +173,14 @@ object Mp3Headers {
     else Some((frames, rate, channels, sumKbps, frameBytes, spf))
   }
 
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("n_frames" -> IntegerType, "sample_rate" -> IntegerType,
+      "channels" -> IntegerType, "sum_kbps" -> LongType,
+      "frame_bytes" -> LongType, "spf" -> IntegerType)
+
   /** [[parse]] as an `InternalRow` for the
-    * [[graft.functions.Mp3Meta]] codegen path. Null = not a Layer
+    * `mp3_meta` codegen path. Null = not a Layer
     * III stream. */
   def parseRow(b: Array[Byte]): InternalRow = parse(b) match {
     case Some((nf, rate, ch, kbps, fb, spf)) =>
@@ -238,8 +247,13 @@ object Mp3Headers {
     Some((tag, rate, frames, bytes, estMs))
   }
 
+  /** The `vbrRow` result row. */
+  val vbrRowType: StructType =
+    row("tag" -> StringType, "sample_rate" -> IntegerType,
+      "n_frames" -> LongType, "n_bytes" -> LongType, "est_ms" -> LongType)
+
   /** [[vbrInfo]] as an `InternalRow` for the
-    * [[graft.functions.Mp3Vbr]] codegen path. Null = no VBR
+    * `mp3_vbr` codegen path. Null = no VBR
     * header. */
   def vbrRow(b: Array[Byte]): InternalRow = vbrInfo(b) match {
     case Some((tag, rate, nf, nb, ms)) =>
@@ -337,7 +351,7 @@ object Mp3Headers {
   }
 
   /** Decoded metrics of [[sideInfo]] — one value class so the
-    * field-order contract with [[graft.functions.Mp3SideInfo]] is
+    * field-order contract with `mp3_side_info` is
     * spelled once. */
   final case class SideInfoMetrics(
       mainDataBegin: Int, channels: Int, scfsiMask: Int,
@@ -1002,32 +1016,57 @@ object Mp3Headers {
     Some((nRegions, nPairs, nQuads, nNonzero, nNeg, sumVals))
   }
 
+  /** The `part3Row` result row. */
+  val part3RowType: StructType =
+    row("n_regions" -> LongType, "n_pairs" -> LongType,
+      "n_quads" -> LongType, "n_nonzero" -> LongType, "n_neg" -> LongType,
+      "sum_vals" -> LongType)
+
   /** [[part3Info]] as an `InternalRow` for the
-    * [[graft.functions.Mp3Part3]] codegen path. */
+    * `mp3_part3` codegen path. */
   def part3Row(b: Array[Byte]): InternalRow = part3Info(b) match {
     case Some((nr, np, nq, nz, nn, sv)) =>
       InternalRow(nr, np, nq, nz, nn, sv)
     case None => null
   }
 
+  /** The `bigvaluesRow` result row. */
+  val bigvaluesRowType: StructType =
+    row("n_regions" -> LongType, "n_pairs" -> LongType,
+      "n_nonzero" -> LongType, "n_neg" -> LongType, "sum_vals" -> LongType)
+
   /** [[bigvaluesInfo]] as an `InternalRow` for the
-    * [[graft.functions.Mp3Bigvalues]] codegen path. Null = not a
+    * `mp3_bigvalues` codegen path. Null = not a
     * big-values-decodable stream. */
   def bigvaluesRow(b: Array[Byte]): InternalRow = bigvaluesInfo(b) match {
     case Some((nr, np, nz, nn, sv)) => InternalRow(nr, np, nz, nn, sv)
     case None => null
   }
 
+  /** The `count1Row` result row. */
+  val count1RowType: StructType =
+    row("n_quads" -> LongType, "n_nonzero" -> LongType, "n_neg" -> LongType,
+      "sum_vals" -> LongType)
+
   /** [[count1Info]] as an `InternalRow` for the
-    * [[graft.functions.Mp3Count1]] codegen path. Null = not a
+    * `mp3_count1` codegen path. Null = not a
     * count1-decodable stream. */
   def count1Row(b: Array[Byte]): InternalRow = count1Info(b) match {
     case Some((nq, nz, nn, sv)) => InternalRow(nq, nz, nn, sv)
     case None => null
   }
 
+  /** The `sideInfoRow` result row. */
+  val sideInfoRowType: StructType =
+    row("main_data_begin" -> IntegerType, "channels" -> IntegerType,
+      "scfsi_mask" -> IntegerType, "p23_sum" -> LongType,
+      "bigv_sum" -> LongType, "gain_max" -> IntegerType,
+      "bt1" -> IntegerType, "mixed1" -> IntegerType, "tsel_sum" -> LongType,
+      "reg_sum" -> LongType, "sbg_sum" -> LongType, "flags_sum" -> LongType,
+      "part2_bits" -> LongType, "sf_sum" -> LongType, "sf_n" -> LongType)
+
   /** [[sideInfo]] as an `InternalRow` for the
-    * [[graft.functions.Mp3SideInfo]] codegen path. Null = not a
+    * `mp3_side_info` codegen path. Null = not a
     * decodable MPEG-1 Layer III first frame. */
   def sideInfoRow(b: Array[Byte]): InternalRow = sideInfo(b) match {
     case Some(m) => InternalRow(m.mainDataBegin, m.channels,
@@ -1037,8 +1076,14 @@ object Mp3Headers {
     case None => null
   }
 
+  /** The `id3TagsRow` result row. */
+  val id3TagsRowType: StructType =
+    StructType(Seq("title", "artist", "album")
+      .map(StructField(_, StringType, nullable = true)) :+
+      StructField("version", IntegerType, nullable = false))
+
   /** [[id3TextFrames]] as an `InternalRow` for the
-    * [[graft.functions.Id3Tags]] codegen path. Null = no/malformed
+    * `id3_tags` codegen path. Null = no/malformed
     * tag. */
   def id3TagsRow(b: Array[Byte]): InternalRow = id3TextFrames(b) match {
     case Some((t, a, al, v)) =>

@@ -6,7 +6,7 @@ import ImageHex.hexN
   * (MP3) streams as uppercase hex text — the compressed-audio
   * sibling of [[AudioHex]], used by the `mm_mp3_meta` fixture: the
   * Spark query materializes the blob and walks it with the native
-  * [[graft.functions.Mp3Meta]] expression; the DuckDB oracle
+  * `mp3_meta` expression; the DuckDB oracle
   * REPLAYS the frame walk positionally — it computes each frame's
   * byte offset by cumulative frame-length arithmetic, then EXTRACTS
   * the header bytes at those offsets from the same blob's hex and

@@ -16,14 +16,14 @@ import org.apache.spark.sql.functions._
   * arithmetic, no codec library — and returns genuine metadata for
   * any real PNG/JPEG/WAV/MP4 payload. PAYLOAD DECODE IS ALSO REAL
   * for both CODEC-FREE formats: 16-bit PCM WAV
-  * ([[AudioHeaders.levels]] behind [[graft.functions.AudioLevels]] —
+  * ([[AudioHeaders.levels]] behind `audio_levels` —
   * raw s16le samples; per-file energy/peak/clip metering,
   * `mm_audio_levels`) and 24-bit BI_RGB BMP
   * ([[ImageHeaders.bmpLevels]] behind
-  * [[graft.functions.ImageLevels]] — raw padded BGR rows; per-file
+  * `image_levels` — raw padded BGR rows; per-file
   * channel sums, `mm_image_levels`). PNG PIXEL DECODE IS REAL TOO
   * ([[ImageHeaders.pngLevels]] behind
-  * [[graft.functions.PngLevels]], `mm_png_levels`): IDAT is
+  * `png_levels`, `mm_png_levels`): IDAT is
   * zlib/DEFLATE and `java.util.zip.Inflater` is public JDK, so
   * decompression + §9 scanline un-filtering needs no codec library
   * — ALL FIVE 8-bit color
@@ -31,40 +31,40 @@ import org.apache.spark.sql.functions._
   * bit-depth 16 and Adam7 interlace,
   * multi-IDAT, all five filter types (ImageIO-round-trip
   * spec-proven per color type). BASELINE JPEG luma is REAL too
-  * ([[JpegDecode]] behind [[graft.functions.JpegLuma]],
+  * ([[JpegDecode]] behind `jpeg_luma`,
   * `mm_jpeg_luma`): canonical Huffman + dequant + IDCT on the
   * public JDK, ImageIO-tolerance spec-proven. MP3 FRAME METADATA IS
-  * REAL ([[Mp3Headers]] behind [[graft.functions.Mp3Meta]],
+  * REAL ([[Mp3Headers]] behind `mp3_meta`,
   * `mm_mp3_meta`): ID3v2 syncsafe skip + the MPEG-1 Layer III
   * derived-frame-length walk — frame count, sample rate, channel
   * mode, VBR bitrate sum, duration — plus the Xing/Info VBR block
-  * ([[graft.functions.Mp3Vbr]], `mm_mp3_vbr`), the §2.4.1.7 side
+  * (`mp3_vbr`, `mm_mp3_vbr`), the §2.4.1.7 side
   * information + §2.4.2.7 main-data scalefactor walk
-  * ([[Mp3Headers.sideInfo]] behind [[graft.functions.Mp3SideInfo]],
+  * ([[Mp3Headers.sideInfo]] behind `mp3_side_info`,
   * `mm_mp3_sideinfo`), and the first real ENTROPY slice of the
   * Layer III sample path — the count1 region's table-1 quadruple
   * codes + sign bits ([[Mp3Headers.count1Info]] behind
-  * [[graft.functions.Mp3Count1]], `mm_mp3_count1`; the MP3 analog
+  * `mp3_count1`, `mm_mp3_count1`; the MP3 analog
   * of H.264's I_PCM rung — big_values = 0 streams are fully
   * conformant). COMPANDED (lossy)
   * AUDIO DECODE IS REAL FOR BOTH G.711 HALVES
   * ([[AudioHeaders.ulawExpand]]/[[AudioHeaders.alawExpand]] behind
-  * [[graft.functions.AudioUlawLevels]]/[[graft.functions.AudioAlawLevels]],
+  * `audio_ulaw_levels`/`audio_alaw_levels`,
   * `mm_audio_ulaw`/`mm_audio_alaw`): the segment/mantissa expansion
   * verified against the JDK's own codecs on all 256 codes.
   * H.264 BITSTREAM METADATA IS
-  * REAL ([[H264Headers]] behind [[graft.functions.H264Sps]],
+  * REAL ([[H264Headers]] behind `h264_sps`,
   * `mm_h264_sps`): Annex-B NAL walk, RBSP emulation-prevention
   * unescape, and the full §7.3.2.1 Exp-Golomb SPS field chain to
   * the derived cropped dimensions + profile/level. H.264 SAMPLE
   * DECODE IS REAL FOR PCM-CODED PICTURES ([[H264Pcm]] behind
-  * [[graft.functions.H264PcmMbs]], `mm_h264_pcm`): slice-header
+  * `h264_pcm_mbs`, `mm_h264_pcm`): slice-header
   * Exp-Golomb walk + I_PCM macroblock raw-sample read — the
   * standard's lossless escape hatch, a fully conformant stream
   * class. FLAC SAMPLE DECODE IS REAL FOR ALL LOSSLESS SUBFRAME
   * CLASSES — CONSTANT, VERBATIM, FIXED AND LPC
   * ([[AudioHeaders.parseFlacPcm]] behind
-  * [[graft.functions.FlacPcmLevels]], `mm_flac_pcm` /
+  * `flac_pcm_levels`, `mm_flac_pcm` /
   * `mm_flac_fixed` / `mm_flac_lpc`): the frame walk, the uncoded
   * subframe bit reads, and genuine COMPRESSED audio — order-0..4
   * fixed predictors AND §9.2.4 quantized-LPC predictors (any order
@@ -272,7 +272,7 @@ object Multimodal {
     * vector of [[ImageGrid.cellGrid]] — the same pixel-derived
     * features the oracle-checked `mm_image_features` /
     * `mm_feature_knn` queries compute through
-    * [[graft.functions.LumaCells]], exact integers cast to float
+    * `luma_cells`, exact integers cast to float
     * (cell means ≤ 765, exactly representable). The 16-dim grid is
     * where a LEARNED embedding model would slot in — same seam, same
     * shape, same downstream consumers.

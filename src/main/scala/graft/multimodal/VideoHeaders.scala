@@ -1,6 +1,9 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+
+import graft.functions.NativeFn.row
 
 /** Real MP4/ISO-BMFF container metadata — pure byte arithmetic, no
   * codec library, the video sibling of [[ImageHeaders]] (BE) and
@@ -165,6 +168,11 @@ object VideoHeaders {
     Some((n, sum, max, nc))
   }
 
+  /** The `samplesRow` result row. */
+  val samplesRowType: StructType =
+    row("n_samples" -> LongType, "sum_sizes" -> LongType,
+      "max_size" -> LongType, "n_chunks" -> LongType)
+
   /** [[parseSamples]] as an `InternalRow` for the codegen path. */
   def samplesRow(b: Array[Byte]): InternalRow = parseSamples(b) match {
     case Some((n, s, m, c)) => InternalRow(n, s, m, c)
@@ -223,9 +231,14 @@ object VideoHeaders {
     None
   }
 
+  /** The `parseRow` result row. */
+  val parseRowType: StructType =
+    row("width" -> IntegerType, "height" -> IntegerType,
+      "timescale" -> IntegerType, "duration" -> LongType)
+
   /** The same parse as an InternalRow
     * (width:int, height:int, timescale:int, duration:long) or null —
-    * shared by [[graft.functions.VideoMeta]]'s interpreted and
+    * shared by `video_meta`'s interpreted and
     * codegen paths. One expression, two containers: dispatches on
     * the in-band magic — RIFF/"AVI " → [[parseAvi]], else the
     * ISO-BMFF box walk — like `audio_meta` does for WAV/FLAC. */

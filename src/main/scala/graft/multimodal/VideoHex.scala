@@ -4,7 +4,7 @@ package graft.multimodal
   * (ISO-BMFF) file as uppercase hex text — the big-endian video
   * sibling of [[ImageHex]]/[[AudioHex]], used by the `mm_video_meta`
   * fixture: the Spark query materializes the blob and parses it with
-  * the native [[graft.functions.VideoMeta]] expression; the DuckDB
+  * the native `video_meta` expression; the DuckDB
   * oracle round-trips the same hex through a real BLOB and extracts
   * the fields independently by offset arithmetic.
   *

@@ -1,7 +1,10 @@
 package graft.multimodal
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import scala.collection.mutable
+
+import graft.functions.NativeFn.row
 
 /** REAL Vorbis ENTROPY DECODE — the codebook layer of Vorbis I
   * (§3 "Probability Model and Codebooks"): the part of the codec
@@ -1020,6 +1023,11 @@ object Vorbis {
     Some((fy.length, ySum, yWSum, nStep2))
   }
 
+  /** The `floorRow` result row. */
+  val floorRowType: StructType =
+    row("n_values" -> IntegerType, "y_sum" -> LongType,
+      "y_wsum" -> LongType, "n_step2" -> LongType)
+
   /** [[parseFloor]] as an `InternalRow` for the codegen path. */
   def floorRow(b: Array[Byte]): InternalRow = parseFloor(b) match {
     case Some((nv, ys, yw, ns)) => InternalRow(nv, ys, yw, ns)
@@ -1123,6 +1131,11 @@ object Vorbis {
     }
     Some((n, s, ws, mx))
   }
+
+  /** The `floorCurveRow` result row. */
+  val floorCurveRowType: StructType =
+    row("n_bins" -> IntegerType, "curve_sum" -> LongType,
+      "curve_wsum" -> LongType, "curve_max" -> LongType)
 
   /** [[parseFloorCurve]] as an `InternalRow` for the codegen path. */
   def floorCurveRow(b: Array[Byte]): InternalRow = parseFloorCurve(b) match {
@@ -1231,6 +1244,11 @@ object Vorbis {
     Some((cls.length, ((cls.length + books(cfg.classbook).dims - 1) /
       books(cfg.classbook).dims).toLong, s, ws))
   }
+
+  /** The `residueRow` result row. */
+  val residueRowType: StructType =
+    row("n_partitions" -> IntegerType, "n_classwords" -> LongType,
+      "class_sum" -> LongType, "class_wsum" -> LongType)
 
   /** [[parseResidue]] as an `InternalRow` for the codegen path. */
   def residueRow(b: Array[Byte]): InternalRow = parseResidue(b) match {
@@ -1458,6 +1476,12 @@ object Vorbis {
     Some((out.length.toLong, nVecs, s, ws, nz))
   }
 
+  /** The `residueApplyRow` result row. */
+  val residueApplyRowType: StructType =
+    row("n_slots" -> LongType, "n_values" -> LongType,
+      "res_sum" -> LongType, "res_wsum" -> LongType,
+      "n_nonzero" -> LongType)
+
   /** [[parseResidueApply]] as an `InternalRow` for the codegen
     * path. */
   def residueApplyRow(b: Array[Byte]): InternalRow =
@@ -1502,6 +1526,11 @@ object Vorbis {
     }
     Some((out.length.toLong, nVecs, s, ws, nz))
   }
+
+  /** The `residueScaleRow` result row. */
+  val residueScaleRowType: StructType =
+    row("n_slots" -> LongType, "n_values" -> LongType, "sc_sum" -> LongType,
+      "sc_wsum" -> LongType, "n_nonzero" -> LongType)
 
   /** [[parseResidueScale]] as an `InternalRow` for the codegen
     * path. */
@@ -1605,12 +1634,24 @@ object Vorbis {
     Some((books.length, l1, l2, mc, ms, sq, ss))
   }
 
+  /** The `booksRow` result row. */
+  val booksRowType: StructType =
+    row("n_books" -> IntegerType, "n_entries" -> LongType,
+      "n_used" -> LongType, "sum_dims" -> LongType, "n_syms" -> LongType,
+      "sym_sum" -> LongType, "sym_wsum" -> LongType)
+
   /** [[parseBooks]] as an `InternalRow` for the codegen path. */
   def booksRow(b: Array[Byte]): InternalRow = parseBooks(b) match {
     case Some((nb, ent, us, dm, ns, ss, sw)) =>
       InternalRow(nb, ent, us, dm, ns, ss, sw)
     case None => null
   }
+
+  /** The `vqRow` result row. */
+  val vqRowType: StructType =
+    row("n_books" -> IntegerType, "n_lookup1" -> LongType,
+      "n_lookup2" -> LongType, "mul_count" -> LongType,
+      "mul_sum" -> LongType, "n_seq" -> LongType, "sym_sum" -> LongType)
 
   /** [[parseVq]] as an `InternalRow` for the codegen path. */
   def vqRow(b: Array[Byte]): InternalRow = parseVq(b) match {

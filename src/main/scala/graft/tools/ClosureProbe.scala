@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.rdf.{RdfOps, TripleFixture, Vocab}
 
 /** Capped-heap probe for the relation-closure build algorithms at a
@@ -15,18 +15,11 @@ object ClosureProbe {
     val dir = args.headOption.getOrElse("/tmp/graft-sf1")
     val algos = args.drop(1).headOption.getOrElse("both")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
+    val spark = GraftSession.start(cpus,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+      "spark.sql.adaptive.enabled" ->
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val edges = TripleFixture.triples(spark, dir)
       .filter(col("predicate") === Vocab.DctermsRelation &&
         col("obj_kind") === "iri")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Generates the 10x rehearsal corpus (ScaleRehearsal's fixture)
   * without running the full rehearsal — for capped-heap probes.
@@ -8,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object GenScale {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("32")
     ScaleRehearsal.generate(spark, "/root/testdata/sf0.1", out)
     println(s"[genscale] wrote $out")
     spark.stop()

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Per-round fixed-cost floor probe for iterative loop interiors
   * (dev tool): measures the wall cost of N rounds of the atomic
@@ -17,16 +18,11 @@ object LoopFloor {
     val rows = args.headOption.map(_.toLong).getOrElse(9000L)
     val rounds = args.drop(1).headOption.map(_.toInt).getOrElse(40)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "1"))
-      .config("spark.sql.adaptive.enabled",
+    val spark = GraftSession.start(cpus,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "1"),
+      "spark.sql.adaptive.enabled" ->
         sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val shim = org.apache.spark.sql.graftshim.ColumnBridge
     val base = spark.range(rows).select(col("id").as("node"),
       (col("id") % 97).as("pr")).localCheckpoint()

@@ -2,7 +2,8 @@ package graft.tools
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
+
 
 /** Dumps `.explain("formatted")` for named queries to files — the
   * before/after plan evidence for optimization rounds. Usage:
@@ -16,15 +17,7 @@ object PlanDump {
     val names = args(2).split(',').toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(cpus)
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(

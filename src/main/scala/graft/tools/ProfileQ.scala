@@ -3,7 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Dev-only overhead profiler (guide §1): for each named query, runs
   * it cold then warm and prints wall time alongside scheduler-side
@@ -19,20 +20,13 @@ object ProfileQ {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.wholeStage",
+    val spark = GraftSession.start(cpus,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+      "spark.sql.adaptive.enabled" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
+      "spark.sql.codegen.wholeStage" ->
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     val deserMs = new AtomicLong; val gcMs = new AtomicLong

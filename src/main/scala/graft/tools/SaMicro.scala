@@ -1,9 +1,10 @@
 package graft.llm
 // (beside SaProbe; llm package for private[llm] access)
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.GraftSession
 
 /** Micro-decomposition of the suffix-array build's per-stage cost
   * (dev tool): times the atomic operations the build is made of —
@@ -15,15 +16,7 @@ object SaMicro {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(cpus)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

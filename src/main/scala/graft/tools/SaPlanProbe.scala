@@ -1,9 +1,10 @@
 package graft.llm
 // (lives beside the tools mains; llm package for private[llm] access)
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Dev probe: does the block-clustered checkpoint's pinned
   * partitioning/ordering actually elide the window sort and the
@@ -15,18 +16,11 @@ object SaPlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
+    val spark = GraftSession.start(cpus,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+      "spark.sql.adaptive.enabled" ->
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val shim = org.apache.spark.sql.graftshim.ColumnBridge
     def mk() = spark.range(100000)
       .select((col("id") % 50).as("block"), col("id").as("gpos"))

@@ -1,7 +1,7 @@
 package graft.llm
 // (lives beside the tools mains; llm package for private[llm] access)
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Stage-level timing for the suffix-array family (dev tool): times
   * each stored artifact build separately so the heavy level is
@@ -10,20 +10,13 @@ object SaProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.serializer",
-        if (sys.env.contains("SPARK_GRAFT_KRYO"))
+    val spark = GraftSession.start(cpus,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+      "spark.serializer" ->
+        (if (sys.env.contains("SPARK_GRAFT_KRYO"))
           "org.apache.spark.serializer.KryoSerializer"
-        else "org.apache.spark.serializer.JavaSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        else "org.apache.spark.serializer.JavaSerializer"))
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.SparkEntry
 
 /** sf1 SCALE REHEARSAL — the FULL query suite at 10× the sf0.1
@@ -150,14 +151,8 @@ object ScaleRehearsal {
       r.name -> r
     }.toMap
 
-  private def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def session(cpus: String): SparkSession =
+    GraftSession.start(cpus,
       // The shared-session rehearsal accumulates every query's
       // memoized MEMORY_AND_DISK_SER artifacts; with the default
       // 0.5 protected storage fraction the grown suite's residents
@@ -167,11 +162,7 @@ object ScaleRehearsal {
       // fraction lets execution evict artifact blocks to their disk
       // fallback — the same knob a real cluster job tunes; plans
       // and results are unaffected, eviction policy is.
-      .config("spark.memory.storageFraction", "0.1")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.memory.storageFraction" -> "0.1")
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")

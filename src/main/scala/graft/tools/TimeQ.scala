@@ -1,15 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
+
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start("32")
     val t0 = System.nanoTime()
     val n = graft.SparkEntry.queries(args(0))(spark, args(1)).count()
     println(f"TIMEQ ${args(0)} rows=$n cold=${(System.nanoTime()-t0)/1e9}%.1f s")

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.NativeFunctions
+
 /** The engine's native expressions are reachable from pure SQL via
   * SparkSessionExtensions (spark.sql.extensions=graft.GraftExtensions,
   * set in every session builder incl. TestSpark). */
@@ -29,13 +31,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val s = TestSpark.spark
     import org.apache.spark.sql.functions.{col, lit}
     import s.implicits._
-    // payloads built by the (unregistered, fixture-side) Scala API;
+    // payloads built through the Scala API;
     // the decode side must resolve by NAME through spark.sql
     Seq(7L).toDF("doc_id")
       .withColumn("bv",
-        graft.functions.Mp3BigvaluesFixtureExpr(col("doc_id")))
+        NativeFunctions.mp3BigvaluesFixture(col("doc_id")))
       .withColumn("p3",
-        graft.functions.Mp3Part3FixtureExpr(col("doc_id")))
+        NativeFunctions.mp3Part3Fixture(col("doc_id")))
       .withColumn("nal", lit(
         graft.multimodal.H264Fixture.annexBCavlc(7L)))
       .withColumn("ogg", lit(

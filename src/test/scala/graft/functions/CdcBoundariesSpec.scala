@@ -49,7 +49,7 @@ class CdcBoundariesSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     val kernelCuts = docs
       .select(col("doc_id"),
-        explode(CdcBoundaries(col("text"))).as("i"))
+        explode(NativeFunctions.cdcBoundaries(col("text"))).as("i"))
       .as[(Long, Long)].collect().toSet
     assert(kernelCuts === foldCuts)
     assert(kernelCuts.nonEmpty, "fixture must actually cut")

@@ -37,55 +37,116 @@ class SuffixArraySpec extends AnyFunSuite {
     (6L, "wholly unique text qwertyuiop zxcvbnm 0987654321 unique")
   )
 
-  private lazy val dir: String = {
-    val d = Files.createTempDirectory("sa-fixture").toFile.getAbsolutePath
-    val s = spark
-    import s.implicits._
-    docsFixture.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
+  // wide codes: characters >= 232 make the depth-8 base overflow the
+  // direct 8-digit pack, so this corpus runs the prefix-doubling
+  // schedule at every depth and the plcpLift LCP path
+  private val wideFixture: Seq[(Long, String)] = Seq(
+    (0L, "café crème brûlée — naïve façade über señor ω € once more"),
+    (1L, "prefix then café crème brûlée — naïve façade über señor tail"),
+    (2L, "αβγδεζηθ" * 12),
+    (3L, "tiny ünïcode doc"),
+    (4L, "exact copy pair ∑ with forty-plus characters ñ in it 123456"),
+    (5L, "exact copy pair ∑ with forty-plus characters ñ in it 123456"),
+    (6L, "wholly unique text ψχφυτσ qwertyuiop zxcvbnm 0987654321 ok")
+  )
+
+  /** A corpus written as a documents table, with its brute force. */
+  private class Fixture(docs: Seq[(Long, String)]) {
+    lazy val dir: String = {
+      val d = Files.createTempDirectory("sa-fixture").toFile.getAbsolutePath
+      val s = spark
+      import s.implicits._
+      docs.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$d/documents.parquet")
+      d
+    }
+
+    // ---- brute force ----------------------------------------------
+    val ordered = docs.sortBy(_._1)
+    val corpus: String = ordered.map(_._2 + "\u0001").mkString
+    private val offsets: Seq[(Long, Long, Int)] = { // (docId, off, len)
+      var off = 0L
+      ordered.map { case (id, t) =>
+        val r = (id, off, t.length); off += t.length + 1; r
+      }
+    }
+    def docOf(gpos: Long): (Long, Long) = {
+      val (id, off, len) = offsets.find { case (_, off, len) =>
+        gpos >= off && gpos <= off + len }.get
+      (id, gpos - off + 1)
+    }
+    def suffix(g: Int): String =
+      corpus.substring(g, math.min(g + Depth, corpus.length))
+    val bruteOrder: Seq[Int] =
+      (0 until corpus.length).sortBy(g => (suffix(g), g))
   }
 
-  // ---- brute force ------------------------------------------------
   private val Depth = SuffixArray.Depth
-  private val ordered = docsFixture.sortBy(_._1)
-  private val corpus: String = ordered.map(_._2 + "\u0001").mkString
-  private val offsets: Seq[(Long, Long, Int)] = { // (docId, off, len)
-    var off = 0L
-    ordered.map { case (id, t) =>
-      val r = (id, off, t.length); off += t.length + 1; r
-    }
-  }
-  private def docOf(gpos: Long): (Long, Long) = {
-    val (id, off, len) = offsets.find { case (_, off, len) =>
-      gpos >= off && gpos <= off + len }.get
-    (id, gpos - off + 1)
-  }
-  private def suffix(g: Int): String =
-    corpus.substring(g, math.min(g + Depth, corpus.length))
-  private val bruteOrder: Seq[Int] =
-    (0 until corpus.length).sortBy(g => (suffix(g), g))
-  private val bruteRank: Map[Int, Int] =
-    bruteOrder.zipWithIndex.toMap
+  private val ascii = new Fixture(docsFixture)
+  private val wide = new Fixture(wideFixture)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  test("saRanked equals the brute-force bounded suffix order, " +
-      "including a sub-lookahead-length document") {
-    val got = SuffixArray.saRanked(spark, dir)
+  private def checkSaRanked(fx: Fixture): Unit = {
+    val got = SuffixArray.saRanked(spark, fx.dir)
       .select("sa_rank", "doc_id", "lpos")
-    val want = bruteOrder.zipWithIndex.map { case (g, r) =>
-      val (id, lpos) = docOf(g.toLong)
+    val want = fx.bruteOrder.zipWithIndex.map { case (g, r) =>
+      val (id, lpos) = fx.docOf(g.toLong)
       Seq[Any](r.toLong, id, lpos)
     }.toSet
     assert(rows(got) === want)
   }
 
+  private def checkExactSubstr(fx: Fixture): Unit = {
+    val L = SuffixArray.SpanL
+    val gramCount = fx.ordered.flatMap { case (_, t) =>
+      (0 to t.length - L).map(i => t.substring(i, i + L))
+    }.groupBy(identity).map { case (g, v) => g -> v.size }
+    val dupStarts = fx.ordered.flatMap { case (id, t) =>
+      (0 to t.length - L).collect {
+        case i if gramCount(t.substring(i, i + L)) > 1 =>
+          (id, i + 1L) // 1-based lpos
+      }
+    }
+    val want = dupStarts.groupBy(_._1).flatMap { case (id, ps) =>
+      val sorted = ps.map(_._2).sorted
+      // islands of consecutive starts
+      val islands = sorted.foldLeft(List.empty[(Long, Long)]) {
+        case ((s0, e0) :: rest, p) if p == e0 + 1 => (s0, p) :: rest
+        case (acc, p) => (p, p) :: acc
+      }
+      islands.map { case (s0, e0) =>
+        Seq[Any](id, s0, e0 - s0 + L)
+      }
+    }.toSet
+    val got = SuffixArray.exactSubstr(spark, fx.dir)
+    assert(rows(got) === want)
+    assert(want.exists(_(2).asInstanceOf[Long] > L),
+      "fixture must produce a span longer than L (merged island)")
+  }
+
+  private def checkLcpHistogram(fx: Fixture): Unit = {
+    def lcp(a: String, b: String): Long =
+      a.zip(b).takeWhile { case (x, y) => x == y }.size.toLong
+    val want = fx.bruteOrder.sliding(2).map { case Seq(a, b) =>
+      math.min(lcp(fx.suffix(a), fx.suffix(b)), Depth.toLong)
+    }.toSeq.groupBy(identity).map { case (l, v) =>
+      Seq[Any](l, v.size.toLong)
+    }.toSet
+    assert(rows(SuffixArray.lcpHistogram(spark, fx.dir)) === want)
+  }
+
+  test("saRanked equals the brute-force bounded suffix order, " +
+      "including a sub-lookahead-length document") {
+    checkSaRanked(ascii)
+  }
+
   test("rank-level equality means bounded-substring equality at " +
       "every power-of-two depth") {
+    val corpus = ascii.corpus
     for (d <- Seq(1, 2, 4, 8, 16, 32)) {
-      val ranks = SuffixArray.rankLevel(spark, dir, d)
+      val ranks = SuffixArray.rankLevel(spark, ascii.dir, d)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       def sub(g: Int) =
         corpus.substring(g, math.min(g + d, corpus.length))
@@ -103,42 +164,20 @@ class SuffixArraySpec extends AnyFunSuite {
   }
 
   test("exactSubstr equals brute-force maximal duplicated spans") {
-    val L = SuffixArray.SpanL
-    val gramCount = ordered.flatMap { case (_, t) =>
-      (0 to t.length - L).map(i => t.substring(i, i + L))
-    }.groupBy(identity).map { case (g, v) => g -> v.size }
-    val dupStarts = ordered.flatMap { case (id, t) =>
-      (0 to t.length - L).collect {
-        case i if gramCount(t.substring(i, i + L)) > 1 =>
-          (id, i + 1L) // 1-based lpos
-      }
-    }
-    val want = dupStarts.groupBy(_._1).flatMap { case (id, ps) =>
-      val sorted = ps.map(_._2).sorted
-      // islands of consecutive starts
-      val islands = sorted.foldLeft(List.empty[(Long, Long)]) {
-        case ((s0, e0) :: rest, p) if p == e0 + 1 => (s0, p) :: rest
-        case (acc, p) => (p, p) :: acc
-      }
-      islands.map { case (s0, e0) =>
-        Seq[Any](id, s0, e0 - s0 + L)
-      }
-    }.toSet
-    val got = SuffixArray.exactSubstr(spark, dir)
-    assert(rows(got) === want)
-    assert(want.exists(_(2).asInstanceOf[Long] > L),
-      "fixture must produce a span longer than L (merged island)")
+    checkExactSubstr(ascii)
   }
 
   test("lcpHistogram equals brute-force adjacent-pair LCPs") {
-    def lcp(a: String, b: String): Long =
-      a.zip(b).takeWhile { case (x, y) => x == y }.size.toLong
-    val want = bruteOrder.sliding(2).map { case Seq(a, b) =>
-      math.min(lcp(suffix(a), suffix(b)), Depth.toLong)
-    }.toSeq.groupBy(identity).map { case (l, v) =>
-      Seq[Any](l, v.size.toLong)
-    }.toSet
-    assert(rows(SuffixArray.lcpHistogram(spark, dir)) === want)
+    checkLcpHistogram(ascii)
+  }
+
+  test("wide-code corpus (chars >= 232, no direct depth-8 pack): " +
+      "saRanked, exactSubstr and lcpHistogram equal the brute force") {
+    assert(wide.corpus.exists(_ >= 232) &&
+      wide.corpus.forall(c => !Character.isSurrogate(c)))
+    checkSaRanked(wide)
+    checkExactSubstr(wide)
+    checkLcpHistogram(wide)
   }
 
   test("denseRank assigns contiguous order-preserving ranks") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.WordNgrams
+import graft.functions.NativeFunctions
 
 /** The codegen shingle kernel must agree with the interpreted HOF
   * spelling it replaced — on the real corpus and on the degenerate
@@ -21,7 +21,8 @@ class WordNgramsSpec extends AnyFunSuite {
     Seq(3 -> LlmQueries.shingle3HofExpr, 5 -> LlmQueries.fivegramHofSql)
       .foreach { case (n, hof) =>
         val both = w.select(col("doc_id"),
-          WordNgrams.of(col("w"), n).as("fast"), expr(hof).as("ref"))
+          NativeFunctions.wordNgrams(col("w"), lit(n)).as("fast"),
+          expr(hof).as("ref"))
         assert(both.filter(col("fast") =!= col("ref")).isEmpty, s"n=$n")
       }
   }
@@ -31,7 +32,7 @@ class WordNgramsSpec extends AnyFunSuite {
     import s.implicits._
     val df = Seq("", "a", "a b", "a b c", "a b c d").toDF("text")
       .select(split(trim(lower(col("text"))), "\\s+").as("w"))
-    val got = df.select(WordNgrams.of(col("w"), 3).as("g"))
+    val got = df.select(NativeFunctions.wordNgrams(col("w"), lit(3)).as("g"))
       .collect().map(_.getSeq[String](0).toList).toList
     // split("") yields [""] — one token, still < 3 → empty
     assert(got == List(Nil, Nil, Nil, List("a b c"),

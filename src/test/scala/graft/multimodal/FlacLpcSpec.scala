@@ -2,6 +2,8 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.NativeFunctions
+
 /** §9.2.4 LPC-subframe decode ([[AudioHeaders.parseFlacPcm]]) pinned
   * on HAND-ASSEMBLED bitstreams — coefficient precision/shift header
   * walk, signed coefficient reads, the all-integer prediction
@@ -124,10 +126,10 @@ class FlacLpcSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq(3L, 7L, 12L).toDF("doc_id")
       .withColumn("payload",
-        graft.functions.FlacLpcFixture(org.apache.spark.sql.functions
+        NativeFunctions.flacLpcFixture(org.apache.spark.sql.functions
           .col("doc_id")))
       .withColumn("m",
-        graft.functions.FlacPcmLevels(org.apache.spark.sql.functions
+        NativeFunctions.flacPcmLevels(org.apache.spark.sql.functions
           .col("payload")))
       .select("doc_id", "m.n_values", "m.sum_sq")
     val got = df.collect().map(r =>

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.functions.NativeFunctions
 
 /** Baseline-JPEG luma decode ([[JpegDecode.lumaLevels]]): the
   * Huffman/dequant/IDCT chain must reproduce exact flat values on
@@ -158,7 +159,7 @@ class JpegDecodeSpec extends AnyFunSuite {
     val exp = JpegDecode.lumaLevels(b).get
     val df = Seq(Tuple1(b)).toDF("payload")
     val viaExpr = df.select(
-      graft.functions.JpegLuma(col("payload")).as("m"))
+      NativeFunctions.jpegLuma(col("payload")).as("m"))
       .selectExpr("m.width", "m.height", "m.n_px", "m.sum_y")
       .collect()(0)
     val viaSql = df.selectExpr("jpeg_luma(payload) AS m")

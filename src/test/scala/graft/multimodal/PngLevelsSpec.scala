@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.functions.NativeFunctions
 
 /** Real PNG pixel decode ([[ImageHeaders.pngLevels]]): Inflater-based
   * IDAT decompression + §9 scanline un-filtering must reproduce
@@ -366,7 +367,7 @@ class PngLevelsSpec extends AnyFunSuite {
     val exp = ImageHeaders.pngLevels(b).get
     val df = Seq(Tuple1(b)).toDF("payload")
     val viaExpr = df.select(
-      graft.functions.PngLevels(col("payload")).as("m"))
+      NativeFunctions.pngLevels(col("payload")).as("m"))
       .selectExpr("m.width", "m.height", "m.n_px",
         "m.sum_r", "m.sum_g", "m.sum_b").collect()(0)
     val viaSql = df.selectExpr("png_levels(payload) AS m")
