@@ -3,12 +3,31 @@ package graft
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.CodegenCache
 
 object Bench {
   /** One timed run of a single query; `err` is the exception class+message
     * when the query failed (its wall time then measures a stack unwind,
-    * not work — consumers must not average it in). */
-  final case class QueryRun(name: String, sec: Double, err: Option[String])
+    * not work — consumers must not average it in). `compiles` counts
+    * the generated classes janino compiled during the run. */
+  final case class QueryRun(name: String, sec: Double, err: Option[String],
+      compiles: Long)
+
+  /** `fn(spark, sfDir).count()`, timed: (seconds, error, classes
+    * compiled). The compile counter is read outside the timed region. */
+  private def timeOnce(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : (Double, Option[String], Long) = {
+    val c0 = CodegenCache.compiles
+    val t0 = System.nanoTime()
+    val err =
+      try { fn(spark, sfDir).count(); None }
+      catch { case NonFatal(e) =>
+        Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+      }
+    val sec = (System.nanoTime() - t0) / 1e9
+    (sec, err, CodegenCache.compiles - c0)
+  }
 
   /** Timing core, separated from `main` so a spec can drive it with an
     * injected (possibly broken) query map and assert on the failure
@@ -21,20 +40,16 @@ object Bench {
     // Fixed (sorted) timing order: Map iteration order is hash-order
     // and would shift per-query warm-up between rounds.
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        }
-      QueryRun(name, (System.nanoTime() - t0) / 1e9, err)
+      val (sec, err, compiles) = timeOnce(spark, sfDir, fn)
+      QueryRun(name, sec, err, compiles)
     }
 
   /** One query timed cold-then-warm: `coldSec` is the first
     * execution (pays memoized-artifact builds, codegen, shuffle-file
-    * creation), `warmSecs` the subsequent repetitions. */
+    * creation), `warmSecs` the subsequent repetitions. `compiles`
+    * holds the classes compiled per run, cold first. */
   final case class SteadyRun(name: String, coldSec: Double,
-      warmSecs: Seq[Double], err: Option[String])
+      warmSecs: Seq[Double], err: Option[String], compiles: Seq[Long])
 
   /** Steady-state timing: each query runs once cold then `warmReps`
     * more times; the artifact carries BOTH numbers and the headline
@@ -52,19 +67,11 @@ object Bench {
       queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
       warmReps: Int): Seq[SteadyRun] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Double, Option[String]) = {
-        val t0 = System.nanoTime()
-        val err =
-          try { fn(spark, sfDir).count(); None }
-          catch { case e: Throwable =>
-            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          }
-        ((System.nanoTime() - t0) / 1e9, err)
-      }
-      val (cold, err) = once()
-      val warm = if (err.isDefined) Seq.empty[Double]
-        else (1 to warmReps).map(_ => once()._1)
-      SteadyRun(name, cold, warm, err)
+      val (cold, err, coldCompiles) = timeOnce(spark, sfDir, fn)
+      val warm = if (err.isDefined) Nil
+        else (1 to warmReps).map(_ => timeOnce(spark, sfDir, fn))
+      SteadyRun(name, cold, warm.map(_._1), err,
+        coldCompiles +: warm.map(_._3))
     }
 
   /** Median of the warm repetitions; cold time when there are none
@@ -88,7 +95,9 @@ object Bench {
     * cumulative GC time/count since JVM start (a GC-excursion run
     * carries tens of seconds here where a clean run carries ~1-2 s).
     * BASELINE.md documents three rounds where these — not plan
-    * changes — moved the numbers and had to be re-litigated by hand. */
+    * changes — moved the numbers and had to be re-litigated by hand.
+    * Also the codegen cache size in effect: at Spark's 100 every warm
+    * pass recompiles what the last one evicted. */
   private def envJson(): String = {
     import java.lang.management.ManagementFactory
     val load = ManagementFactory.getOperatingSystemMXBean
@@ -100,18 +109,21 @@ object Bench {
       if (b.getCollectionTime > 0) gcMs += b.getCollectionTime
       if (b.getCollectionCount > 0) gcN += b.getCollectionCount
     }
-    s""""load_avg_1m":$load,"max_heap_bytes":$maxHeap,"gc_ms":$gcMs,"gc_count":$gcN"""
+    s""""load_avg_1m":$load,"max_heap_bytes":$maxHeap,"gc_ms":$gcMs,"gc_count":$gcN,"codegen_cache_max_entries":${CodegenCache.maxEntries}"""
   }
 
-  /** The one-line bench JSON, self-diagnosing via [[envJson]]. */
+  /** The one-line bench JSON, self-diagnosing via [[envJson]];
+    * `codegen_compiles` holds each query's compiled-class count. */
   def renderJson(runs: Seq[QueryRun], sfDir: String): String = {
     val qs = runs.map(r => jsonStr(r.name) + ":" + r.sec)
       .mkString("{", ",", "}")
     val errs = runs.filter(_.err.isDefined)
       .map(r => jsonStr(r.name) + ":" + jsonStr(r.err.get))
       .mkString("{", ",", "}")
+    val compiles = runs.map(r => jsonStr(r.name) + ":" + r.compiles)
+      .mkString("{", ",", "}")
     val total = runs.map(_.sec).sum
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,${envJson()},"sf":${jsonStr(sfDir)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"codegen_compiles":$compiles,${envJson()},"sf":${jsonStr(sfDir)}}"""
   }
 
   /** The steady-state one-liner: headline = sum of warm medians;
@@ -122,7 +134,8 @@ object Bench {
     * erred run's wall time is a stack unwind, and folding it into
     * the headline would contradict [[runSteady]]'s own "consumers
     * must not average it in" contract — the nonzero exit code flags
-    * the failure, the totals stay meaningful. */
+    * the failure, the totals stay meaningful. `codegen_compiles`
+    * lists each query's compiled-class counts, cold first. */
   def renderSteadyJson(runs: Seq[SteadyRun], sfDir: String,
       warmReps: Int): String = {
     val ok = runs.filter(_.err.isEmpty)
@@ -135,9 +148,12 @@ object Bench {
     val errs = runs.filter(_.err.isDefined)
       .map(r => jsonStr(r.name) + ":" + jsonStr(r.err.get))
       .mkString("{", ",", "}")
+    val compiles = runs.map(r => jsonStr(r.name) + ":" +
+        r.compiles.mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
     val total = ok.map(warmMedian).sum
     val totalCold = ok.map(_.coldSec).sum
-    s"""{"metric":"total","value":$total,"unit":"sec","mode":"steady","warm_reps":$warmReps,"total_cold":$totalCold,"queries":$qs,"cold":$cold,"errors":$errs,${envJson()},"sf":${jsonStr(sfDir)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","mode":"steady","warm_reps":$warmReps,"total_cold":$totalCold,"queries":$qs,"cold":$cold,"errors":$errs,"codegen_compiles":$compiles,${envJson()},"sf":${jsonStr(sfDir)}}"""
   }
 
   /** Print the one-line JSON (the driver contract) AND write it to

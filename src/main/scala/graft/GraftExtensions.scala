@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.CodegenCache
 
 import graft.functions.{DeflateRatio, DotProductLong, IsValidIri, NativeCall, NativeFunctions, TopKByLong, TopKByLongStr, VecSumLong}
 
@@ -16,9 +17,20 @@ import graft.functions.{DeflateRatio, DotProductLong, IsValidIri, NativeCall, Na
   * that turns the naive `aggregate(zip_with(a, b, (x,y) -> x*y), 0L,
   * (s,x) -> s+x)` spelling into the `dot_product_l` codegen kernel,
   * and the planner strategy of the native as-of join.
+  *
+  * Every engine session goes through here, so this is also where the
+  * engine defaults `spark.sql.codegen.cache.maxEntries` to 8192
+  * ([[org.apache.spark.sql.graftshim.CodegenCache]]). Spark's 100
+  * classes are far below the engine's measured working set (355
+  * classes for the benchmark's 14-query suite, about 4,100 for all
+  * 326 queries), so each warm pass recompiled what the last one had
+  * evicted. Spark reads the value once per JVM, at the first codegen;
+  * override it at launch (`--conf spark.sql.codegen.cache.maxEntries=N`
+  * or the session builder), where an explicit value always wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    CodegenCache.install()
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
     ext.injectPlannerStrategy(_ => new graft.plans.AsofStrategy)
     NativeFunctions.all.foreach { fn =>

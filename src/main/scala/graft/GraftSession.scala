@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The engine's local session, shared by every main: `local[cores]`
   * with `cores` shuffle partitions, UTC, no UI, [[GraftExtensions]],
   * nanosecond parquet timestamps read as longs (see
-  * [[Tables.normalizeTs]]) and WARN logging. `conf` holds a tool's own
-  * settings; a key there overrides the shared value. */
+  * [[Tables.normalizeTs]]) and WARN logging. [[GraftExtensions]] also
+  * sizes Spark's codegen cache. `conf` holds a tool's own settings; a
+  * key there overrides the shared value. */
 object GraftSession {
   def start(cores: String, conf: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()

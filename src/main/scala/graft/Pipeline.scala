@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 import graft.config.EtlConf
 import graft.rdf.{Enrichment, RdfOps, Turtle}
@@ -115,21 +115,26 @@ object Pipeline {
       elapsedDays: Int = 0,
       graphId: String = "default",
       fetchApiContext: Option[() => String] = None): IncrementalResult = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, count, lit}
     val conf = EtlConf.fromEnv(env)
     val prefixes = rdf.Vocab.namespaces ++
       fetchApiContext.map(f => OmekaSource.parseApiContext(f()))
         .getOrElse(Map.empty)
     val raw = OmekaSource.load(spark, fetchPage, graphId)
     val clean = RdfOps.cleanExport(raw).localCheckpoint()
-    val keys = RdfOps.enrichmentKeys(clean).localCheckpoint()
+    // the two counts ride on checkpoints that materialize anyway:
+    // observed, not counted by extra jobs
+    val keysSeen = Observation()
+    val attemptedSeen = Observation()
+    val keys = RdfOps.enrichmentKeys(clean)
+      .observe(keysSeen, count(lit(1)).as("n")).localCheckpoint()
     // age the whole ledger by the inter-run gap BEFORE the staleness
     // cut, so "stale" means stale NOW, not as of the previous run
     val aged = ledger.withColumn("age_days",
       (col("age_days") + lit(elapsedDays)).cast("int"))
     // consumed twice (fetch + ledger update): materialize once
     val fetchList = RdfOps.enrichmentFetchList(keys, aged, ttlDays)
-      .localCheckpoint()
+      .observe(attemptedSeen, count(lit(1)).as("n")).localCheckpoint()
     val failedCounter = spark.sparkContext.longAccumulator(
       "graft.enrichment.failedKeys")
     // materialized at once: applyRefresh consumes the fetch TWICE
@@ -150,8 +155,8 @@ object Pipeline {
       .select(col("monument_key"), col("age_days"))
       .union(fetchList.select(col("monument_key"),
         lit(0).cast("int").as("age_days")))
-    val keysTotal = keys.count()
-    val attempted = fetchList.count()
+    val keysTotal = keysSeen.get("n").asInstanceOf[Long]
+    val attempted = attemptedSeen.get("n").asInstanceOf[Long]
     val metrics = FetchMetrics(keysTotal, attempted,
       skippedFresh = keysTotal - attempted,
       fetched = attempted - failedCounter.value,

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -141,7 +143,7 @@ object ScaleRehearsal {
         val sec = (System.nanoTime() - t0) / 1e9
         Run(name, sec, None, Some(planShape(df)))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           Run(name, (System.nanoTime() - t0) / 1e9,
             Some(s"${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(160)), None)

@@ -30,6 +30,8 @@ class BenchSpec extends AnyFunSuite {
     assert(json.contains("\"errors\":{\"boom\":\""))
     assert(!json.contains("\"errors\":{\"ok_count\""))
     assert(json.contains("\"load_avg_1m\":"))
+    assert(json.contains("\"codegen_cache_max_entries\":8192"))
+    assert(json.contains("\"codegen_compiles\":{\"boom\":0,\"ok_count\":"))
     // still one line, still has per-query timings for both
     assert(!json.contains("\n"))
     assert(json.contains("\"ok_count\":"))
@@ -61,6 +63,9 @@ class BenchSpec extends AnyFunSuite {
       json.contains("\"warm_reps\":3") &&
       json.contains("\"cold\":{") &&
       json.contains("\"errors\":{\"boom\":\"") && !json.contains("\n"))
+    // one compile count per run, cold first; the erred query ran once
+    assert(byName("ok_count").compiles.size == 4 &&
+      byName("boom").compiles == Seq(0L))
     // the erred query's stack-unwind time must not pollute the
     // headline totals: its per-query entries are null and the totals
     // equal the ok-only sums
