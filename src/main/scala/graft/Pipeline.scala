@@ -52,11 +52,22 @@ object Pipeline {
     // fetched twice per run
     val fetched = Enrichment.fetchAll(keys, fetchMonument)  // O14 fetch
       .localCheckpoint()
-    val enriched = RdfOps.enrich(clean, fetched)            // O15+O16
-    val mapped = RdfOps.applyMapping(enriched, conf.mapping) // O17
-    val ttl = RdfOps.applyFilter(mapped, conf.filterList)   // O18
-    Result(ttl, conf, prefixes)
+    Result(transform(clean, fetched, conf), conf, prefixes)
   }
+
+  /** O15–O18 over a cleaned export and its enrichment triples:
+    * enrich, rename, delete, then ONE set-semantics dedup as the last
+    * step. The reference's rdflib graph is a set through its
+    * remove/add rename (transform_datamodel.py:112–119), so a renamed
+    * predicate that collides with a triple already present
+    * (`dcterms:title "X"` renamed next to `sdo:name "X"`) yields one
+    * triple; deduplicating before the rename would publish both. */
+  private def transform(clean: DataFrame, enrichment: DataFrame,
+      conf: EtlConf): DataFrame =
+    RdfOps.applyFilter(                                     // O18
+      RdfOps.applyMapping(                                  // O17
+        RdfOps.enrichRows(clean, enrichment), conf.mapping), // O15+O16
+      conf.filterList).dropDuplicates()
 
   /** [[run]]'s INCREMENTAL form — the weekly run proportional to
     * CHANGE instead of corpus, with the reference's freshness
@@ -82,6 +93,17 @@ object Pipeline {
     * refresh set is an operational blind spot, so the counts are a
     * first-class output.
     *
+    * ONE KEYED LEDGER PASS: [[rdf.RdfOps.enrichmentLedgerPass]] joins
+    * the export keys against the aged ledger once and is checkpointed
+    * once. `keysTotal` and `attempted` are observed on that
+    * checkpoint (no counting job), and the fetch list and the
+    * returned ledger are filters/projections of it. The returned
+    * ledger's lineage therefore ends at this run's checkpoint: a
+    * ledger chained through any number of weekly runs costs every
+    * run the same jobs, instead of nesting one more join per run.
+    * The returned ledger holds one row per key (duplicated keys of
+    * the consumed ledger collapse to their oldest age).
+    *
     * LEDGER AGING: `elapsedDays` is the wall-clock days since the
     * consumed ledger was produced (7 for the reference's weekly
     * cadence). Every key ages by it up front — unfetched keys KEEP
@@ -90,7 +112,9 @@ object Pipeline {
     * ages verbatim with elapsedDays = 0 would freeze every unfetched
     * key's age forever and silently break the freshness contract
     * this form exists to keep). The caller persists snapshot +
-    * ledger for the next run. */
+    * ledger for the next run. `storedSnapshot` must be a set (the
+    * [[rdf.Enrichment.applyRefresh]] contract); the returned snapshot
+    * then is one too. */
   final case class IncrementalResult(triples: DataFrame, conf: EtlConf,
       prefixes: Map[String, String], snapshot: DataFrame,
       ledger: DataFrame, fetchList: DataFrame, metrics: FetchMetrics)
@@ -115,26 +139,29 @@ object Pipeline {
       elapsedDays: Int = 0,
       graphId: String = "default",
       fetchApiContext: Option[() => String] = None): IncrementalResult = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    import RdfOps.{Missing, Stale}
     val conf = EtlConf.fromEnv(env)
     val prefixes = rdf.Vocab.namespaces ++
       fetchApiContext.map(f => OmekaSource.parseApiContext(f()))
         .getOrElse(Map.empty)
     val raw = OmekaSource.load(spark, fetchPage, graphId)
     val clean = RdfOps.cleanExport(raw).localCheckpoint()
-    // the two counts ride on checkpoints that materialize anyway:
-    // observed, not counted by extra jobs
-    val keysSeen = Observation()
-    val attemptedSeen = Observation()
-    val keys = RdfOps.enrichmentKeys(clean)
-      .observe(keysSeen, count(lit(1)).as("n")).localCheckpoint()
     // age the whole ledger by the inter-run gap BEFORE the staleness
     // cut, so "stale" means stale NOW, not as of the previous run
     val aged = ledger.withColumn("age_days",
       (col("age_days") + lit(elapsedDays)).cast("int"))
-    // consumed twice (fetch + ledger update): materialize once
-    val fetchList = RdfOps.enrichmentFetchList(keys, aged, ttlDays)
-      .observe(attemptedSeen, count(lit(1)).as("n")).localCheckpoint()
+    val attempt = col("reason").isin(Missing, Stale)
+    // consumed three times (fetch list, ledger, counts): materialized
+    // once, and the counts ride on that checkpoint, observed
+    val seen = Observation()
+    val pass = RdfOps.enrichmentLedgerPass(RdfOps.enrichmentKeys(clean),
+        aged, ttlDays)
+      .observe(seen, count(col("reason")).as("keys"),
+        count(when(attempt, 1)).as("attempted"))
+      .localCheckpoint()
+    val fetchList = pass.filter(attempt)
+      .select(col("monument_key"), col("reason"))
     val failedCounter = spark.sparkContext.longAccumulator(
       "graft.enrichment.failedKeys")
     // materialized at once: applyRefresh consumes the fetch TWICE
@@ -146,23 +173,17 @@ object Pipeline {
       .localCheckpoint() // counter is final from here
     val snapshot2 = Enrichment.applyRefresh(storedSnapshot, fetched)
       .localCheckpoint()
-    val enriched = RdfOps.enrich(clean, snapshot2)
-    val ttl = RdfOps.applyFilter(
-      RdfOps.applyMapping(enriched, conf.mapping), conf.filterList)
-    val ledger2 = aged
-      .join(fetchList.select("monument_key"), Seq("monument_key"),
-        "left_anti")
-      .select(col("monument_key"), col("age_days"))
-      .union(fetchList.select(col("monument_key"),
-        lit(0).cast("int").as("age_days")))
-    val keysTotal = keysSeen.get("n").asInstanceOf[Long]
-    val attempted = attemptedSeen.get("n").asInstanceOf[Long]
+    // every pass row is a next-ledger row: attempted keys reset to 0
+    val ledger2 = pass.select(col("monument_key"),
+      when(attempt, lit(0)).otherwise(col("age_days")).as("age_days"))
+    val keysTotal = seen.get("keys").asInstanceOf[Long]
+    val attempted = seen.get("attempted").asInstanceOf[Long]
     val metrics = FetchMetrics(keysTotal, attempted,
       skippedFresh = keysTotal - attempted,
       fetched = attempted - failedCounter.value,
       failed = failedCounter.value)
-    IncrementalResult(ttl, conf, prefixes, snapshot2, ledger2,
-      fetchList, metrics)
+    IncrementalResult(transform(clean, snapshot2, conf), conf, prefixes,
+      snapshot2, ledger2, fetchList, metrics)
   }
 
   /** [[run]] wired to the default HTTP clients
@@ -327,14 +348,22 @@ object Pipeline {
     * then overwrites `snapshotPath` with the new triple table.
     * First run: everything is `added`. A re-publish of identical
     * content appends nothing (the diff is empty — content-idempotent
-    * by construction). Diff cost is two EXCEPT exchanges of
-    * snapshot scale; bucketing both snapshots on subject at write
-    * time co-locates them at 100 TB.
+    * by construction).
     *
-    * The new snapshot is localCheckpoint'ed up front: it feeds both
-    * EXCEPT branches and the final overwrite, and the change-log
-    * write fully materializes before the snapshot it read from is
-    * rewritten.
+    * ONE DIFF SHUFFLE: the new rows (side bit 1) and the stored
+    * snapshot's rows (side bit 2) are unioned and grouped on every
+    * triple column, OR-ing the side bits — side 1 is `added`, side 2
+    * `removed`, side 3 unchanged, and the new snapshot is every row
+    * with bit 1 set. Grouping is null-safe, as EXCEPT is (nullable
+    * `obj_lang`/`obj_datatype` match), and the written snapshot is a
+    * set even when the input repeats rows. The grouped diff is
+    * localCheckpoint'ed, so it is computed once and fully
+    * materialized before the snapshot it read from is rewritten; its
+    * [[DeltaCounts]] are observed on that checkpoint, not counted by
+    * extra jobs. First run (no stored snapshot): no shuffle — the
+    * input is checkpointed and written as is. Bucketing both
+    * snapshots on subject at write time co-locates the diff at
+    * 100 TB.
     *
     * CRASH/RETRY CONTRACT: the change log is PARTITIONED BY run_id
     * and written with dynamic partition overwrite, so a run writes
@@ -351,30 +380,45 @@ object Pipeline {
     * change-log-ahead-of-snapshot during the window;
     * [[applyChanges]]'s set semantics absorb that read. */
   def publishDelta(result: Result, snapshotPath: String,
-      changesPath: String, runId: String): Unit = {
-    import org.apache.spark.sql.functions.lit
+      changesPath: String, runId: String): DeltaCounts = {
+    import org.apache.spark.sql.functions.{bit_or, col, count, lit, when}
     val spark = result.triples.sparkSession
-    val next = result.triples.localCheckpoint()
+    val cols = result.triples.columns.map(col)
+    val side = col("side")
+    healSwap(spark, snapshotPath)
+    val sided = graft.streaming.Artifacts.readParquet(spark, snapshotPath) match {
+      case Some(prev) =>
+        result.triples.withColumn("side", lit(1))
+          .union(prev.select(cols: _*).withColumn("side", lit(2)))
+          .groupBy(cols: _*).agg(bit_or(side).as("side"))
+      case None => result.triples.withColumn("side", lit(1))
+    }
+    val seen = Observation()
+    val diff = sided.observe(seen,
+        count(when(side === 1, 1)).as("added"),
+        count(when(side === 2, 1)).as("removed"),
+        count(when(side =!= 2, 1)).as("rows"))
+      .localCheckpoint()
     try {
-      healSwap(spark, snapshotPath)
-      val prev =
-        graft.streaming.Artifacts.readParquet(spark, snapshotPath)
-      val changes = prev match {
-        case Some(p) =>
-          next.except(p).withColumn("change", lit("added"))
-            .union(p.except(next).withColumn("change", lit("removed")))
-        case None => next.withColumn("change", lit("added"))
-      }
-      changes.withColumn("run_id", lit(runId))
+      diff.filter(side =!= 3)
+        .select(cols :+ when(side === 1, "added").otherwise("removed")
+          .as("change") :+ lit(runId).as("run_id"): _*)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id")
         .parquet(changesPath)
-      atomicReplace(next, snapshotPath)
+      atomicReplace(diff.filter(side =!= 2).select(cols: _*), snapshotPath)
+      DeltaCounts(added = seen.get("added").asInstanceOf[Long],
+        removed = seen.get("removed").asInstanceOf[Long],
+        rows = seen.get("rows").asInstanceOf[Long])
     } finally {
-      org.apache.spark.sql.graftshim.ColumnBridge.freeLocalCheckpoint(next)
+      org.apache.spark.sql.graftshim.ColumnBridge.freeLocalCheckpoint(diff)
     }
   }
+
+  /** One [[publishDelta]] run's counts: change rows `added` and
+    * `removed`, and `rows` in the snapshot it wrote. */
+  final case class DeltaCounts(added: Long, removed: Long, rows: Long)
 
   /** The consumer side of [[publishDelta]]'s feed: apply one run's
     * change rows to a snapshot (drop `removed`, add `added`). By
@@ -450,8 +494,8 @@ object Pipeline {
   /** Fold a slice of the [[publishDelta]] change log onto a base
     * snapshot in ONE pass: per triple, the change with the highest
     * run_id wins (a run's diff never both adds and removes the same
-    * triple — added/removed are EXCEPT complements — so the argmax is
-    * unambiguous). Equivalent to folding the runs in order through
+    * triple — added/removed are disjoint sides of one diff — so the
+    * argmax is unambiguous). Equivalent to folding the runs in order through
     * [[applyChanges]], but one shuffle on the triple key + one
     * anti-join instead of 2·N snapshot-scale EXCEPTs — the shape that
     * survives a year of weekly runs. Requires run ids that order

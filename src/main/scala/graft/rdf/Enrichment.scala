@@ -59,13 +59,26 @@ object Enrichment {
     * anti-join deletes the refreshed subjects' old rows first. The
     * refreshed-subject set is refresh-scale (small — the TTL'd slice
     * of a dimension table), so AQE broadcasts the anti-join and the
-    * corpus-scale snapshot is scanned map-side once. */
+    * corpus-scale snapshot is scanned map-side once.
+    *
+    * SET CONTRACT: `snapshot` must be a set (no duplicate rows). The
+    * result then is one too, with no dedup shuffle: `fetched` is a
+    * set ([[fetchAll]] deduplicates), and the two unioned halves are
+    * disjoint — every fetched row's subject is anti-joined out of the
+    * snapshot. The published triples are deduplicated downstream
+    * regardless.
+    *
+    * A union has the partitions of both inputs, so a snapshot
+    * refreshed run after run would gain the fetch's partitions every
+    * run. The result is coalesced (narrow, no shuffle) to the
+    * session's shuffle width, the width a dedup shuffle would give. */
   def applyRefresh(snapshot: DataFrame, fetched: DataFrame): DataFrame = {
     val subs = fetched.select("subject").distinct()
     snapshot.join(subs, Seq("subject"), "left_anti")
       // a USING join hoists the key column to position 0 — restore
       // the snapshot's column order before the positional union
       .select(snapshot.columns.map(org.apache.spark.sql.functions.col): _*)
-      .union(fetched).dropDuplicates()
+      .union(fetched)
+      .coalesce(snapshot.sparkSession.sessionState.conf.numShufflePartitions)
   }
 }

@@ -137,38 +137,77 @@ object RdfOps {
     * tagged with a `reason` column so the fetch loop can meter both
     * populations. `ledger` is `(monument_key, age_days)` — the
     * fetched-at sidecar a production snapshot stores next to its
-    * triples. Scale shape: both joins key on `monument_key`; the
-    * ledger is dimension-scale (one row per stored monument), so AQE
-    * broadcasts it, and the export-key side — already distinct'd,
-    * key-scale — is scanned twice at trivial cost. A key is missing
-    * XOR covered, so the union is disjoint and needs no dedup. */
+    * triples. A projection of [[enrichmentLedgerPass]], which
+    * [[graft.Pipeline.runIncremental]] materializes once and also
+    * derives the next ledger from. */
   def enrichmentFetchList(exportKeys: DataFrame, ledger: DataFrame,
+      ttlDays: Int = 7): DataFrame =
+    enrichmentLedgerPass(exportKeys, ledger, ttlDays)
+      .filter(col("reason").isin(Missing, Stale))
+      .select(col("monument_key"), col("reason"))
+
+  /** `reason` tags of [[enrichmentLedgerPass]]: fetch because the
+    * ledger never saw the key, fetch because its last fetch is past
+    * the TTL, or serve the stored enrichment. */
+  val Missing = "missing"
+  val Stale = "stale"
+  val Fresh = "fresh"
+
+  /** The keyed LEDGER PASS behind [[enrichmentFetchList]]: one
+    * full-outer join of the export keys against the ledger,
+    * pre-aggregated to `max(age_days)` per key, so duplicated ledger
+    * keys collapse to their oldest fetch. One row per key on either
+    * side, `(monument_key, age_days, reason)`:
+    *
+    *   - `reason` is [[Missing]], [[Stale]] or [[Fresh]] for an
+    *     export key, null for a ledger key outside the export;
+    *   - `age_days` is the ledger's `max(age_days)` (null when the
+    *     ledger never saw the key or holds only null ages; a null age
+    *     is never stale).
+    *
+    * Every row is a row of the next ledger (attempted keys reset to
+    * age 0, the rest keep their age), so a caller that materializes
+    * this pass once gets the fetch list, both fetch counts and the
+    * next ledger from it with no further join. Scale shape: key-scale
+    * on both sides — one aggregate over the dimension-scale ledger
+    * and one join on `monument_key`. */
+  def enrichmentLedgerPass(exportKeys: DataFrame, ledger: DataFrame,
       ttlDays: Int = 7): DataFrame = {
-    val missing = exportKeys
-      .join(ledger.select("monument_key"), Seq("monument_key"), "left_anti")
-      .withColumn("reason", lit("missing"))
-    val stale = exportKeys
-      .join(ledger.filter(col("age_days") >= ttlDays)
-        .select("monument_key"), Seq("monument_key"), "left_semi")
-      .withColumn("reason", lit("stale"))
-    missing.union(stale)
+    val stored = ledger.groupBy("monument_key")
+      .agg(max("age_days").as("age_days"))
+      .withColumn("stored", lit(true))
+    exportKeys.select(col("monument_key"), lit(true).as("exported"))
+      .join(stored, Seq("monument_key"), "full_outer")
+      .select(col("monument_key"), col("age_days"),
+        when(col("exported"), when(col("stored").isNull, Missing)
+          .when(col("age_days") >= ttlDays, Stale)
+          .otherwise(Fresh)).as("reason"))
   }
 
   /** O14+O15+O16 — the enrichment stage (reference:
     * src/transform_datamodel.py:88–109): union the fetched enrichment
     * triples into the graph, then for every rijksmonumentnummer triple
     * whose subject is typed `ceo#Rijksmonument` in the *enriched*
-    * graph, derive `(subj, sdo:sameAs, obj)`.
+    * graph, derive `(subj, sdo:sameAs, obj)`. Set semantics via one
+    * full-width dedup at the end ([[enrichRows]] is the same stage
+    * without it).
     *
     * The typed-subject set is dimension-scale (one row per monument)
     * → broadcast left-semi join; the enriched graph itself is never
     * shuffled except by the final set-union dedup.
     */
-  def enrich(graph: DataFrame, fetched: DataFrame): DataFrame = {
-    // One full-width dedup shuffle at the end, not one per union: the
-    // intermediate set-semantics dedup the reference gets from rdflib
-    // (transform:102) is subsumed by the final one — the typed-subject
-    // set only needs its own narrow distinct on `subject`.
+  def enrich(graph: DataFrame, fetched: DataFrame): DataFrame =
+    enrichRows(graph, fetched).dropDuplicates()
+
+  /** [[enrich]]'s rows before the set-semantics dedup: for a caller
+    * that renames/deletes predicates afterwards and must deduplicate
+    * AFTER the rename (a renamed predicate can collide with a triple
+    * already present), so that one dedup covers both. */
+  def enrichRows(graph: DataFrame, fetched: DataFrame): DataFrame = {
+    // the intermediate set-semantics dedup the reference gets from
+    // rdflib (transform:102) is subsumed by the caller's final one —
+    // the typed-subject set only needs its own narrow distinct on
+    // `subject`
     val combined = graph.union(fetched)
     val rmnr = graph.filter(col("predicate") === CeoRijksmonumentnummer &&
       col("obj_kind") === "literal")
@@ -181,7 +220,7 @@ object RdfOps {
       .select(col("graph"), col("subject"), col("subject_kind"),
         lit(SdoSameAs).as("predicate"), col("obj_value"),
         col("obj_kind"), col("obj_lang"), col("obj_datatype"))
-    combined.union(sameAs).dropDuplicates()
+    combined.union(sameAs)
   }
 
   /** SPARQL property-path reachability `p{1,maxHops}` (the bounded

@@ -95,4 +95,48 @@ class PipelineDeltaSpec extends AnyFunSuite {
     // consumer folding still reproduces v2
     assert(rows(Pipeline.applyChanges(v1, log2)) == rows(v2))
   }
+
+  test("publishDelta's one-shuffle diff equals the EXCEPT diff over " +
+    "null-bearing and repeated rows; the snapshot is a set; counts " +
+    "are returned") {
+    val base = Files.createTempDirectory("pub-diff").toFile.getAbsolutePath
+    val snap = s"$base/snapshot"
+    val log = s"$base/changes"
+    val nul: String = null
+    def t(s: String, v: String, lang: String, dt: String) =
+      ("default", s"http://x/$s", "iri", rdf.Vocab.DctermsTitle, v,
+        "literal", lang, dt)
+    val v1 = TestSpark.triples(Seq(
+      t("1", "a", nul, nul), t("2", "b", "nl", nul), t("3", "c", nul,
+        "http://www.w3.org/2001/XMLSchema#string"), t("4", "d", nul, nul)))
+    // v2 repeats rows, keeps the null-bearing 1 and 3, drops 2 and 4,
+    // re-types 4, and adds 5 (null-bearing) twice
+    val v2 = TestSpark.triples(Seq(
+      t("1", "a", nul, nul), t("1", "a", nul, nul),
+      t("3", "c", nul, "http://www.w3.org/2001/XMLSchema#string"),
+      t("4", "d", "en", nul), t("5", "e", nul, nul), t("5", "e", nul, nul)))
+    val c1 = Pipeline.publishDelta(res(v1), snap, log, "run1")
+    assert(c1 == Pipeline.DeltaCounts(added = 4, removed = 0, rows = 4))
+    val c2 = Pipeline.publishDelta(res(v2), snap, log, "run2")
+    val cols = v1.columns.map(col)
+    val change = spark.read.parquet(log).filter(col("run_id") === "run2")
+    def sorted(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    val added = v2.except(v1)
+    val removed = v1.except(v2)
+    // exactly the EXCEPT rows, each once
+    assert(sorted(change.filter(col("change") === "added").select(cols: _*)) ==
+      sorted(added))
+    assert(sorted(change.filter(col("change") === "removed").select(cols: _*)) ==
+      sorted(removed))
+    assert(added.count() == 2 && removed.count() == 2)
+    // the written snapshot is v2 as a set
+    val written = spark.read.parquet(snap).select(cols: _*)
+    assert(sorted(written) == sorted(v2.distinct()))
+    assert(c2 == Pipeline.DeltaCounts(added = 2, removed = 2, rows = 4))
+    // an identical re-publish: no change rows, counts agree
+    assert(Pipeline.publishDelta(res(v2), snap, log, "run3") ==
+      Pipeline.DeltaCounts(added = 0, removed = 0, rows = 4))
+  }
 }
+

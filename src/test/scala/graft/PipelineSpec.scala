@@ -121,4 +121,32 @@ class PipelineSpec extends AnyFunSuite {
     val backPq = spark.read.parquet(pdir.getAbsolutePath)
     assert(backPq.collect().toSet == result.triples.collect().toSet)
   }
+
+  test("set semantics after rename: a renamed predicate that collides " +
+    "with an existing triple publishes one row, batch and incremental") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val page =
+      """@prefix dcterms: <http://purl.org/dc/terms/> .
+        |@prefix sdo: <https://schema.org/> .
+        |<http://x/9> dcterms:title "X" .
+        |<http://x/9> sdo:name "X" .
+        |<http://x/9> sdo:name "Y" .
+        |""".stripMargin
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.select("predicate", "obj_value").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    val expected = Seq((SdoName, "X"), (SdoName, "Y"))
+    val batch = Pipeline.run(spark,
+      fetchPage = p => if (p == 1) page else "",
+      fetchMonument = _ => Seq.empty, env = env)
+    assert(rows(batch.triples) == expected)
+    val incremental = Pipeline.runIncremental(spark,
+      fetchPage = p => if (p == 1) page else "",
+      fetchMonument = _ => Seq.empty, env = env,
+      storedSnapshot = TestSpark.triples(Seq.empty),
+      ledger = Seq.empty[(String, Int)].toDF("monument_key", "age_days"))
+    assert(rows(incremental.triples) == expected)
+  }
 }
+

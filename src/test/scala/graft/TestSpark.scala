@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all specs (Spark startup is ~5 s;
-  * per-suite sessions would dominate test time). */
+  * per-suite sessions would dominate test time): the engine's
+  * [[GraftSession]] at `local[2]` with 2 shuffle partitions, so specs
+  * run with the shipped confs and log at WARN. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.start("2", "spark.app.name" -> "graft-test")
 
   /** Triple-table DataFrame from flat tuples in Model.columns order
     * (nulls allowed in the two trailing nullable columns). */
