@@ -44,7 +44,7 @@ import graft.{SnapshotMemo, Tables}
   *
   * The r17 layout paid, per doubling level, one exchange+sort of the
   * shifted side plus one redundant repartition+sort before the
-  * checkpoint; measured (SaMicro/ProfileQ, this round) the whole SA
+  * checkpoint; measured (OPTIMIZATION_r18.md) the whole SA
   * family was ~15 position-scale exchange+sort+checkpoint cycles for
   * ~34 s cold at sf0.1, with each atomic op ~1 s. The window+halo
   * form removes every per-level exchange.
@@ -82,7 +82,7 @@ object SuffixArray {
     * ([[graft.LoopConf.noAqe]]): under AQE, `Dataset.localCheckpoint`
     * captures the adaptive plan's partitioning as
     * `UnknownPartitioning` and its ordering as empty (measured,
-    * SaPlanProbe) — so a "pinned" block-clustered checkpoint
+    * OPTIMIZATION_r18.md) — so a "pinned" block-clustered checkpoint
     * silently loses its layout and EVERY downstream window/zipper
     * join re-exchanges and re-sorts the corpus. With AQE off during
     * the build, the LogicalRDD carries hash(block)/[block, gpos ASC]
@@ -178,12 +178,12 @@ object SuffixArray {
           length(col("text")).cast(LongType).as("dlen"))
       // pin the range placement so the per-partition totals and the
       // main pass see the same pid ↔ row assignment
-      val ranged = docs
+      val rangedChk = docs
         .repartitionByRange(math.max(2, s.sparkContext.defaultParallelism),
           col("doc_id"))
         .sortWithinPartitions("doc_id")
         .localCheckpoint()
-        .withColumn("_pid", spark_partition_id())
+      val ranged = rangedChk.withColumn("_pid", spark_partition_id())
       val pidTotals = ranged.groupBy(col("_pid"))
         .agg(sum(col("dlen") + 1L).as("_t"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -203,7 +203,7 @@ object SuffixArray {
       // trailing empty-string artifact (Java regex split semantics)
       // — dropped by the i <= dlen filter; the appended 0x01 char
       // lands at i = dlen with ascii = 1, the sentinel row.
-      chkDisk(clusterByBlock(offs
+      val out = chkDisk(clusterByBlock(offs
         .select(col("doc_id"), col("dlen"), col("off"),
           posexplode(split(concat(col("text"), lit("\u0001")), ""))
             .as(Seq("i", "ch")))
@@ -214,6 +214,11 @@ object SuffixArray {
           (col("off") + col("i")).as("gpos"),
           ascii(col("ch")).cast(LongType).as("code"))
         .withColumn("block", expr(s"gpos div ${b}L")), p))
+      // `ranged` holds the full corpus text; the eager checkpoint
+      // above no longer needs it
+      org.apache.spark.sql.graftshim.ColumnBridge
+        .freeLocalCheckpoint(rangedChk)
+      out
     } }
 
   // ----------------------------------------------------------------

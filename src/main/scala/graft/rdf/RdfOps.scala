@@ -1,7 +1,8 @@
 package graft.rdf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.IsValidIri
 import Vocab._
@@ -226,17 +227,19 @@ object RdfOps {
   /** SPARQL property-path reachability `p{1,maxHops}` (the bounded
     * form of `dcterms:relation+`) — a recursive query Spark SQL
     * cannot express (no recursive CTE); implemented as SEMI-NAIVE
-    * Datalog iteration, the standard distributed transitive-closure
-    * shape: each round joins only the FRONTIER (pairs first reached
-    * last round) against the edge table, so per-round work is
-    * O(frontier × out-degree) — never O(all reached pairs). The BFS
-    * invariant (a pair is emitted the first round it appears) makes
-    * the reported `hops` the MINIMUM path length without any min-
-    * aggregation over enumerated paths. Cycles are handled exactly:
-    * a pair already reached is dropped by the anti-join, so the
-    * frontier is monotone-decreasing on a finite node set and the
-    * loop always terminates — and (s, s, c) rows for cycles back to
-    * a seed ARE emitted, matching SPARQL/recursive-CTE semantics.
+    * Datalog iteration ([[walk]]), the standard distributed
+    * transitive-closure shape: each round joins only the FRONTIER
+    * (pairs first reached last round) against the edge table, so
+    * per-round work is O(frontier × out-degree) — never O(all reached
+    * pairs). The BFS invariant (a pair is emitted the first round it
+    * appears) makes the reported `hops` the MINIMUM path length
+    * without any min-aggregation over enumerated paths. Cycles are
+    * handled exactly: a pair already reached is dropped by the
+    * anti-join, so the frontier is monotone-decreasing on a finite
+    * node set and the loop always terminates — and (s, s, c) rows for
+    * cycles back to a seed ARE emitted, matching SPARQL/recursive-CTE
+    * semantics (the seed self-pairs start the walk but are not
+    * excluded from it).
     *
     * Scale shape (100 TB): the edge table is scanned once per round
     * and hash-joined on `src`; a store that bucket-partitions edges
@@ -249,25 +252,70 @@ object RdfOps {
     * @return (src, dst, hops) with hops = min path length in [1, maxHops]
     */
   def reachable(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
-    walk(edges, seeds, Some(maxHops))
+    walk(edges, seeds.select(col("src"), col("src").as("dst")).distinct(),
+      None, Some(maxHops))
 
-  /** SPARQL `p+` — the UNBOUNDED closure: the same semi-naive loop
-    * run to FIXPOINT (empty frontier), no hop cap. Termination is
-    * structural, not configured: every round's anti-join keeps only
-    * never-seen (src, dst) pairs, the pair space over a finite node
-    * set is finite, so the frontier must empty — cycles included
-    * (a cycle's pairs are each discovered once, then suppressed).
-    * Round COUNT is data-driven: it equals the graph's seed-to-
-    * anywhere diameter, so `+` over a bounded-diameter graph (the
-    * common shape — hierarchies, doubling indexes) costs O(diameter)
-    * rounds regardless of node count. */
-  def reachablePlus(edges: DataFrame, seeds: DataFrame): DataFrame =
-    walk(edges, seeds, None)
+  /** SPARQL `p+` — the UNBOUNDED `(src, dst)` PAIR closure from
+    * `seeds`, the engine's one operator for unbounded pair sets (the
+    * SPARQL `+`/`*` binding set; min-hop consumers use [[reachable]]).
+    *
+    * String keys (IRIs) run behind a NODE DICTIONARY: each distinct
+    * node gets a long id (monotonically_increasing_id over a
+    * checkpointed distinct — partition-deterministic once pinned), the
+    * ladder runs on long pairs and the result is decoded once at the
+    * end, so every squaring round's join + set-dedup exchanges, hashes
+    * and compares 8-byte longs instead of ~40–60-byte IRI strings.
+    * The dict build and the decode are one-off edge/closure-scale
+    * passes outside the ladder's AQE-off scope, so the planner picks
+    * their join strategy from runtime sizes. Numeric keys (the
+    * ontology chain's `p_size` ints) are already narrow and run the
+    * ladder directly: the key TYPE selects the encode, not a size.
+    *
+    * Ownership: the result is an eager serialized checkpoint that the
+    * CALLER owns — a memoizing caller stores it as is and must not
+    * re-checkpoint it (a second copy would pin the closure twice for
+    * the session); every interior checkpoint is freed before return.
+    *
+    * @param edges (src, dst) edge table; both columns of one type
+    * @param seeds (src) sources; pass every edge source for the
+    *              all-sources closure
+    * @return (src, dst), duplicate-free */
+  def reachablePlusPairs(edges: DataFrame, seeds: DataFrame): DataFrame =
+    if (edges.schema("src").dataType != StringType)
+      ladder(edges, seeds, edges.count())
+    else {
+    // the edge count the ladder sizes itself by rides on the dict
+    // build, which scans the edges anyway
+    val seen = Observation()
+    val dict = chkSerW(edges.observe(seen, count(lit(1)).as("n"))
+      .select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
+      .withColumn("nid", monotonically_increasing_id()))
+    val eN = edges
+      .join(dict.select(col("node").as("src"), col("nid").as("_s")),
+        Seq("src"))
+      .join(dict.select(col("node").as("dst"), col("nid").as("_t")),
+        Seq("dst"))
+      .select(col("_s").as("src"), col("_t").as("dst"))
+    val seedsN = seeds
+      .join(dict.select(col("node").as("src"), col("nid")), Seq("src"))
+      .select(col("nid").as("src"))
+    val pN = ladder(eN, seedsN, observedRows(seen))
+    val out = chkSerW(pN
+      .join(dict.select(col("nid").as("src"), col("node").as("_sv")),
+        Seq("src"))
+      .join(dict.select(col("nid").as("dst"), col("node").as("_dv")),
+        Seq("dst"))
+      .select(col("_sv").as("src"), col("_dv").as("dst")))
+    shim.freeLocalCheckpoint(pN)
+    shim.freeLocalCheckpoint(dict)
+    out
+    }
 
-  /** Unbounded `p+` PAIR closure (no hop counts) by the EDGE-STEP
-    * LADDER — O(log diameter) rounds like path doubling, but the
-    * relation squared each round is the EXACT-LENGTH step set
-    * E_{2^k} (paths of length exactly 2^k), never the reach set:
+  /** [[reachablePlusPairs]]' algorithm, the EDGE-STEP LADDER —
+    * O(log diameter) rounds like path doubling, but the relation
+    * squared each round is the EXACT-LENGTH step set E_{2^k} (paths
+    * of length exactly 2^k), never the reach set:
     *
     *   P_1 = seeds ∘ E;   E_{2^k} = E_{2^{k-1}} ∘ E_{2^{k-1}}
     *   P_{k+1} = P_k ∪ (P_k ∪ id_seeds) ∘ E_{2^k}
@@ -281,47 +329,48 @@ object RdfOps {
     * Contradiction ⟹ converged, with no dependence on knowing the
     * diameter.
     *
-    * Work/memory vs the alternatives: the frontier walk
-    * ([[reachablePlus]]) pays one cluster barrier per HOP — measured
-    * 44 rounds × ~0.6 s of fixed per-round driver cost on the sf0.1
-    * relation graph (ClosureProbe), 27 s of pure round overhead for
-    * a 308k-pair closure. Reach-set squaring
-    * ([[reachablePlusDoubling]]) is O(log d) rounds but squares the
-    * CLOSURE — Θ(L³) chain intermediates, the measured capped-heap
-    * OOM at sf1. The ladder keeps log-depth while squaring only
-    * exact-length step sets: each E_{2^k} is bounded by the pair
+    * Work/memory vs the alternatives: the frontier walk pays one
+    * cluster barrier per HOP — measured 44 rounds × ~0.6 s of fixed
+    * per-round driver cost on the sf0.1 relation graph, 27 s of pure
+    * round overhead for a 308k-pair closure. Reach-set squaring is
+    * O(log d) rounds but squares the CLOSURE — Θ(L³) chain
+    * intermediates, the measured capped-heap OOM at sf1/3 GB (see
+    * OPTIMIZATION_r17.md). The ladder keeps log-depth while squaring
+    * only exact-length step sets: each E_{2^k} is bounded by the pair
     * closure itself (every exact-length pair is a closure pair), the
     * squaring join's intermediates are one row per (pair, midpoint at
     * exactly half) — the single fixed decomposition point, not every
     * decomposition — and superseded E/P checkpoints are freed each
-    * phase, so at most three pair-scale tables are live at once
-    * (capped-heap safe: re-measured with ClosureProbe at 3 GB,
-    * see OPTIMIZATION_r17.md). Use it for STORED pair-closure builds;
-    * [[reachablePlus]] remains the path for MIN-HOP consumers. */
-  def reachablePlusPairs(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
+    * phase, so at most three pair-scale tables are live at once. */
+  private def ladder(edges: DataFrame, seeds: DataFrame,
+      edgeRows: Long): DataFrame = {
     // the noAqe scope covers the initial edge/seed materializations
     // too — they are the same fixed-shape checkpoint jobs as the
     // phase interiors (measured: scoping only the while-loop left
     // ~2 s of AQE sub-jobs on the doubling fixture's build)
     graft.LoopConf.noAqe(edges.sparkSession) {
-    val id = seeds.select(col("src"), col("src").as("dst")).distinct()
-    // with AQE off nothing coalesces the initial checkpoints, so
-    // their width must be sized too — from one cheap map-only edge
-    // count (the pair count that sizes the interior needs `p`, which
-    // doesn't exist yet); every phase then scans em/p at a width
-    // that matches their size instead of 32 near-empty partitions
-    // (measured: unsized prep cost ~11 s of 130 ms near-empty tasks
-    // across the phases on the doubling fixture)
-    val ec = math.max(edges.count(), 1L)
     var em: DataFrame = null
+    var id: DataFrame = null
     var p: DataFrame = null
-    graft.LoopConf.sized(edges.sparkSession, ec) {
+    var n = 0L
+    // with AQE off nothing coalesces the initial checkpoints, so
+    // their width must be sized too — from the edge count (the pair
+    // count that sizes the interior needs `p`, which doesn't exist
+    // yet); every phase then scans em/p at a width that matches
+    // their size instead of 32 near-empty partitions (measured:
+    // unsized prep cost ~11 s of 130 ms near-empty tasks across the
+    // phases on the doubling fixture). The seed self-pairs are
+    // checkpointed too: every phase reads them, and their lineage
+    // (a seed scan, plus the dictionary join for encoded keys) would
+    // otherwise re-run each phase.
+    graft.LoopConf.sized(edges.sparkSession, math.max(edgeRows, 1L)) {
       em = chkSerW(edges.select(col("src"), col("dst")).distinct())
-      p = chkSerW(em.join(
-        seeds.select(col("src")).distinct(), Seq("src"), "left_semi"))
+      id = chkSerW(seeds.select(col("src"), col("src").as("dst")).distinct())
+      val (p0, n0) = chkCounted(
+        em.join(id.select(col("src")), Seq("src"), "left_semi"))
+      p = p0
+      n = n0
     }
-    var n = p.count()
     var done = n == 0
     // interior exchanges sized to the measured pair count
     // (graft.LoopConf discipline); the pair set grows toward the
@@ -331,9 +380,7 @@ object RdfOps {
     // checkpointed inputs at a measured width, and AQE's per-stage
     // re-optimization + sub-job materialization tripled the ladder's
     // wall on the doubling fixture (rdf_path_inv_plus cold: 57 jobs /
-    // 8.4 s with AQE vs 24 jobs / 3.2 s without — identical result;
-    // r16's frontier walk was 3.3 s, so this removes the whole r17
-    // fullClosure regression, VERDICT item 1).
+    // 8.4 s with AQE vs 24 jobs / 3.2 s without — identical result).
     graft.LoopConf.sized(edges.sparkSession, math.max(n, 1L)) {
     while (!done) {
       val em2 = chkSerW(em.as("l")
@@ -345,8 +392,7 @@ object RdfOps {
       val stepped = p.union(id).as("l")
         .join(em.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      val pNew = chkSerW(p.union(stepped).distinct())
-      val m = pNew.count()
+      val (pNew, m) = chkCounted(p.union(stepped).distinct())
       if (m == n) {
         shim.freeLocalCheckpoint(pNew)
         done = true
@@ -358,137 +404,15 @@ object RdfOps {
     }
     }
     shim.freeLocalCheckpoint(em)
+    shim.freeLocalCheckpoint(id)
     p
     }
   }
 
-  /** [[reachablePlusPairs]] behind a NODE DICTIONARY: assign each
-    * distinct node a stable long id (monotonically_increasing_id
-    * over a checkpointed distinct — partition-deterministic once
-    * pinned), run the ladder on long pairs, decode back at the end.
-    * Every squaring round's join + set-dedup then exchanges, hashes
-    * and compares 8-byte longs instead of IRI strings (~40–60 bytes
-    * plus string equality on the relation fixture) — and the ladder
-    * is compute-bound in exactly those operators (ClosureProbe:
-    * 9.3 s → see OPTIMIZATION_r18.md for the encoded number). The
-    * dict build and the single decode are one-off edge/closure-scale
-    * passes OUTSIDE the ladder's AQE-off scope, so the planner picks
-    * their join strategy from runtime sizes (broadcast at vocabulary
-    * scale, shuffle at corpus scale). Returns a checkpointed frame;
-    * callers must NOT re-checkpoint. */
-  def reachablePlusPairsEncoded(edges: DataFrame,
-      seeds: DataFrame): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    val dict = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .withColumn("nid", monotonically_increasing_id())
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val eN = edges
-      .join(dict.select(col("node").as("src"), col("nid").as("_s")),
-        Seq("src"))
-      .join(dict.select(col("node").as("dst"), col("nid").as("_t")),
-        Seq("dst"))
-      .select(col("_s").as("src"), col("_t").as("dst"))
-    val seedsN = seeds
-      .join(dict.select(col("node").as("src"), col("nid")), Seq("src"))
-      .select(col("nid").as("src"))
-    val pN = reachablePlusPairs(eN, seedsN)
-    val out = pN
-      .join(dict.select(col("nid").as("src"), col("node").as("_sv")),
-        Seq("src"))
-      .join(dict.select(col("nid").as("dst"), col("node").as("_dv")),
-        Seq("dst"))
-      .select(col("_sv").as("src"), col("_dv").as("dst"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    shim.freeLocalCheckpoint(pN)
-    shim.freeLocalCheckpoint(dict)
-    out
-  }
-
-  /** Unbounded ALL-SOURCES `p+` pair closure by PATH DOUBLING —
-    * O(log diameter) rounds instead of the frontier walk's
-    * O(diameter): after round r the pair set holds every path of
-    * length ≤ 2^r, and squaring the relation (pairs ∘ pairs)
-    * doubles the horizon each round.
-    *
-    * This is the classic WORK-vs-DEPTH tradeoff, and the engine's
-    * measurements put real numbers on it ([[graft.tools.ClosureProbe]],
-    * the capped-heap repro distilled from the sf1 rehearsal's OOM):
-    * the frontier walk discovers each pair ONCE (work = O(closure),
-    * memory = frontier-bounded) but pays one cluster barrier per
-    * hop; squaring rediscovers a pair once per path DECOMPOSITION —
-    * Θ(L³) join intermediates per L-hop chain segment — so on the
-    * ~45-hop-chain relation graph doubling wins at toy scale where
-    * barriers dominate (10.0 s vs 36.3 s at sf0.1) and LOSES at
-    * capped-heap scale where work and memory dominate (OOM at 3 GB
-    * vs the frontier's 80.3 s at sf1). Use doubling for interactive
-    * queries over pair sets small enough to square; STORED-artifact
-    * builds and capped-heap jobs use [[reachablePlus]] — which is
-    * also the only choice when MIN-HOP counts are needed (doubling
-    * computes reachability, not shortest paths). Pair set
-    * localCheckpoints serialized+spillable each round; superseded
-    * rounds' blocks are freed eagerly. */
-  def reachablePlusDoubling(edges: DataFrame): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    // SERIALIZED + spillable checkpoints: a round holds two pair-set
-    // states plus the squaring join's intermediates; deserialized
-    // row caches tripled the resident size and OOM'd a capped heap
-    // at 10× scale (caught by the sf1 rehearsal)
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var pairs = chk(edges.select(col("src"), col("dst")).distinct())
-    var n = pairs.count()
-    var done = false
-    // interior exchanges sized to the measured pair count
-    // (graft.LoopConf discipline; vocabulary-scale callers run the
-    // whole squaring loop at width 1 instead of session width).
-    // AQE off in the interior — same measurement as
-    // [[reachablePlusPairs]]: fixed-shape phases over checkpointed
-    // inputs at a measured width leave AQE nothing to adapt.
-    graft.LoopConf.sized(edges.sparkSession, n) {
-    graft.LoopConf.noAqe(edges.sparkSession) {
-    while (!done) {
-      val stepped = pairs.as("l")
-        .join(pairs.as("r"), col("l.dst") === col("r.src"))
-        .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      val next = chk(pairs.union(stepped).distinct())
-      val m = next.count()
-      if (m == n) {
-        // fixpoint: doubling the horizon found nothing new
-        shim.freeLocalCheckpoint(next)
-        done = true
-      } else {
-        shim.freeLocalCheckpoint(pairs)
-        pairs = next
-        n = m
-      }
-    }
-    }
-    }
-    pairs
-  }
-
-  /** SPARQL `p*` — `p+` plus the ZERO-LENGTH paths: every seed
-    * reaches itself at hop 0. A cycle returning to its seed would
-    * also surface from `p+` as (s, s, cycleLen); SPARQL's distinct
-    * path semantics collapse the two, and `hops` is documented as
-    * the MINIMUM path length, so the hop-0 self row wins and the
-    * cycle row is anti-joined away. */
-  def reachableStar(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val self = seeds.select(col("src"), col("src").as("dst"),
-      lit(0).as("hops")).distinct()
-    val plus = reachablePlus(edges, seeds)
-    self.union(
-      plus.join(self.select("src", "dst"), Seq("src", "dst"), "left_anti")
-        .select(col("src"), col("dst"), col("hops")))
-  }
-
   /** INCREMENTAL closure maintenance for `p+` — the weekly-delta
-    * form of [[reachablePlus]]: given the stored pair closure of the
-    * base edge set and a batch of NEW edges, produce the closure of
-    * the union WITHOUT recomputing from scratch. Pair semantics
+    * form of [[reachablePlusPairs]]: given the stored pair closure of
+    * the base edge set and a batch of NEW edges, produce the closure
+    * of the union WITHOUT recomputing from scratch. Pair semantics
     * (src, dst) — the SPARQL `+`/`*` binding set; min-hop counts are
     * not maintained incrementally (a new edge can shorten existing
     * paths; a consumer needing hops recomputes, a consumer needing
@@ -498,68 +422,28 @@ object RdfOps {
     * least one new edge (u, v), and its prefix up to u is already in
     * the stored closure (or u IS a seed). So the initial frontier is
     * exactly {(s, v) : (s, u) ∈ closure ∪ seed-self, (u, v) ∈ ΔE}
-    * minus already-known pairs, and the walk then continues over the
-    * UNION edge set (new paths may chain through further new edges).
+    * minus already-known pairs, and [[walk]] then continues from it
+    * over the UNION edge set (new paths may chain through further new
+    * edges), excluding the stored closure and the frontier itself.
     * Work is O(affected pairs), not O(closure): an empty or
-    * irrelevant ΔE converges in zero rounds.
+    * irrelevant ΔE converges in one empty round.
     *
-    * Scale shape: the stored closure is scanned twice (delta seeding
-    * + each round's anti-join) — the same accepted semi-naive cost
-    * as the base walk; ΔE is batch-scale and drives every join. */
+    * Scale shape: the stored closure is scanned by the delta seeding
+    * and by each round's anti-join — the same accepted semi-naive
+    * cost as the base walk; ΔE is batch-scale and drives every join. */
   def reachablePlusDelta(edges: DataFrame, deltaEdges: DataFrame,
       seeds: DataFrame, closure: DataFrame): DataFrame = {
-    // union edge relation checkpointed once for the delta walk
-    // (same per-round rescan argument as [[walk]]); freed on return
-    val allE = chkSerW(edges.union(deltaEdges)
-      .select(col("src").as("e_src"), col("dst").as("e_dst")))
     val known = closure.select(col("src"), col("dst"))
     // who can reach a new edge's tail: stored pairs + seed hop-0
     val reachers = known
       .union(seeds.select(col("src"), col("src").as("dst")))
     val de = deltaEdges.select(col("src").as("u"), col("dst").as("v"))
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    // same per-round discipline as [[walk]]: lazy checkpoints driven
-    // by count() — one job per round. AQE stays ON here (unlike the
-    // ladder): the anti-join's fresh-frontier side is runtime-tiny
-    // and AQE converts the join to broadcast — measured 2x task time
-    // with it off (static planning keeps sort-merge over the
-    // checkpoint-backed sides).
-    graft.LoopConf.sized(edges.sparkSession, known.count()) {
-    var frontier = reachers.join(de, reachers("dst") === col("u"))
+    val frontier = chkSerW(reachers.join(de, reachers("dst") === col("u"))
       .select(reachers("src"), col("v").as("dst")).distinct()
-      .join(known, Seq("src", "dst"), "left_anti")
-      .localCheckpoint(false)
-    var freshN = frontier.count()
-    // same bounded-plan discipline as [[walk]]: the stored closure
-    // stays ONE branch; per-round fresh frames compact every
-    // CompactEvery rounds so the anti-join's plan never grows with
-    // round count
-    var parts = Vector(frontier)
-    def reached: DataFrame = parts.foldLeft(known)(_.union(_))
-    while (freshN > 0L) {
-      val next = frontier.join(allE, frontier("dst") === col("e_src"))
-        .select(frontier("src"), col("e_dst").as("dst"))
-        .distinct()
-      val fresh = next.join(reached, Seq("src", "dst"), "left_anti")
-        .localCheckpoint(false)
-      freshN = fresh.count()
-      if (freshN > 0L) {
-        parts :+= fresh
-        frontier = fresh
-        if (parts.size >= CompactEvery) {
-          val prefix = parts.dropRight(1)
-          val compacted = chkSerW(prefix.reduce(_.union(_)))
-          prefix.foreach(shim.freeLocalCheckpoint)
-          parts = Vector(compacted, parts.last)
-        }
-      } else {
-        shim.freeLocalCheckpoint(fresh)
-      }
-    }
-    val out = reached
-    shim.freeLocalCheckpoint(allE)
-    out
-    }
+      .join(known, Seq("src", "dst"), "left_anti"))
+    val known2 = known.union(frontier)
+    known2.union(walk(edges.union(deltaEdges), frontier, Some(known2), None)
+      .select(col("src"), col("dst")))
   }
 
   /** Compaction width of the walk's reached-set plan: the union of
@@ -577,44 +461,65 @@ object RdfOps {
     * unchanged. */
   private val CompactEvery = 8
 
+  private def shim = org.apache.spark.sql.graftshim.ColumnBridge
+
   private def chkSerW(df: DataFrame): DataFrame = df.localCheckpoint(true,
     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
-  private def walk(edges: DataFrame, seeds: DataFrame,
-      maxHops: Option[Int]): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
+  /** [[chkSerW]] plus the checkpoint's row count, observed on the
+    * checkpoint's own job instead of a second job re-reading it. */
+  private def chkCounted(df: DataFrame): (DataFrame, Long) = {
+    val seen = Observation()
+    val out = chkSerW(df.observe(seen, count(lit(1)).as("n")))
+    (out, observedRows(seen))
+  }
+
+  /** The row count observed as `n`. The optimizer drops the
+    * observation of a plan it proves empty, leaving no metric at
+    * all — that is zero rows. */
+  private def observedRows(seen: Observation): Long =
+    seen.get.getOrElse("n", 0L).asInstanceOf[Long]
+
+  /** The one FRONTIER walk (semi-naive rounds) behind [[reachable]]
+    * and [[reachablePlusDelta]]: starting from the `start` pairs,
+    * round d joins the frontier to `edges` and keeps the pairs found
+    * neither in `exclude` nor in an earlier round, tagged `hops = d`.
+    * `start` itself is not excluded unless the caller includes it in
+    * `exclude`, so a cycle back to a seed is discovered as a fresh
+    * (s, s, c) pair. Stops at an empty round or after `maxHops`.
+    * Returns (src, dst, hops) for the walked pairs only. */
+  private def walk(edges: DataFrame, start: DataFrame,
+      exclude: Option[DataFrame], maxHops: Option[Int]): DataFrame = {
     // the edge relation is CHECKPOINTED once for the walk: every
     // round joins against it, and re-running the scan+filter lineage
     // per round paid a parquet scan per hop (measured ~40% of
     // rdf_reachable's cold task time). Serialized+spillable, freed
-    // before return — same transient footprint the per-round scan
-    // already had in flight.
-    val e = chkSerW(edges.select(col("src").as("e_src"),
+    // before return; its row count rides on the checkpoint job.
+    val (e, ec) = chkCounted(edges.select(col("src").as("e_src"),
       col("dst").as("e_dst")))
-    val empty = seeds.select(col("src"), col("src").as("dst"),
-      lit(0).as("hops")).limit(0)
-    // frontier starts at the seeds themselves (hop 0) but those self
-    // rows are NOT in `reached`: a cycle returning to its seed must
-    // be discovered as a fresh (s, s, c) pair, not suppressed.
-    var frontier = seeds.select(col("src"), col("src").as("dst")).distinct()
+    val empty = start.select(col("src"), col("dst"), lit(0).as("hops"))
+      .limit(0)
+    var frontier = start.select(col("src"), col("dst"))
     // reached = union of `parts`: each round appends its fresh frame;
     // every CompactEvery frames the union is folded into one
     // checkpoint and the superseded frames' blocks are freed.
     var parts = Vector.empty[DataFrame]
     def reached: DataFrame =
       if (parts.isEmpty) empty else parts.reduce(_.union(_))
-    val dbg = sys.env.contains("SPARK_GRAFT_WALK_DEBUG")
+    def seen: DataFrame = {
+      val r = reached.select("src", "dst")
+      exclude.fold(r)(_.union(r))
+    }
     var d = 1
-    // one edge-count job (over the checkpoint — cheap) sizes every
-    // interior exchange for the whole walk (graft.LoopConf
-    // discipline). AQE stays ON for the walk (measured: the
-    // anti-join's runtime-tiny frontier side gets converted to
-    // broadcast; with AQE off the static planner keeps sort-merge
-    // over the checkpoint-backed sides and task time doubles).
-    graft.LoopConf.sized(edges.sparkSession, e.count()) {
+    // the edge count sizes every interior exchange for the whole walk
+    // (graft.LoopConf discipline). AQE stays ON for the walk
+    // (measured: the anti-join's runtime-tiny frontier side gets
+    // converted to broadcast; with AQE off the static planner keeps
+    // sort-merge over the checkpoint-backed sides and task time
+    // doubles).
+    graft.LoopConf.sized(edges.sparkSession, ec) {
     var fresh = 1L
     while (maxHops.forall(d <= _) && fresh > 0L) {
-      val t0 = System.nanoTime()
       val next = frontier.join(e, frontier("dst") === e("e_src"))
         .select(frontier("src"), col("e_dst").as("dst"))
         .distinct()
@@ -622,12 +527,10 @@ object RdfOps {
       // emptiness is ONE job per round, where the previous eager
       // checkpoint + isEmpty paid two (measured 2 jobs/round on
       // rdf_reachable's 22-round walk)
-      val frame = next.join(reached.select("src", "dst"), Seq("src", "dst"),
-          "left_anti")
+      val frame = next.join(seen, Seq("src", "dst"), "left_anti")
         .withColumn("hops", lit(d))
         .localCheckpoint(false)
       fresh = frame.count()
-      if (dbg) println(f"[walk] round $d fresh=$fresh chk=${(System.nanoTime() - t0) / 1e9}%.2fs")
       if (fresh > 0L) {
         parts :+= frame
         frontier = frame.select(col("src"), col("dst"))

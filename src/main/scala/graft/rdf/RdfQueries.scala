@@ -370,9 +370,10 @@ object RdfQueries {
       |WHERE { ?item ^dcterms:relation ?pointer .
       |        ?item a ceo:Rijksmonument . }""".stripMargin
 
-  /** Closure path `p+` — routes into [[RdfOps.reachablePlus]], the
-    * shared semi-naive fixpoint, over the IRI-object relation edge
-    * scan seeded from every edge source. */
+  /** Closure path `p+` — served by the stored [[relationClosure]]
+    * artifact (the pair closure [[RdfOps.reachablePlusPairs]] builds
+    * over the IRI-object relation edge scan, seeded from every edge
+    * source). */
   val sparqlPathPlusQuery: String =
     """SELECT ?src ?dst
       |WHERE { ?src dcterms:relation+ ?dst . }""".stripMargin
@@ -830,37 +831,6 @@ object RdfQueries {
       .dropDuplicates()
   }
 
-  /** The STORED pair closure of the `dcterms:relation` graph —
-    * memoized per (session, dir) and serialized-block-checkpointed,
-    * the stored-closure discipline for the text front-end's closure
-    * paths (the same role [[fullClosure]] plays for the
-    * doubling-fixture family): the first `p+`/`p*` query pays the
-    * path-doubling walk once; every later rep reads the artifact. */
-  /** RDFS `subClassOf` entailment, materialized: every (instance,
-    * class) pair derivable from an asserted type plus the ontology's
-    * `rdfs:subClassOf` transitive closure — the ρdf core rule
-    * `type(x,C) ∧ subClassOf⁺(C,C') ⊢ type(x,C')`, the inference a
-    * cultural-heritage consumer of the reference's export runs to
-    * query by superclass (reference anchor: rdflib's RDFS namespace
-    * import surface, src/transform_datamodel.py:20). The class graph
-    * derives from `part` sizes as a DEEP chain (C_v ⊑ C_{v+1} for
-    * every occurring size) so the closure is genuinely multi-hop
-    * (~50 levels), and instance k types into the chain at its size.
-    *
-    * Scale shape: the ontology is VOCABULARY-sized (classes, not
-    * instances — thousands at most in real KGs), so its transitive
-    * closure squares a tiny frame ([[RdfOps.reachablePlusDoubling]],
-    * log-depth, memoized per snapshot like [[relationClosure]]) and
-    * BROADCASTS into the instance join — the corpus-scale side never
-    * shuffles, making entailment one map-side pass at 100 TB. No
-    * dedup pass: the chain is acyclic and each instance asserts one
-    * class, so asserted ∪ inferred is duplicate-free by
-    * construction. */
-  /** The memoized transitive closure of a derived size-chain
-    * ontology (`ns{v} ⊑ ns{v+1}` per occurring `p_size`) — shared by
-    * [[rdfsTypes]] (class chain) and [[rdfsEntail]] (class AND
-    * property chains). Vocabulary-sized: the doubling walk squares a
-    * ≤|sizes|² frame in log rounds. */
   /** The NUMERIC chain closure `(v, w)` — the ontology chain walked
     * once over size INTS; both namespaces' string closures are pure
     * renders of this one artifact (the chain structure is identical:
@@ -875,9 +845,14 @@ object RdfQueries {
         .select(col("p_size")).distinct()
         .select(col("p_size").as("src"),
           (col("p_size") + 1).as("dst"))
-      chkSer(RdfOps.reachablePlusDoubling(edges))
+      RdfOps.reachablePlusPairs(edges, edges.select(col("src")).distinct())
     }
 
+  /** The memoized transitive closure of a derived size-chain
+    * ontology (`ns{v} ⊑ ns{v+1}` per occurring `p_size`) — shared by
+    * [[rdfsTypes]] (class chain) and [[rdfsEntail]] (class AND
+    * property chains). Vocabulary-sized: a ≤|sizes|² pair set,
+    * closed in log rounds. */
   private def chainClosure(s: SparkSession, d: String,
       ns: String): DataFrame =
     graft.SnapshotMemo.getOrCompute(s, s"rdfs-chain-closure:$ns:$d") {
@@ -886,6 +861,26 @@ object RdfQueries {
           concat(lit(ns), col("dst")).as("dst")))
     }
 
+  /** RDFS `subClassOf` entailment, materialized: every (instance,
+    * class) pair derivable from an asserted type plus the ontology's
+    * `rdfs:subClassOf` transitive closure — the ρdf core rule
+    * `type(x,C) ∧ subClassOf⁺(C,C') ⊢ type(x,C')`, the inference a
+    * cultural-heritage consumer of the reference's export runs to
+    * query by superclass (reference anchor: rdflib's RDFS namespace
+    * import surface, src/transform_datamodel.py:20). The class graph
+    * derives from `part` sizes as a DEEP chain (C_v ⊑ C_{v+1} for
+    * every occurring size) so the closure is genuinely multi-hop
+    * (~50 levels), and instance k types into the chain at its size.
+    *
+    * Scale shape: the ontology is VOCABULARY-sized (classes, not
+    * instances — thousands at most in real KGs), so its transitive
+    * closure is a tiny log-depth ladder ([[RdfOps.reachablePlusPairs]],
+    * memoized per snapshot like [[relationClosure]]) and
+    * BROADCASTS into the instance join — the corpus-scale side never
+    * shuffles, making entailment one map-side pass at 100 TB. No
+    * dedup pass: the chain is acyclic and each instance asserts one
+    * class, so asserted ∪ inferred is duplicate-free by
+    * construction. */
   private def rdfsTypes(s: SparkSession, d: String): DataFrame = {
     val item = "http://ex.org/item/"
     val part = graft.Tables(s, d, "part")
@@ -1055,19 +1050,18 @@ object RdfQueries {
         .otherwise(concat(lit(OntoClassNs), col("b"))).as("obj")): _*)
   }
 
+  /** The STORED pair closure of the `dcterms:relation` graph —
+    * memoized per (session, dir), the stored-closure discipline for
+    * the text front-end's closure paths (the same role
+    * [[fullClosure]] plays for the doubling-fixture family): the
+    * first `p+`/`p*` query pays the ladder once; every later rep
+    * reads the artifact. */
   private def relationClosure(s: SparkSession, d: String): DataFrame =
     graft.SnapshotMemo.getOrCompute(s, s"relation-closure:$d") {
-      // the FRONTIER walk, not path doubling: a stored-artifact
-      // build must survive a capped heap at any scale, and the
-      // squaring walk's chain intermediates are cubic (measured OOM
-      // at 10×/3 GB vs the frontier's clean 80 s — ClosureProbe)
       val e = tri(s, d).filter(col("predicate") === DctermsRelation &&
           col("obj_kind") === "iri")
         .select(col("subject").as("src"), col("obj_value").as("dst"))
-      // dictionary-encoded: the ladder squares long pairs, not IRI
-      // strings (returns checkpointed — no chkSer here)
-      RdfOps.reachablePlusPairsEncoded(e,
-        e.select(col("src")).distinct())
+      RdfOps.reachablePlusPairs(e, e.select(col("src")).distinct())
     }
 
   /** The COMPOSED relation∘relation closure as a stored artifact —
@@ -1085,8 +1079,7 @@ object RdfQueries {
           e.select(col("src").as("_mid"), col("dst").as("_nxt")),
           col("dst") === col("_mid"))
         .select(col("src"), col("_nxt").as("dst"))
-      RdfOps.reachablePlusPairsEncoded(e2,
-        e2.select(col("src")).distinct())
+      RdfOps.reachablePlusPairs(e2, e2.select(col("src")).distinct())
     }
 
   /** [[SparqlSelect.ClosureProvider]] backed by [[relationClosure]]
@@ -1405,7 +1398,7 @@ object RdfQueries {
       // AQE-off interior pays ~29 (5.9 s). The r17 regression was the
       // ladder's AQE replanning cost, not the algorithm (fixed in
       // RdfOps.reachablePlusPairs).
-      chkSer(RdfOps.reachablePlusPairs(e, e.select(col("src")).distinct()))
+      RdfOps.reachablePlusPairs(e, e.select(col("src")).distinct())
     }
 
   /** The SEEDED `p+` pair closure — the stored-closure artifact a
@@ -1534,8 +1527,8 @@ object RdfQueries {
     * Pregel/GraphX shape exactly; co-partitioning edges and ranks by
     * key makes the join exchange-free at 100 TB. The iteration count
     * is fixed and small, so lineage stays O(iterations); a
-    * run-to-convergence variant would checkpoint per round like
-    * [[RdfOps.reachablePlus]]. */
+    * run-to-convergence variant would checkpoint per round like the
+    * [[RdfOps.reachable]] walk. */
   private def pagerank(s: SparkSession, d: String): DataFrame = {
     val scale = 1000000000L
     val e = starEdges(s, d)
@@ -1606,7 +1599,7 @@ object RdfQueries {
     * aggregate), a broadcast 1-row dangling-mass aggregate, and a
     * node-keyed join against the checkpointed rank table; rank/edge
     * tables are localCheckpoint'ed per round (plan stays O(1), the
-    * [[RdfOps.reachablePlus]] discipline) and superseded rounds are
+    * [[RdfOps.reachable]] walk's discipline) and superseded rounds are
     * freed. The converged table is a per-snapshot stored artifact
     * ([[starClosure]] discipline) — consumers read the result, not
     * the loop. */
@@ -2008,7 +2001,7 @@ object RdfQueries {
     // single-predicate one. (Own edge set ⇒ own walk: the ×3/×5
     // lattice shares nothing with [[fullClosure]]'s doubling graph.)
     graft.SnapshotMemo.getOrCompute(s, s"alt-plus-closure:$d")(
-      chkSer(RdfOps.reachablePlusPairs(tri3.union(pent), starSeeds(s, d))))
+      RdfOps.reachablePlusPairs(tri3.union(pent), starSeeds(s, d)))
   }
 
   /** SPARQL composed path `(^def:quad)+` — INVERSE UNDER CLOSURE.

@@ -130,8 +130,9 @@ import Vocab.RdfType
   *    the pattern's endpoints (a projection swap — no reversed edge
   *    set is materialized, [[RdfQueries.pathInv]]'s shape), `p1|p2`
   *    becomes a predicate SET on one pattern (one scan), and `p+`
-  *    routes into [[RdfOps.reachablePlus]] — the shared semi-naive
-  *    fixpoint — over the IRI-object edge scan of its predicate set
+  *    reads a stored closure artifact or else runs
+  *    [[RdfOps.reachablePlusPairs]] — the engine's one pair-closure
+  *    operator — over the IRI-object edge scan of its predicate set
   *    (closure steps walk the IRI graph; non-closure steps keep
   *    plain value-join semantics).
   *  - GROUP BY + aggregates compile to the single-exchange hash
@@ -2112,22 +2113,6 @@ object SparqlSelect {
       (p.s match { case V(_) => true; case _ => false }) &&
       (p.o match { case V(_) => false; case _ => true })
 
-  /** The general BGP evaluation — one filtered scan per pattern,
-    * equi-joined on shared variables (cartesian if none — the SPARQL
-    * product semantics), OPTIONAL groups as left joins. Exact
-    * multiset semantics (no functional-property assumption); at
-    * scale each join shuffles on its variable, which is the
-    * unavoidable cost of a non-star BGP over a triple store.
-    * Membership patterns ([[isMembership]]) whose variable another
-    * required pattern binds compile to broadcast `left_semi` joins
-    * against the distinct matching-subject set — dimension-scale by
-    * the same selectivity argument every hand-built form makes
-    * (constant predicate + object bounds the set by the type/flag
-    * assertion count, not the corpus). Closure patterns (`p+`) run
-    * [[RdfOps.reachablePlus]] — the per-round frontier walk — over
-    * the IRI-object edge scan of their predicate set, seeded from
-    * every edge source (both endpoints are variables by grammar
-    * restriction). */
   /** Serialize a SERVICE block back to the query text sent to the
     * endpoint — `SELECT *` over the plain triple patterns (the
     * subset the parser admitted into the clause). When `bound` is
@@ -2247,6 +2232,23 @@ object SparqlSelect {
     }
   }
 
+  /** The general BGP evaluation — one filtered scan per pattern,
+    * equi-joined on shared variables (cartesian if none — the SPARQL
+    * product semantics), OPTIONAL groups as left joins. Exact
+    * multiset semantics (no functional-property assumption); at
+    * scale each join shuffles on its variable, which is the
+    * unavoidable cost of a non-star BGP over a triple store.
+    * Membership patterns ([[isMembership]]) whose variable another
+    * required pattern binds compile to broadcast `left_semi` joins
+    * against the distinct matching-subject set — dimension-scale by
+    * the same selectivity argument every hand-built form makes
+    * (constant predicate + object bounds the set by the type/flag
+    * assertion count, not the corpus). Closure patterns (`p+`) read
+    * the pair closure of the IRI-object edge scan of their predicate
+    * set, seeded from every edge source (both endpoints are
+    * variables by grammar restriction): a stored artifact when the
+    * [[ClosureProvider]] serves it, else [[RdfOps.reachablePlusPairs]]
+    * live. */
   private def joinsGroup(t: DataFrame, q: Query, g: Group,
       metaVars: Set[String] = Set.empty,
       closureOf: ClosureProvider = NoClosure,
@@ -2400,12 +2402,10 @@ object SparqlSelect {
 
     /** The pair closure of a closure step: the STORED artifact when
       * the provider serves this predicate set (graph-unscoped steps
-      * only — the production path for hot predicates), else the
-      * work-optimal memory-bounded frontier walk. The path-doubling
-      * alternative ([[RdfOps.reachablePlusDoubling]]) is faster at
-      * toy scale but its squaring intermediates OOM a capped heap at
-      * 10× (measured — see its scaladoc); an engine default must
-      * survive scale, so the live fallback walks the frontier. */
+      * only — the production path for hot predicates), else a live
+      * [[RdfOps.reachablePlusPairs]] seeded from every edge source —
+      * the same operator the stored artifacts are built with, so
+      * stored and live answers agree by construction. */
     def closurePairs(pat: Pattern, edges: DataFrame): DataFrame =
       // flat-set and composed-sequence closures are DIFFERENT
       // relations — the provider keying carries the distinction
@@ -2414,9 +2414,8 @@ object SparqlSelect {
          else closureOf(pat.seqPath, true))
       else None)
         .map(_.select(col("src"), col("dst")))
-        .getOrElse(RdfOps.reachablePlus(edges,
-          edges.select(col("src")).distinct())
-          .select(col("src"), col("dst")))
+        .getOrElse(RdfOps.reachablePlusPairs(edges,
+          edges.select(col("src")).distinct()))
 
     /** `p*` — the closure PLUS the zero-length paths. Engine-
       * documented narrowing of SPARQL's zero-length rule: self rows

@@ -212,4 +212,20 @@ class SuffixArraySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("positions frees its corpus-text checkpoint: every RDD the " +
+    "build leaves persisted is a memoized artifact without `text`") {
+    val fx = new Fixture(docsFixture) // own dir, so nothing is memoized yet
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pos = SuffixArray.positions(spark, fx.dir)
+    val added = sc.getPersistentRDDs.keySet -- before
+    // the build memoizes two artifacts: the corpus length and positions
+    val memo = Seq(pos, graft.SnapshotMemo.getOrCompute(spark,
+      s"sa-len:${fx.dir}")(fail("corpus length was not memoized")))
+    val leaves = memo.flatMap(_.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id })
+    assert(added === leaves.toSet)
+    assert(memo.forall(!_.columns.contains("text")))
+  }
 }

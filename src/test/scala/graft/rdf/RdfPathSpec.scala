@@ -82,71 +82,79 @@ class RdfPathSpec extends AnyFunSuite {
     }
   }
 
-  test("reachablePlusDoubling: pair set equals the frontier walk's " +
-      "on chains, cycles, and random graphs (log-round count)") {
-    // a 9-node chain: doubling needs ~4 rounds, the walk 8
-    val chain = edges((1 to 8).map(i => (s"n$i", s"n${i + 1}")): _*)
-    val allSeeds = chain.select(col("src")).distinct()
-    val viaWalk = RdfOps.reachablePlus(chain, allSeeds)
-      .select("src", "dst").collect()
+  /** The unbounded `p+` pair closure by per-seed BFS over an adjacency
+    * map (cycles included: a revisited node is never re-expanded). */
+  private def closureBfs[A](es: Seq[(A, A)], sds: Seq[A]): Set[(A, A)] = {
+    val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    sds.distinct.flatMap { s =>
+      val seen = scala.collection.mutable.Set[A]()
+      var frontier = Set(s)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(x => adj.getOrElse(x, Nil))
+          .filterNot(seen.contains)
+        seen ++= frontier
+      }
+      seen.map(s -> _)
+    }.toSet
+  }
+
+  private def strPairs(df: org.apache.spark.sql.DataFrame) =
+    df.select("src", "dst").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val viaDbl = RdfOps.reachablePlusDoubling(chain).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaDbl === viaWalk && viaDbl.size === 8 * 9 / 2)
-    // a cycle terminates (finite pair space) and matches the walk
-    val cyc = edges(("a", "b"), ("b", "c"), ("c", "a"))
-    val cycDbl = RdfOps.reachablePlusDoubling(cyc).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val cycWalk = RdfOps.reachablePlus(cyc,
-        cyc.select(col("src")).distinct())
-      .select("src", "dst").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(cycDbl === cycWalk && cycDbl.size === 9)
-    // random graphs: equality with the independently-verified walk
+
+  test("reachablePlusPairs: string keys (dictionary-encoded) equal a " +
+      "plain-Scala BFS on chains, cycles, self-loops and random graphs, " +
+      "seeded and all-sources; empty seeds or edges yield nothing") {
+    def check(es: Seq[(String, String)], sds: Seq[String]): Set[(String, String)] = {
+      val got = strPairs(RdfOps.reachablePlusPairs(edges(es: _*), seeds(sds: _*)))
+      assert(got === closureBfs(es, sds), s"edges $es seeds $sds")
+      got
+    }
+    // a 9-node chain from every source: ~4 ladder phases, 36 pairs
+    val chain = (1 to 8).map(i => (s"n$i", s"n${i + 1}"))
+    assert(check(chain, chain.map(_._1)).size === 8 * 9 / 2)
+    // a cycle terminates (finite pair space) and closes on itself
+    assert(check(Seq(("a", "b"), ("b", "c"), ("c", "a")), Seq("a", "b", "c"))
+      .size === 9)
+    // a self-loop is its own one-step path; a seed with no out-edge
+    // reaches nothing
+    assert(check(Seq(("x", "x"), ("x", "y")), Seq("x", "y")) ===
+      Set(("x", "x"), ("x", "y")))
+    assert(check(chain, Nil).isEmpty)
+    assert(check(Nil, Seq("a")).isEmpty)
     val rnd = new scala.util.Random(7)
     (0 until 3).foreach { _ =>
       val es = (0 until 30).map(_ =>
         (s"v${rnd.nextInt(12)}", s"v${rnd.nextInt(12)}")).distinct
-      val e = edges(es: _*)
-      val d = RdfOps.reachablePlusDoubling(e).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val w = RdfOps.reachablePlus(e, e.select(col("src")).distinct())
-        .select("src", "dst").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(d === w)
+      check(es, es.map(_._1))
+      check(es, (0 until 3).map(_ => s"v${rnd.nextInt(12)}"))
     }
   }
 
-  test("reachablePlus: run-to-fixpoint terminates on random cyclic " +
-    "graphs and equals an UNBOUNDED plain-Scala BFS") {
+  test("reachablePlusPairs: long keys (not encoded) run to fixpoint on " +
+    "random cyclic graphs and equal an UNBOUNDED plain-Scala BFS") {
     import scala.util.Random
+    val s = TestSpark.spark
+    import s.implicits._
+    def check(es: Seq[(Long, Long)], sds: Seq[Long]): Unit = {
+      val got = RdfOps.reachablePlusPairs(es.toDF("src", "dst"),
+          sds.toDF("src"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === closureBfs(es, sds), s"edges $es seeds $sds")
+    }
     (1 to 3).foreach { seed =>
       val rnd = new Random(100 + seed)
       val n = 25
       // dense enough that nearly everything is one big cyclic knot —
       // the shape that loops forever if fixpoint detection is broken
       val es = (0 until 80).map(_ =>
-        (s"n${rnd.nextInt(n)}", s"n${rnd.nextInt(n)}")).distinct
-      val sds = (0 until 4).map(_ => s"n${rnd.nextInt(n)}").distinct
-      val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val expected = sds.flatMap { s =>
-        val hops = scala.collection.mutable.Map[String, Int]()
-        var frontier = Set(s)
-        var d = 1
-        while (frontier.nonEmpty) {
-          val next = frontier.flatMap(x => adj.getOrElse(x, Nil))
-            .filterNot(hops.contains)
-          next.foreach(x => hops(x) = d)
-          frontier = next
-          d += 1
-        }
-        hops.map { case (dst, h) => (s, dst, h) }
-      }.toSet
-      val got = RdfOps.reachablePlus(edges(es: _*), seeds(sds: _*))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-        .toSet
-      assert(got == expected, s"seed $seed")
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).distinct
+      check(es, (0 until 4).map(_ => rnd.nextInt(n).toLong).distinct)
+      check(es, es.map(_._1))
     }
+    check(Seq((1L, 1L), (1L, 2L), (3L, 4L)), Seq(1L, 4L))
+    check(Seq((1L, 2L)), Nil)
+    check(Nil, Seq(1L))
   }
 
   test("reachablePlusDelta: incremental closure equals from-scratch " +
@@ -162,32 +170,31 @@ class RdfPathSpec extends AnyFunSuite {
         (s"n${rnd.nextInt(n)}", s"n${rnd.nextInt(n)}")).distinct
         .filterNot(baseE.contains)
       val sds = (0 until 4).map(_ => s"n${rnd.nextInt(n)}").distinct
-      def pairs(df: org.apache.spark.sql.DataFrame) =
-        df.select("src", "dst").collect()
-          .map(r => (r.getString(0), r.getString(1))).toSet
-      val closure = RdfOps.reachablePlus(edges(baseE: _*), seeds(sds: _*))
-      val incr = pairs(RdfOps.reachablePlusDelta(edges(baseE: _*),
+      val closure = RdfOps.reachablePlusPairs(edges(baseE: _*), seeds(sds: _*))
+      val incr = strPairs(RdfOps.reachablePlusDelta(edges(baseE: _*),
         edges(deltaE: _*), seeds(sds: _*), closure))
-      val full = pairs(RdfOps.reachablePlus(
-        edges(baseE ++ deltaE: _*), seeds(sds: _*)))
-      assert(incr == full, s"seed $seed")
-      // empty delta: zero rounds, closure unchanged
-      val noop = pairs(RdfOps.reachablePlusDelta(edges(baseE: _*),
+      assert(incr == closureBfs(baseE ++ deltaE, sds), s"seed $seed")
+      // empty delta: closure unchanged
+      val noop = strPairs(RdfOps.reachablePlusDelta(edges(baseE: _*),
         edges(baseE.take(0): _*), seeds(sds: _*), closure))
-      assert(noop == pairs(closure), s"seed $seed noop")
+      assert(noop == strPairs(closure), s"seed $seed noop")
     }
   }
 
-  test("reachableStar: hop-0 self rows present for EVERY seed, and a " +
-    "cycle back to the seed collapses onto the hop-0 row (min-path)") {
-    // 1→2→3→1 cycle plus an isolated seed z with no out-edges
-    val e = edges("1" -> "2", "2" -> "3", "3" -> "1")
-    val got = RdfOps.reachableStar(e, seeds("1", "z"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-      .toSet
-    assert(got == Set(
-      ("1", "1", 0), ("z", "z", 0), // zero-length paths, even for z
-      ("1", "2", 1), ("1", "3", 2))) // NO ("1","1",3): hop 0 wins
+  test("a memoized pair closure is checkpointed once: building " +
+    "rdf_path_alt_plus persists exactly the artifact it returns") {
+    // a fresh session starts with an empty memo; the triple fixture
+    // (its own memoized checkpoint) is built before counting
+    val s = TestSpark.spark.newSession()
+    val d = "/root/testdata/sf0.001"
+    TripleFixture.triples(s, d)
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val out = RdfQueries.queries("rdf_path_alt_plus")(s, d)
+    val added = s.sparkContext.getPersistentRDDs.keySet -- before
+    val leaves = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+    assert(added.size === 1 && added === leaves.toSet)
+    assert(out.count() > 0)
   }
 
   test("rdf_reachable_star: doubling fixture has real cycles and the " +
