@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
 import graft.functions.NativeFunctions
 
 /** Cross-snapshot incremental ANN: the persisted-index side of IVF
@@ -76,37 +77,43 @@ object AnnIndex {
     * integer-mean recompute through the map-side
     * [[graft.functions.VecSumLong]] partial sums (the exchange
     * carries one long[dim] per (cluster, partition), never the
-    * corpus). Loop discipline as in the batch CC loop: each round's
-    * k-row centroid table is localCheckpoint'd (O(1) plan depth),
-    * superseded checkpoints freed, convergence an O(k) driver
-    * check. Returns (cid, cv, n_vecs). */
+    * corpus). The rounds run on [[graft.Fixpoint.iterate]]; a round
+    * converges when [[unchanged]]. Returns (cid, cv, n_vecs). */
   def lloyd(s: SparkSession, vectors: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    var cent = vectors.filter(col("vec_id") < k)
+    val start = Fixpoint.observed(vectors.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cid"), col("qv").as("cv"),
-        lit(0L).as("n_vecs"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (round < iters && !converged) {
-      val next = assign(vectors, cent.select(col("cid"), col("cv")))
+        lit(0L).as("n_vecs"), lit(true).as("moved")), moveMetrics: _*)
+    Fixpoint.iterate("lloyd", start, moveMetrics, iters) { (cent, _, _) =>
+      withMoves(assign(vectors, cent.select(col("cid"), col("cv")))
         .groupBy(col("cid"))
         .agg(count(lit(1)).as("n_vecs"),
           graft.functions.VecSumLong.vecSum(col("qv")).as("sums"))
         .select(col("cid"),
           expr("transform(sums, x -> x div n_vecs)").as("cv"),
-          col("n_vecs"))
-        .localCheckpoint()
-      val a = next.select(col("cid"), col("cv"))
-      val b = cent.select(col("cid"), col("cv"))
-      converged = a.except(b).isEmpty && b.except(a).isEmpty
-      val prev = cent
-      cent = next
-      org.apache.spark.sql.graftshim.ColumnBridge.freeLocalCheckpoint(prev)
-      round += 1
-    }
-    cent
+          col("n_vecs")), cent)
+    }(unchanged).state.drop("moved")
   }
+
+  /** The `next` centroid rows (cid, cv, n_vecs), each flagged
+    * `moved` when `prev` has no row with its (cid, cv). */
+  private[graft] def withMoves(next: DataFrame, prev: DataFrame): DataFrame =
+    next.join(prev.select(col("cid").as("pcid"), col("cv").as("pcv")),
+        col("cid") === col("pcid"), "left")
+      .select(col("cid"), col("cv"), col("n_vecs"),
+        (col("pcid").isNull || !(col("cv") <=> col("pcv"))).as("moved"))
+
+  private[graft] val moveMetrics =
+    Seq(count(lit(1)).as("n"), count(when(col("moved"), 1)).as("moved"))
+
+  /** No row moved and none vanished. Over cid-keyed tables this is
+    * exactly the two-way EXCEPT test: no moved row means next ⊆ prev,
+    * and with as many rows, next = prev. A cluster that empties drops
+    * its cid and so lowers the count. */
+  private[graft] def unchanged(prev: Fixpoint.Metrics,
+      cur: Fixpoint.Metrics): Boolean =
+    Fixpoint.long(cur, "moved") == 0L &&
+      Fixpoint.long(cur, "n") == Fixpoint.long(prev, "n")
 
   /** Build + persist the index for `vectors`: train capped-Lloyd
     * centroids, assign every vector to its list, and write both —

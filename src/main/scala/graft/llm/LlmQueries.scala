@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 import graft.functions.NativeFunctions
 
 /** LLM-training-data pipeline operators over the driver's `documents`
@@ -210,20 +210,6 @@ object LlmQueries {
     "llm_cdc_incremental" -> CdcChunks.dedupIncremental,
   )
 
-  /** Serialized-block local checkpoint for CORPUS-SCALE memoized
-    * artifacts (signatures, pair tables, token/vocab-scale rows):
-    * the default deserialized level holds Java object graphs in
-    * memory and RE-PROMOTES evicted disk blocks into memory on
-    * read, which the 100x DeepScale rehearsal showed OOMing a
-    * capped heap; serialized blocks stay compact byte buffers that
-    * spill and re-read gracefully. Deser cost is paid per read and
-    * is negligible next to the joins these artifacts feed. Tiny
-    * hot-loop tables (16-row centroid rounds, 1-row bitsets) keep
-    * the deserialized default. */
-  private def chkSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
 
@@ -328,9 +314,7 @@ object LlmQueries {
 
   private def bpeTrainMergesOf(wc0: DataFrame)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    def free(df: DataFrame): Unit = org.apache.spark.sql.graftshim
-      .ColumnBridge.freeLocalCheckpoint(df)
-    var st = chkSer(wc0
+    var st = Fixpoint.ser(wc0
       .withColumn("toks", expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -359,9 +343,9 @@ object LlmQueries {
         // open the next match only as lhs — exactly BPE's scan
         // (primitive-loop codegen expression; the HOF fold it
         // replaced is the spec oracle, BpeTrainSpec)
-        st = chkSer(prev.select(col("word"), col("c"),
+        st = Fixpoint.ser(prev.select(col("word"), col("c"),
           graft.functions.BpeApplyStep(col("toks"), a, b).as("toks")))
-        free(prev)
+        Fixpoint.free(prev)
         k += 1
       }
     }
@@ -425,8 +409,7 @@ object LlmQueries {
         import spark.implicits._
         val (m, st) = bpeTrainMergesOf(wordCountsOf(
           tokenized(s, d).filter(!expr(arrivingShardPred))))
-        org.apache.spark.sql.graftshim.ColumnBridge
-          .freeLocalCheckpoint(st)
+        Fixpoint.free(st)
         m.toDF("merge_rank", "lhs", "rhs", "n_at_merge")
           .write.mode("overwrite").parquet(path)
         s.range(1).toDF("built")
@@ -523,7 +506,7 @@ object LlmQueries {
   def wordpieceTokens(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val wc = chkSer(tokenized(s, d).select(explode(col("w")).as("word"))
+    val wc = Fixpoint.ser(tokenized(s, d).select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("c")))
     val topg = wc.filter(length(col("word")) >= 2)
@@ -661,7 +644,7 @@ object LlmQueries {
   def unigramTokens(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val wc = chkSer(tokenized(s, d).select(explode(col("w")).as("word"))
+    val wc = Fixpoint.ser(tokenized(s, d).select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("c")))
     val vocabBc = s.sparkContext.broadcast(unigramVocab(wc))
@@ -727,7 +710,7 @@ object LlmQueries {
   def unigramVocabTrain(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val wc = chkSer(tokenized(s, d).select(explode(col("w")).as("word"))
+    val wc = Fixpoint.ser(tokenized(s, d).select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("c")))
     var vocab: Map[String, Long] = unigramVocab(wc)
@@ -788,7 +771,7 @@ object LlmQueries {
     * probe share. */
   private[graft] def baseUnigramVocab(s: SparkSession,
       d: String): Map[String, Long] = {
-    val wcBase = chkSer(tokenized(s, d)
+    val wcBase = Fixpoint.ser(tokenized(s, d)
       .filter(col("doc_id") % 10 =!= 7)
       .select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
@@ -970,7 +953,7 @@ object LlmQueries {
     val spark = s
     import spark.implicits._
     val base = tokenized(s, d).filter(col("doc_id") % 10 =!= 7)
-    val wcBase = chkSer(base.select(explode(col("w")).as("word"))
+    val wcBase = Fixpoint.ser(base.select(explode(col("w")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("c")))
     val topg = wcBase.filter(length(col("word")) >= 2)
@@ -1055,14 +1038,12 @@ object LlmQueries {
     // whitespace-free, so w1 = substring_index(bg, ' ', 1)) — carry
     // the narrower frame (guide §2.3).
     val bp = graft.SnapshotMemo.getOrCompute(s, s"fluency-bp:$d") {
-      tokenized(s, d)
+      Fixpoint.disk(tokenized(s, d)
         .filter(size(col("w")) >= 2)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(w) - 1), i -> " +
             "concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"))
-          .as("bg"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          .as("bg")))
     }
     // the trained LM statistic, pre-joined at VOCABULARY scale: the
     // pair score (10⁶·c(w1,w2)) div c(w1·) depends only on the
@@ -1077,7 +1058,7 @@ object LlmQueries {
       val cb = bp.groupBy(col("bg")).agg(count(lit(1)).as("cb"))
         .withColumn("w1", expr("substring_index(bg, ' ', 1)"))
       val cu = cb.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
-      chkSer(cb.join(cu, Seq("w1"))
+      Fixpoint.ser(cb.join(cu, Seq("w1"))
         .select(col("bg"), expr("(1000000 * cb) DIV cu").as("sc")))
     }
     bp.join(sc.hint("merge"), Seq("bg"))
@@ -1178,7 +1159,7 @@ object LlmQueries {
     * the same table instead of re-running the shingle→sha256 chain. */
   private def minhashSig(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"minhash-sig:$d")(
-      chkSer(computeMinhashSig(s, d)))
+      Fixpoint.ser(computeMinhashSig(s, d)))
 
   // One sha256 per shingle, sliced into 8 non-overlapping 32-bit hex
   // lanes = 8 independent uniform hashes (8× cheaper than 8 salted
@@ -1228,7 +1209,7 @@ object LlmQueries {
     * chain re-ran once per consumer. */
   def dedupMinhash(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"lsh-pairs:$d")(
-      chkSer(computePairs(s, d)))
+      Fixpoint.ser(computePairs(s, d)))
 
   private def computePairs(s: SparkSession, d: String): DataFrame =
     pairsFromBands(bands(s, d))
@@ -1354,7 +1335,7 @@ object LlmQueries {
     * every invocation for the session lifetime. */
   private def distinctBigrams(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"bigrams-distinct:$d")(
-      chkSer(bigramRows(s, d).distinct()))
+      Fixpoint.ser(bigramRows(s, d).distinct()))
 
   def ngramJaccard(s: SparkSession, d: String): DataFrame = {
     val bg = distinctBigrams(s, d)
@@ -1447,50 +1428,35 @@ object LlmQueries {
     * and the projected (doc_id, cluster_id) view. */
   private[graft] def ccFromPairsChk(
       pairs: DataFrame): (DataFrame, DataFrame) = {
-    // SERIALIZED block storage for the edge list: it is PAIR-scale
-    // (the one table here that grows with duplication density, not
-    // corpus size alone), and the default deserialized level
-    // re-promotes disk blocks into memory as Java object graphs on
-    // every round's read — at the 100× deep-scale corpus that
-    // promotion OOM'd a 3 GB heap (DeepScale, round 9) while the
-    // serialized form holds compact byte buffers that spill
-    // gracefully. The loop below re-reads the blocks each round, so
-    // the ser/deser CPU cost is bounded by rounds (O(log d)).
-    val e0 = chkSer(
+    // the edge list is PAIR-scale (it grows with duplication
+    // density, not corpus size alone) and every round re-reads it:
+    // serialized blocks (see Fixpoint.ser), ser/deser cost bounded by
+    // the O(log d) rounds
+    val (e0, em) = Fixpoint.observed(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
+      count(lit(1)).as("n"))
     // The pair graph is orders of magnitude smaller than the corpus —
     // size the loop's parallelism to IT, not to the session default
     // (32 near-empty tasks per round is pure scheduling overhead).
     // The same sizing now also scopes the INTERIOR exchanges
-    // (groupBy/min, pointer join, convergence aggregate) via
-    // [[graft.LoopConf.sized]] — the loop's own shuffles at session
-    // width were the dominant cost of the CC family (see LoopConf).
-    val nE = e0.count()
+    // (groupBy/min, pointer join) via [[graft.LoopConf.sized]] — the
+    // loop's own shuffles at session width were the dominant cost of
+    // the CC family (see LoopConf).
+    val nE = Fixpoint.long(em, "n")
     val edges = e0.repartition(graft.LoopConf.partsFor(nE))
     graft.LoopConf.sized(e0.sparkSession, nE) {
-    // localCheckpoint per round keeps every round's plan O(1) —
-    // persist() alone left lineage growing, and re-analyzing an
-    // O(rounds)-deep plan each round made the loop O(rounds²) in
-    // planning time (measured ~45% slower end-to-end). Superseded
-    // checkpoints are freed through the graftshim bridge.
-    var labels = chkSer(edges.select(col("src").as("doc")).distinct()
-      .withColumn("lbl", col("doc")))
     // Convergence via the label sum: min-propagation only ever
     // decreases labels, so the sum is unchanged iff NO label changed —
-    // one cheap aggregate per round instead of a join against the
-    // previous iteration. Summed as DECIMAL(38,0): a bigint sum of
-    // billions of 63-bit ids overflows (ANSI error, or a wrapped
-    // value that could alias prevSum and end the loop un-converged).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var done = labels.isEmpty
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var rnd = 0
-    while (!done) {
-      val tR = System.nanoTime()
+    // one aggregate observed on the round's own checkpoint instead of
+    // a join against the previous iteration. Summed as DECIMAL(38,0):
+    // a bigint sum of billions of 63-bit ids overflows (ANSI error,
+    // or a wrapped value that could alias the previous sum and end
+    // the loop un-converged).
+    val sumLabels = sum(col("lbl").cast("decimal(38,0)")).as("lbl_sum")
+    val start = Fixpoint.observed(edges.select(col("src").as("doc"))
+      .distinct().withColumn("lbl", col("doc")), sumLabels)
+    val labels = Fixpoint.iterate("cc", start, Seq(sumLabels)) { (labels, _, _) =>
       val pulled = edges.join(labels, col("dst") === col("doc"))
         .select(col("src").as("doc"), col("lbl"))
       val stepped = labels.union(pulled)
@@ -1501,21 +1467,14 @@ object LlmQueries {
       // instead of O(diameter). Long near-dup chains made plain
       // propagation diameter-bound (~2.5x slower end-to-end here).
       val ptr = stepped.select(col("doc").as("pdoc"), col("lbl").as("plbl"))
-      val next = chkSer(
-        stepped.join(ptr, col("lbl") === col("pdoc"), "left")
-          .select(col("doc"), coalesce(col("plbl"), col("lbl")).as("lbl")))
-      val newSum = labelSum(next)
-      val prev = labels
-      labels = next
-      // superseded rounds must not pin block storage for the session
-      org.apache.spark.sql.graftshim.ColumnBridge.freeLocalCheckpoint(prev)
-      done = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      rnd += 1
-      if (dbg) println(f"[cc] round $rnd t=${(System.nanoTime() - tR) / 1e9}%.2fs")
-    }
+      stepped.join(ptr, col("lbl") === col("pdoc"), "left")
+        .select(col("doc"), coalesce(col("plbl"), col("lbl")).as("lbl"))
+    } { (prev, cur) =>
+      // a sum over no rows and a dropped observation both read as null
+      prev.getOrElse("lbl_sum", null) == cur.getOrElse("lbl_sum", null)
+    }.state
     // the edge list is only needed during the loop
-    org.apache.spark.sql.graftshim.ColumnBridge.freeLocalCheckpoint(e0)
+    Fixpoint.free(e0)
     (labels,
       labels.select(col("doc").as("doc_id"), col("lbl").as("cluster_id")))
     }
@@ -1887,7 +1846,7 @@ object LlmQueries {
     * disguise), while 16-bit bands give 65536. */
   private def simhash64(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"simhash64:$d") {
-      chkSer(simhashSignOf(docs(s, d)))
+      Fixpoint.ser(simhashSignOf(docs(s, d)))
     }
 
   /** Distinct-signature representatives: one row per distinct 64-bit
@@ -2110,11 +2069,9 @@ object LlmQueries {
   // ---------------------------------------------------------------
   // Full Lloyd (k-means) loop: [[kmeansStep]] iterated to a capped
   // fixpoint, feeding IVF real converged centroids instead of the
-  // vec_id < 16 sample. Loop discipline is the CC loop's: each
-  // round's centroid table is localCheckpoint'd (16 rows — O(1) plan
-  // depth, no lineage growth), the superseded round's blocks are
-  // freed through the graftshim bridge, and convergence is an O(k)
-  // driver check, never an O(corpus) one. The iteration CAP (not just
+  // vec_id < 16 sample. The rounds run on [[graft.Fixpoint.iterate]];
+  // convergence is an O(k) check observed on the round's 16-row
+  // checkpoint, never an O(corpus) one. The iteration CAP (not just
   // "until converged") is what keeps the oracle expressible: DuckDB
   // replays exactly kmIters unrolled rounds, and once a fixpoint is
   // hit every further round reproduces it — so early exit and the
@@ -2131,10 +2088,7 @@ object LlmQueries {
       computeKmeans(s, d))
 
   /** The loop itself lives in [[AnnIndex.lloyd]] (shared with the
-    * stored-index build, which trains on the index corpus only);
-    * seed rule (vec_id < k), iteration cap, checkpoint/free
-    * discipline and the two-way EXCEPT fixpoint check are unchanged
-    * from the round-11 in-place spelling. */
+    * stored-index build, which trains on the index corpus only). */
   private def computeKmeans(s: SparkSession, d: String): DataFrame =
     AnnIndex.lloyd(s, quantized(s, d), nCentroids, kmIters)
 
@@ -2494,7 +2448,7 @@ object LlmQueries {
     * recall) share one assignment scan. */
   def pqCodes(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"pq-codes:$d")(
-      chkSer(computePqCodes(s, d)))
+      Fixpoint.ser(computePqCodes(s, d)))
 
   private def computePqCodes(s: SparkSession, d: String): DataFrame =
     quantized(s, d).crossJoin(broadcast(pqCentArr(s, d)))
@@ -3074,7 +3028,7 @@ object LlmQueries {
     // |sources| x |vocab|-row aggregate once per snapshot so the
     // corpus-wide explode+agg doesn't replay per consumer
     val st = SnapshotMemo.getOrCompute(s, s"source-term-counts:$d") {
-      chkSer(docs(s, d)
+      Fixpoint.ser(docs(s, d)
         .select(col("source"), explode(tokenExpr).as("term"))
         .groupBy(col("source"), col("term"))
         .agg(count(lit(1)).as("c_src")))
@@ -3162,7 +3116,7 @@ object LlmQueries {
   /** The memoized inverted index: (doc_id, term, tf). */
   private def postings(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"doc-term-freq:$d") {
-      chkSer(postingsOf(docs(s, d)))
+      Fixpoint.ser(postingsOf(docs(s, d)))
     }
 
   /** One corpus's (doc_id, term, tf) posting rows — a per-document
@@ -3187,7 +3141,7 @@ object LlmQueries {
     * postings never re-tokenize; only the delta pays tokenization. */
   def bm25Incremental(s: SparkSession, d: String): DataFrame = {
     val base = SnapshotMemo.getOrCompute(s, s"postings-base:$d") {
-      chkSer(postingsOf(docs(s, d).filter(col("doc_id") % 2 === 0)))
+      Fixpoint.ser(postingsOf(docs(s, d).filter(col("doc_id") % 2 === 0)))
     }
     val delta = postingsOf(docs(s, d).filter(col("doc_id") % 2 =!= 0))
     bm25TopKOf(s, base.union(delta), bm25QuerySet, 10)
@@ -3574,7 +3528,7 @@ object LlmQueries {
     * span-removal rewrite both read it. */
   private def spanTable(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"span-table:$d")(
-      chkSer(computeSpanTable(s, d)))
+      Fixpoint.ser(computeSpanTable(s, d)))
 
   private def computeSpanTable(s: SparkSession, d: String): DataFrame = {
     val grams = posGramsOf(tokenized(s, d))
@@ -4115,7 +4069,7 @@ object LlmQueries {
   def decontaminate(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s,
       s"decontam-flags:$d:broadcast=${decontamBroadcast(s)}")(
-      chkSer(computeDecontaminate(s, d)))
+      Fixpoint.ser(computeDecontaminate(s, d)))
 
   private[llm] def computeDecontaminate(
       s: SparkSession, d: String): DataFrame = {
@@ -4244,7 +4198,7 @@ object LlmQueries {
     * [[decontamBloom]] and [[bloomSummary]]). */
   private def bloomFlagged(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"decontam-bloom:$d")(
-      chkSer(computeBloomFlagged(s, d)))
+      Fixpoint.ser(computeBloomFlagged(s, d)))
 
   /** Bloom bitset over a one-column (`g`) gram set: k K-M positions
     * per gram → OR the bits per word → densify to ONE
@@ -4622,10 +4576,10 @@ object LlmQueries {
     // and the 20-row exact yardstick; neither should re-pay its
     // corpus scan per read
     val cells = graft.SnapshotMemo.getOrCompute(s, s"cms-cells:$d") {
-      chkSer(cmsCellsOf(docs(s, d)))
+      Fixpoint.ser(cmsCellsOf(docs(s, d)))
     }
     val exact = graft.SnapshotMemo.getOrCompute(s, s"cms-top20:$d") {
-      chkSer(bigramRows(s, d)
+      Fixpoint.ser(bigramRows(s, d)
         .groupBy(col("bg")).agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("bg"))
         .limit(20))
@@ -5230,8 +5184,7 @@ object LlmQueries {
     // the corpus (rounds + 0 scans of text for a 7-narrow-column
     // frame — guide §1.2 "don't compute things twice"); the
     // checkpoint is doc-count-scale and freed when training ends
-    val feats = featsIn.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val feats = Fixpoint.ser(featsIn)
     try {
     var stumps = Vector.empty[BoostStump]
     for (t <- 1 to rounds) {
@@ -5287,8 +5240,7 @@ object LlmQueries {
     }
     stumps
     } finally {
-      org.apache.spark.sql.graftshim.ColumnBridge
-        .freeLocalCheckpoint(feats)
+      Fixpoint.free(feats)
     }
   }
 
@@ -6737,7 +6689,7 @@ object LlmQueries {
     * fp row, both near-dup legs — reads the artifact. */
   private def audioFpFrame(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"audio-fp-frame:$d")(
-      chkSer(audioFingerprints(s, d)
+      Fixpoint.ser(audioFingerprints(s, d)
         .select(col("doc_id"), col("n_frames"), col("fp"))))
 
   def audioNearDup(s: SparkSession, d: String): DataFrame = {
@@ -6794,7 +6746,7 @@ object LlmQueries {
         col("x.band_i"), col("x.band_v"))
     val fp = audioFpFrame(s, d)
     val baseBands = SnapshotMemo.getOrCompute(s, s"audio-fp-index:$d") {
-      chkSer(bandsOf(fp.filter(!expr(arrivingShardPred))))
+      Fixpoint.ser(bandsOf(fp.filter(!expr(arrivingShardPred))))
     }
     val arriving = bandsOf(fp.filter(expr(arrivingShardPred)))
       .select(col("n_frames"), col("band_i"), col("band_v"),
@@ -7036,7 +6988,7 @@ object LlmQueries {
     * next to the media metadata — the artifact IS the operator's
     * output table, a few fixed-width columns per attachment. */
   private def dhashFp(s: SparkSession, d: String): DataFrame =
-    SnapshotMemo.getOrCompute(s, s"dhash-fp:$d") { chkSer(dhashFpOf(s, d)) }
+    SnapshotMemo.getOrCompute(s, s"dhash-fp:$d") { Fixpoint.ser(dhashFpOf(s, d)) }
 
   private def dhashFpOf(s: SparkSession, d: String): DataFrame = {
     import graft.multimodal.ImageHex
@@ -7071,7 +7023,7 @@ object LlmQueries {
   private def imageFeatureFrame(s: SparkSession, d: String): DataFrame =
     SnapshotMemo.getOrCompute(s, s"image-features:$d") {
       import graft.multimodal.ImageHex
-      chkSer(docs(s, d)
+      Fixpoint.ser(docs(s, d)
         .filter(expr("doc_id % 23 = 0"))
         .select(col("doc_id"),
           expr("CAST(doc_id % 12 AS INT)").as("b0"),
@@ -7232,7 +7184,7 @@ object LlmQueries {
   def imageNeardupIncremental(s: SparkSession, d: String): DataFrame = {
     val fp = dhashFp(s, d)
     val baseBands = SnapshotMemo.getOrCompute(s, s"dhash-index:$d") {
-      chkSer(dhashBands(fp.filter(expr(dhashBaseSplit))))
+      Fixpoint.ser(dhashBands(fp.filter(expr(dhashBaseSplit))))
     }
     val arriving = dhashBands(fp.filter(!expr(dhashBaseSplit)))
       .select(col("band_i"), col("band_v"), col("doc_id").as("new_id"),

@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
-import graft.{SnapshotMemo, Tables}
+import graft.{Fixpoint, SnapshotMemo, Tables}
 
 /** Distributed bounded-depth suffix array over the document corpus,
   * built by PREFIX DOUBLING (Manber–Myers), plus the two classic
@@ -91,20 +90,6 @@ object SuffixArray {
     * nothing else to offer them. */
   private def build[A](s: SparkSession)(body: => A): A =
     graft.LoopConf.noAqe(s)(body)
-
-  private def chkSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-
-  /** DISK-resident checkpoint for the BULK SA artifacts (positions,
-    * every rank level, the ranked permutation, the dup-start mask):
-    * six-plus corpus-position-cardinality tables held simultaneously
-    * sum past any capped heap — the sf1/3 GB rehearsal OOM'd in a
-    * block unroll with them memory-resident. Disk is where stored
-    * artifacts live at scale anyway; consumers re-read sequentially.
-    * LogicalRDD preserves the child's partitioning and ordering, so
-    * a block-clustered input stays block-clustered. */
-  private def chkDisk(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.DISK_ONLY)
 
   // ----------------------------------------------------------------
   // Block geometry. B (chars per block) and P (cluster width) derive
@@ -203,7 +188,7 @@ object SuffixArray {
       // trailing empty-string artifact (Java regex split semantics)
       // — dropped by the i <= dlen filter; the appended 0x01 char
       // lands at i = dlen with ascii = 1, the sentinel row.
-      val out = chkDisk(clusterByBlock(offs
+      val out = Fixpoint.disk(clusterByBlock(offs
         .select(col("doc_id"), col("dlen"), col("off"),
           posexplode(split(concat(col("text"), lit("\u0001")), ""))
             .as(Seq("i", "ch")))
@@ -216,8 +201,7 @@ object SuffixArray {
         .withColumn("block", expr(s"gpos div ${b}L")), p))
       // `ranged` holds the full corpus text; the eager checkpoint
       // above no longer needs it
-      org.apache.spark.sql.graftshim.ColumnBridge
-        .freeLocalCheckpoint(rangedChk)
+      Fixpoint.free(rangedChk)
       out
     } }
 
@@ -234,12 +218,11 @@ object SuffixArray {
   // ----------------------------------------------------------------
   private[llm] def denseRank(df: DataFrame, keyCols: Seq[String],
       out: String): DataFrame = {
-    val sorted = df
+    val sorted = Fixpoint.disk(df
       .repartitionByRange(
         df.sparkSession.sessionState.conf.numShufflePartitions,
         keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col): _*)
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
+      .sortWithinPartitions(keyCols.map(col): _*))
     val withId = sorted
       .withColumn("_pid", spark_partition_id())
       .withColumn("_mid", monotonically_increasing_id())
@@ -343,7 +326,7 @@ object SuffixArray {
         val packed = (1 to 7).foldLeft(col("rank")) { (acc, i) =>
           acc * k + coalesce(col(s"_c$i"), lit(0L))
         }
-        chkDisk(led.select(col("gpos"), packed.as("rank"),
+        Fixpoint.disk(led.select(col("gpos"), packed.as("rank"),
           col("block")))
       } else {
         val (b, p) = geom(s, d)
@@ -363,14 +346,14 @@ object SuffixArray {
           // below the radix, so the packed value also decodes by
           // div/mod.
           val k = halfBound + 3
-          chkDisk(keys.select(col("gpos"),
+          Fixpoint.disk(keys.select(col("gpos"),
             (col("rank") * k + (col("rank2") + 2)).as("rank"),
             col("block")))
         } else {
           val ranked = denseRank(
             keys.select("rank", "rank2").distinct(),
             Seq("rank", "rank2"), "nrank")
-          chkDisk(clusterByBlock(
+          Fixpoint.disk(clusterByBlock(
             keys.join(ranked.hint("merge"), Seq("rank", "rank2"))
               .select(col("gpos"), col("nrank").as("rank"),
                 col("block")), p))
@@ -392,7 +375,7 @@ object SuffixArray {
     SnapshotMemo.getOrCompute(s, s"sa-blocks32:$d") { build(s) {
      graft.LoopConf.sizedCompute(s, corpusLen(s, d)) {
       val (b, _) = geom(s, d)
-      chkDisk(withShifted(rankLevel(s, d, 8), "rank",
+      Fixpoint.disk(withShifted(rankLevel(s, d, 8), "rank",
           Seq(8, 16, 24), b, dd => s"b${dd / 8}")
         .select(col("block"), col("gpos"), col("rank").as("b0"),
           coalesce(col("b1"), lit(0L)).as("b1"),
@@ -422,13 +405,13 @@ object SuffixArray {
         // frame — no pair self-join, no re-clustering (plcpPacked)
         val joined = pos
           .join(blocks32(s, d).hint("merge"), Seq("block", "gpos"))
-        chkDisk(denseRank(joined,
+        Fixpoint.disk(denseRank(joined,
           Seq("b0", "b1", "b2", "b3", "gpos"), "sa_rank"))
       } else {
         val joined = pos
           .join(rankLevel(s, d, Depth).hint("merge"),
             Seq("block", "gpos"))
-        chkDisk(denseRank(joined, Seq("rank", "gpos"), "sa_rank"))
+        Fixpoint.disk(denseRank(joined, Seq("rank", "gpos"), "sa_rank"))
       }
      }
     } }
@@ -476,7 +459,7 @@ object SuffixArray {
             count(lit(1)).over(Window.partitionBy("rank"))))
         .filter(col("_c") > 1)
         .select("block", "gpos")
-      chkDisk(positions(s, d)
+      Fixpoint.disk(positions(s, d)
         .filter(col("lpos") <= col("dlen") - (SpanL - 1))
         .select("block", "gpos", "doc_id", "lpos")
         .join(clusterByBlock(dups, p).hint("merge"),
@@ -622,7 +605,7 @@ object SuffixArray {
       col("l1") + when(col("l1") === 8,
         col("l2") + when(col("l2") === 8, col("l3"))
           .otherwise(lit(0))).otherwise(lit(0))).otherwise(lit(0))
-    chkSer(withL.select(
+    Fixpoint.ser(withL.select(
       least(total.cast(LongType), lit(Depth.toLong)).as("lcp")))
   }
 
@@ -633,9 +616,8 @@ object SuffixArray {
     * 6-level lift is one plan with ~12 pipelined sorts whose
     * concurrent spill pressure OOM'd a borderline sf1/3 GB run. */
   private def plcpLift(s: SparkSession, d: String): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
     val sa = saRanked(s, d).select("sa_rank", "gpos")
-    var cur = chkDisk(sa
+    var cur = Fixpoint.disk(sa
       .join(sa.select((col("sa_rank") - 1).as("sa_rank"),
         col("gpos").as("gb")).hint("merge"), Seq("sa_rank"))
       .select(col("gpos").as("ia"), col("gb").as("ib"),
@@ -645,7 +627,7 @@ object SuffixArray {
       val lev = rankLevel(s, d, k)
       val eq = col("ra").isNotNull && col("rb").isNotNull &&
         col("ra") === col("rb")
-      val next = chkDisk(cur
+      val next = Fixpoint.disk(cur
         .join(lev.select(col("gpos").as("ia"), col("rank").as("ra"))
           .hint("merge"), Seq("ia"), "left")
         .join(lev.select(col("gpos").as("ib"), col("rank").as("rb"))
@@ -654,13 +636,13 @@ object SuffixArray {
           when(eq, col("ia") + k).otherwise(col("ia")).as("ia"),
           when(eq, col("ib") + k).otherwise(col("ib")).as("ib"),
           when(eq, col("lcp") + k).otherwise(col("lcp")).as("lcp")))
-      shim.freeLocalCheckpoint(cur)
+      Fixpoint.free(cur)
       cur = next
       k /= 2
     }
-    val out = chkSer(
+    val out = Fixpoint.ser(
       cur.select(least(col("lcp"), lit(Depth.toLong)).as("lcp")))
-    shim.freeLocalCheckpoint(cur)
+    Fixpoint.free(cur)
     out
   }
 }

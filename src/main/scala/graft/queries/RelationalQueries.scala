@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fixpoint, Tables}
 import Exact._
 
 /** Relational query suite over the TPC-H-ish star schema
@@ -211,7 +211,6 @@ object RelationalQueries {
     * stored labels + delta pairs (spec surface). */
   private[graft] def componentsMerge(baseLabels: DataFrame,
       dPairs: DataFrame): DataFrame = {
-      val shim = org.apache.spark.sql.graftshim.ColumnBridge
       // endpoint → representative (or itself when new)
       def lbl(side: String): DataFrame = baseLabels
         .select(col("doc_id").as(side),
@@ -252,11 +251,9 @@ object RelationalQueries {
         .select(col("cluster_id").as("component_id"),
           col("size").as("n_parts"))
         .withColumn("touched", lit(false))
-      val out = untouched.unionByName(touched)
-        .orderBy(col("component_id"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      shim.freeLocalCheckpoint(chk)
+      val out = Fixpoint.ser(untouched.unionByName(touched)
+        .orderBy(col("component_id")))
+      Fixpoint.free(chk)
       out
     }
 
@@ -265,16 +262,13 @@ object RelationalQueries {
     * CC, component-size rollup checkpointed with the interior label
     * table freed. */
   private[graft] def componentsOf(li: DataFrame): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
     val (chk, labels) =
       graft.llm.LlmQueries.ccFromPairsChk(linePairsOf(li))
-    val rollup = labels
+    val rollup = Fixpoint.ser(labels
       .groupBy(col("cluster_id").as("component_id"))
       .agg(count(lit(1)).as("n_parts"))
-      .orderBy(col("component_id"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    shim.freeLocalCheckpoint(chk)
+      .orderBy(col("component_id")))
+    Fixpoint.free(chk)
     rollup
   }
 
@@ -420,9 +414,8 @@ object RelationalQueries {
     * no join-back. Per round: one node-keyed join of the static edge
     * table against the label table (both data-dependent — shuffle
     * equi-joins), one (node, label) combine-collapsed count, one
-    * node-keyed max; label tables localCheckpoint serialized with
-    * the superseded round freed (the kcore discipline). Output is
-    * the community-size rollup on the final labels. */
+    * node-keyed max; the rounds run on [[graft.Fixpoint.iterate]].
+    * Output is the community-size rollup on the final labels. */
   val LpaRounds = 4
 
   def communities(spark: SparkSession, dir: String): DataFrame =
@@ -431,17 +424,15 @@ object RelationalQueries {
     // checkpoints FREED once it materializes — only the rollup
     // stays resident
     graft.SnapshotMemo.getOrCompute(spark, s"lpa-labels:$dir") {
-      val shim = org.apache.spark.sql.graftshim.ColumnBridge
       val (edges, lab, rollup) = communityRounds(
         Tables(spark, dir, "lineitem")
           .filter(col("l_linenumber") <= 3)
           .select(col("l_orderkey").as("ok"),
             col("l_partkey").as("pk")),
         LpaRounds)
-      val snap = rollup.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      shim.freeLocalCheckpoint(edges)
-      shim.freeLocalCheckpoint(lab)
+      val snap = Fixpoint.ser(rollup)
+      Fixpoint.free(edges)
+      Fixpoint.free(lab)
       snap
     }
 
@@ -449,7 +440,7 @@ object RelationalQueries {
     * table (spec surface — transient form; the interior checkpoints
     * live until the session drops them, artifact callers go through
     * [[communities]]). */
-  private[queries] def communitiesOf(li: DataFrame,
+  private[graft] def communitiesOf(li: DataFrame,
       rounds: Int): DataFrame = communityRounds(li, rounds)._3
 
   /** Returns (edge checkpoint, final label checkpoint, lazy rollup)
@@ -457,39 +448,33 @@ object RelationalQueries {
     * materializes. */
   private def communityRounds(li: DataFrame,
       rounds: Int): (DataFrame, DataFrame, DataFrame) = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val edges = chk(li.as("x").join(li.as("y"),
+    val n = count(lit(1)).as("n")
+    val (edges, em) = Fixpoint.observed(li.as("x").join(li.as("y"),
         col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
       .select(col("x.pk").as("a"), col("y.pk").as("b"))
-      .distinct())
+      .distinct(), n)
     val enc = lit(1L << 40)
-    var lab = chk(edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node")))
-      .distinct().withColumn("lab", col("node")))
-    var r = 0
     // interior exchanges sized to the measured edge count
     // (graft.LoopConf discipline)
-    graft.LoopConf.sized(li.sparkSession, edges.count()) {
-    while (r < rounds) {
+    graft.LoopConf.sized(li.sparkSession, Fixpoint.long(em, "n")) {
+    val start = Fixpoint.observed(edges.select(col("a").as("node"))
+      .union(edges.select(col("b").as("node")))
+      .distinct().withColumn("lab", col("node")), n)
+    // a fixed round count: stop never fires
+    val lab = Fixpoint.iterate("lpa", start, Seq(n), rounds) { (lab, _, _) =>
       val nbr = edges
         .join(lab.select(col("node").as("b"), col("lab")), Seq("b"))
         .select(col("a").as("node"), col("lab"))
         .union(edges
           .join(lab.select(col("node").as("a"), col("lab")), Seq("a"))
           .select(col("b").as("node"), col("lab")))
-      val next = nbr.groupBy(col("node"), col("lab"))
+      nbr.groupBy(col("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(max(col("c") * enc + (enc - 1 - col("lab"))).as("e"))
         .select(col("node"),
           (enc - 1 - pmod(col("e"), enc)).as("lab"))
-      val prev = lab
-      lab = chk(next)
-      shim.freeLocalCheckpoint(prev)
-      r += 1
-    }
+    } { (_, _) => false }.state
     (edges, lab, lab.groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_members")))
     }
@@ -593,11 +578,9 @@ object RelationalQueries {
     * storage for the session's lifetime (the pagerank-window leak
     * class). */
   private[graft] def skylineArtifact(pts: DataFrame): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
     val (ranged, out) = skylineRanged(pts)
-    val snap = out.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    shim.freeLocalCheckpoint(ranged)
+    val snap = Fixpoint.ser(out)
+    Fixpoint.free(ranged)
     snap
   }
 
@@ -615,10 +598,8 @@ object RelationalQueries {
     // range partition on price ONLY (ties must stay co-located),
     // then sort each partition by (price asc, size desc) so the walk
     // sees each price group's max first
-    val ranged = pts.repartitionByRange(nParts, col("cents"))
-      .sortWithinPartitions(col("cents").asc, col("size").desc)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val ranged = Fixpoint.ser(pts.repartitionByRange(nParts, col("cents"))
+      .sortWithinPartitions(col("cents").asc, col("size").desc))
     // Both passes walk the checkpointed partitions at the RDD level
     // with mapPartitionsWithIndex: the index is the PARENT
     // partition's own (the range order), immune to a downstream
@@ -793,11 +774,9 @@ object RelationalQueries {
     // join — the operator itself — stays live per run
     triangleFrom(graft.SnapshotMemo.getOrCompute(spark,
       s"tri-oriented:$dir") {
-      orientedOf(Tables(spark, dir, "lineitem")
+      Fixpoint.ser(orientedOf(Tables(spark, dir, "lineitem")
         .filter(col("l_linenumber") <= 3)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))))
     })
 
   /** [[triangleCount]]'s core over an explicit (ok, pk) membership
@@ -856,15 +835,12 @@ object RelationalQueries {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val baseEdges = graft.SnapshotMemo.getOrCompute(spark,
         s"tri-base-edges:$dir") {
-        coEdgesOf(li.filter(col("ok") % 10 =!= 7)).localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        Fixpoint.ser(coEdgesOf(li.filter(col("ok") % 10 =!= 7)))
       }
       val baseCount = graft.SnapshotMemo.getOrCompute(spark,
         s"tri-base-count:$dir") {
-        triangleFrom(orientedFromEdges(baseEdges))
-          .select(col("n_triangles").as("n_base"))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        Fixpoint.ser(triangleFrom(orientedFromEdges(baseEdges))
+          .select(col("n_triangles").as("n_base")))
       }
       trianglesMerge(baseCount, baseEdges,
         coEdgesOf(li.filter(col("ok") % 10 === 7)))
@@ -927,10 +903,10 @@ object RelationalQueries {
     * and two semi-joins of the edge table against the surviving-node
     * set — every exchange keyed, never all-pairs; the edge table
     * shrinks monotonically, so round cost is proportional to the
-    * surviving graph. Each round's edge table is localCheckpoint'd
-    * (O(1) plans) and the superseded round freed. Convergence is the
-    * 1-row edge-count diff (peeling at k ≥ 1 removes at least one
-    * edge per non-final round).
+    * surviving graph. The rounds run on [[Fixpoint.iterate]];
+    * convergence is an unchanged edge count, observed on the round's
+    * checkpoint (peeling at k ≥ 1 removes at least one edge per
+    * non-final round).
     *
     * Round bound: the DuckDB oracle unrolls [[KcoreRounds]] peel
     * rounds as chained CTEs — sound because peeling is IDEMPOTENT at
@@ -955,7 +931,7 @@ object RelationalQueries {
     coreDegrees(core)
   }
 
-  private[queries] def kcoreOf(li: DataFrame, k: Int,
+  private[graft] def kcoreOf(li: DataFrame, k: Int,
       maxRounds: Int): DataFrame =
     coreDegrees(kcoreEdges(li, k, maxRounds))
 
@@ -966,43 +942,30 @@ object RelationalQueries {
 
   private[queries] def kcoreEdges(li: DataFrame, k: Int,
       maxRounds: Int): DataFrame = {
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    def chk(df: DataFrame): DataFrame = df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var edges = chk(li.as("x").join(li.as("y"),
+    val n = count(lit(1)).as("n")
+    val start = Fixpoint.observed(li.as("x").join(li.as("y"),
         col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
       .select(col("x.pk").as("a"), col("y.pk").as("b"))
-      .distinct())
-    var nEdges = edges.count()
-    var rounds = 0
-    var converged = false
+      .distinct(), n)
     // interior exchanges sized to the measured edge count
     // (graft.LoopConf discipline)
-    graft.LoopConf.sized(li.sparkSession, nEdges) {
-    while (!converged) {
-      val keep = edges.select(col("a").as("n"))
-        .union(edges.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k)
-        .select(col("n"))
-      val next = chk(edges
-        .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("n").as("b")), Seq("b"), "left_semi"))
-      val nNext = next.count()
-      if (nNext == nEdges) {
-        shim.freeLocalCheckpoint(next)
-        converged = true
-      } else {
-        rounds += 1
-        require(rounds <= maxRounds,
+    graft.LoopConf.sized(li.sparkSession, Fixpoint.long(start._2, "n")) {
+      Fixpoint.iterate("kcore", start, Seq(n)) { (edges, _, round) =>
+        // every round before this one removed an edge
+        require(round <= maxRounds + 1,
           s"k-core peel exceeded $maxRounds rounds — raise the " +
             "oracle's unroll bound in lockstep")
-        shim.freeLocalCheckpoint(edges)
-        edges = next
-        nEdges = nNext
-      }
-    }
-    edges
+        val keep = edges.select(col("a").as("n"))
+          .union(edges.select(col("b").as("n")))
+          .groupBy(col("n")).agg(count(lit(1)).as("dg"))
+          .filter(col("dg") >= k)
+          .select(col("n"))
+        edges
+          .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
+      } { (prev, cur) =>
+        Fixpoint.long(prev, "n") == Fixpoint.long(cur, "n")
+      }.state
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
+import graft.Fixpoint
 import graft.functions.IsValidIri
 import Vocab._
 
@@ -225,8 +226,9 @@ object RdfOps {
   }
 
   /** SPARQL property-path reachability `p{1,maxHops}` (the bounded
-    * form of `dcterms:relation+`) — a recursive query Spark SQL
-    * cannot express (no recursive CTE); implemented as SEMI-NAIVE
+    * form of `dcterms:relation+`) — a cycle-safe set closure Spark
+    * SQL cannot express (its `WITH RECURSIVE` rejects `UNION` in the
+    * recursive term); implemented as SEMI-NAIVE
     * Datalog iteration ([[walk]]), the standard distributed
     * transitive-closure shape: each round joins only the FRONTIER
     * (pairs first reached last round) against the edge table, so
@@ -287,7 +289,7 @@ object RdfOps {
     // the edge count the ladder sizes itself by rides on the dict
     // build, which scans the edges anyway
     val seen = Observation()
-    val dict = chkSerW(edges.observe(seen, count(lit(1)).as("n"))
+    val dict = Fixpoint.ser(edges.observe(seen, nRows)
       .select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
       .withColumn("nid", monotonically_increasing_id()))
@@ -300,15 +302,15 @@ object RdfOps {
     val seedsN = seeds
       .join(dict.select(col("node").as("src"), col("nid")), Seq("src"))
       .select(col("nid").as("src"))
-    val pN = ladder(eN, seedsN, observedRows(seen))
-    val out = chkSerW(pN
+    val pN = ladder(eN, seedsN, Fixpoint.long(seen.get, "n"))
+    val out = Fixpoint.ser(pN
       .join(dict.select(col("nid").as("src"), col("node").as("_sv")),
         Seq("src"))
       .join(dict.select(col("nid").as("dst"), col("node").as("_dv")),
         Seq("dst"))
       .select(col("_sv").as("src"), col("_dv").as("dst")))
-    shim.freeLocalCheckpoint(pN)
-    shim.freeLocalCheckpoint(dict)
+    Fixpoint.free(pN)
+    Fixpoint.free(dict)
     out
     }
 
@@ -364,12 +366,12 @@ object RdfOps {
     // (a seed scan, plus the dictionary join for encoded keys) would
     // otherwise re-run each phase.
     graft.LoopConf.sized(edges.sparkSession, math.max(edgeRows, 1L)) {
-      em = chkSerW(edges.select(col("src"), col("dst")).distinct())
-      id = chkSerW(seeds.select(col("src"), col("src").as("dst")).distinct())
-      val (p0, n0) = chkCounted(
-        em.join(id.select(col("src")), Seq("src"), "left_semi"))
+      em = Fixpoint.ser(edges.select(col("src"), col("dst")).distinct())
+      id = Fixpoint.ser(seeds.select(col("src"), col("src").as("dst")).distinct())
+      val (p0, m0) = Fixpoint.observed(
+        em.join(id.select(col("src")), Seq("src"), "left_semi"), nRows)
       p = p0
-      n = n0
+      n = Fixpoint.long(m0, "n")
     }
     var done = n == 0
     // interior exchanges sized to the measured pair count
@@ -383,28 +385,29 @@ object RdfOps {
     // 8.4 s with AQE vs 24 jobs / 3.2 s without — identical result).
     graft.LoopConf.sized(edges.sparkSession, math.max(n, 1L)) {
     while (!done) {
-      val em2 = chkSerW(em.as("l")
+      val em2 = Fixpoint.ser(em.as("l")
         .join(em.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
         .distinct())
-      shim.freeLocalCheckpoint(em)
+      Fixpoint.free(em)
       em = em2
       val stepped = p.union(id).as("l")
         .join(em.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      val (pNew, m) = chkCounted(p.union(stepped).distinct())
+      val (pNew, pm) = Fixpoint.observed(p.union(stepped).distinct(), nRows)
+      val m = Fixpoint.long(pm, "n")
       if (m == n) {
-        shim.freeLocalCheckpoint(pNew)
+        Fixpoint.free(pNew)
         done = true
       } else {
-        shim.freeLocalCheckpoint(p)
+        Fixpoint.free(p)
         p = pNew
         n = m
       }
     }
     }
-    shim.freeLocalCheckpoint(em)
-    shim.freeLocalCheckpoint(id)
+    Fixpoint.free(em)
+    Fixpoint.free(id)
     p
     }
   }
@@ -438,7 +441,7 @@ object RdfOps {
     val reachers = known
       .union(seeds.select(col("src"), col("src").as("dst")))
     val de = deltaEdges.select(col("src").as("u"), col("dst").as("v"))
-    val frontier = chkSerW(reachers.join(de, reachers("dst") === col("u"))
+    val frontier = Fixpoint.ser(reachers.join(de, reachers("dst") === col("u"))
       .select(reachers("src"), col("v").as("dst")).distinct()
       .join(known, Seq("src", "dst"), "left_anti"))
     val known2 = known.union(frontier)
@@ -461,24 +464,7 @@ object RdfOps {
     * unchanged. */
   private val CompactEvery = 8
 
-  private def shim = org.apache.spark.sql.graftshim.ColumnBridge
-
-  private def chkSerW(df: DataFrame): DataFrame = df.localCheckpoint(true,
-    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
-  /** [[chkSerW]] plus the checkpoint's row count, observed on the
-    * checkpoint's own job instead of a second job re-reading it. */
-  private def chkCounted(df: DataFrame): (DataFrame, Long) = {
-    val seen = Observation()
-    val out = chkSerW(df.observe(seen, count(lit(1)).as("n")))
-    (out, observedRows(seen))
-  }
-
-  /** The row count observed as `n`. The optimizer drops the
-    * observation of a plan it proves empty, leaving no metric at
-    * all — that is zero rows. */
-  private def observedRows(seen: Observation): Long =
-    seen.get.getOrElse("n", 0L).asInstanceOf[Long]
+  private val nRows = count(lit(1)).as("n")
 
   /** The one FRONTIER walk (semi-naive rounds) behind [[reachable]]
     * and [[reachablePlusDelta]]: starting from the `start` pairs,
@@ -495,8 +481,9 @@ object RdfOps {
     // per round paid a parquet scan per hop (measured ~40% of
     // rdf_reachable's cold task time). Serialized+spillable, freed
     // before return; its row count rides on the checkpoint job.
-    val (e, ec) = chkCounted(edges.select(col("src").as("e_src"),
-      col("dst").as("e_dst")))
+    val (e, em) = Fixpoint.observed(edges.select(col("src").as("e_src"),
+      col("dst").as("e_dst")), nRows)
+    val ec = Fixpoint.long(em, "n")
     val empty = start.select(col("src"), col("dst"), lit(0).as("hops"))
       .limit(0)
     var frontier = start.select(col("src"), col("dst"))
@@ -539,12 +526,12 @@ object RdfOps {
           // frame, and freeing a localCheckpoint kills its blocks with
           // no lineage to recompute from
           val prefix = parts.dropRight(1)
-          val compacted = chkSerW(prefix.reduce(_.union(_)))
-          prefix.foreach(shim.freeLocalCheckpoint)
+          val compacted = Fixpoint.ser(prefix.reduce(_.union(_)))
+          prefix.foreach(Fixpoint.free)
           parts = Vector(compacted, parts.last)
         }
       } else {
-        shim.freeLocalCheckpoint(frame)
+        Fixpoint.free(frame)
       }
       d += 1
     }
@@ -552,11 +539,11 @@ object RdfOps {
     // and release the interior rounds' blocks (and the edge
     // checkpoint) for the session
     val folded = if (parts.size > 1) {
-      val out = chkSerW(reached)
-      parts.foreach(shim.freeLocalCheckpoint)
+      val out = Fixpoint.ser(reached)
+      parts.foreach(Fixpoint.free)
       out
     } else reached
-    shim.freeLocalCheckpoint(e)
+    Fixpoint.free(e)
     folded
     }
   }

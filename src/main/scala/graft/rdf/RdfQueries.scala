@@ -3,6 +3,7 @@ package graft.rdf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
 import graft.functions.IriUtil
 import Vocab._
 
@@ -771,9 +772,7 @@ object RdfQueries {
       // the deductive closure is corpus-output-scale (~4.5 M rows at
       // sf1) and a memory-first unroll of it DURING its own build
       // OOM'd the capped-heap rehearsal
-      def chkDisk(df: DataFrame): DataFrame = df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      chkDisk(rdfsEntail(s, d).select(
+      Fixpoint.disk(rdfsEntail(s, d).select(
         lit("entail").as("graph"),
         col("subject"), lit("iri").as("subject_kind"),
         col("predicate"),
@@ -856,7 +855,7 @@ object RdfQueries {
   private def chainClosure(s: SparkSession, d: String,
       ns: String): DataFrame =
     graft.SnapshotMemo.getOrCompute(s, s"rdfs-chain-closure:$ns:$d") {
-      chkSer(chainClosureN(s, d)
+      Fixpoint.ser(chainClosureN(s, d)
         .select(concat(lit(ns), col("src")).as("src"),
           concat(lit(ns), col("dst")).as("dst")))
     }
@@ -1320,9 +1319,10 @@ object RdfQueries {
   /** SPARQL property path `dcterms:relation{1,8}` from every
     * Rijksmonument-typed subject: bounded transitive closure with
     * min-hop semantics, via [[RdfOps.reachable]]'s semi-naive
-    * iteration (Spark SQL has no recursive CTE — this is a custom
-    * iterative operator; the DuckDB oracle uses its native
-    * WITH RECURSIVE as an independent implementation). */
+    * iteration (Spark's `WITH RECURSIVE` rejects `UNION` in the
+    * recursive term, so a cycle-safe set closure cannot use it —
+    * this is a custom iterative operator; the DuckDB oracle uses its
+    * native WITH RECURSIVE as an independent implementation). */
   private def reachableQ(s: SparkSession, d: String): DataFrame = {
     val t = tri(s, d)
     val edges = t.filter(col("predicate") === DctermsRelation &&
@@ -1364,16 +1364,6 @@ object RdfQueries {
         col("obj_value") === CeoRijksmonument)
       .select(col("subject").as("src")).distinct()
 
-  /** Serialized-block local checkpoint — the storage discipline for
-    * big memoized artifacts (same contract as the llm family's
-    * `chkSer`): MEMORY_AND_DISK_SER keeps a closure-scale pair table
-    * from pinning deserialized row objects in the driver-sized heap
-    * of a single-shot cold run, at a bounded one-time ser/deser CPU
-    * cost per consumer. */
-  private def chkSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
   /** The FULL `p+` pair closure of the doubling fixture — walked
     * once per (session, dir) from EVERY edge source, the shared base
     * artifact all doubling-graph closures filter from: the seeded
@@ -1411,7 +1401,7 @@ object RdfQueries {
     * a broadcast semi-join on the dimension-scale seed set. */
   private def starClosure(s: SparkSession, d: String): DataFrame =
     graft.SnapshotMemo.getOrCompute(s, s"star-closure:$d")(
-      chkSer(fullClosure(s, d)
+      Fixpoint.ser(fullClosure(s, d)
         .join(broadcast(starSeeds(s, d)), Seq("src"), "left_semi")))
 
   /** The stored `p+` closure artifact, exposed so the scale
@@ -1597,10 +1587,8 @@ object RdfQueries {
     *
     * Scale shape: per round one dst-keyed exchange (the contrib
     * aggregate), a broadcast 1-row dangling-mass aggregate, and a
-    * node-keyed join against the checkpointed rank table; rank/edge
-    * tables are localCheckpoint'ed per round (plan stays O(1), the
-    * [[RdfOps.reachable]] walk's discipline) and superseded rounds are
-    * freed. The converged table is a per-snapshot stored artifact
+    * node-keyed join against the checkpointed rank table; the rounds
+    * run on [[graft.Fixpoint.iterate]]. The converged table is a per-snapshot stored artifact
     * ([[starClosure]] discipline) — consumers read the result, not
     * the loop. */
   private def pagerankConverged(s: SparkSession, d: String): DataFrame =
@@ -1670,28 +1658,27 @@ object RdfQueries {
     * stored rank table and the number of rounds actually executed
     * (the incremental path's O(re-convergence) evidence — specs
     * assert it, the driver never pays more than it). */
-  private[rdf] def pagerankLoop(s: SparkSession, e: DataFrame,
+  private[graft] def pagerankLoop(s: SparkSession, e: DataFrame,
       warmInit: Option[DataFrame], cap: Int): (DataFrame, Int) = {
     val odeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
     // node set with a per-node has_out flag: ¬has_out IS the
     // dangling set, and carrying the flag in the rank table lets one
     // aggregate per round produce BOTH the convergence diffs and the
     // NEXT round's dangling mass.
-    val nodes = e.select(col("src").as("node"))
+    val (nodes, nm) = Fixpoint.observed(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(e.select(col("src").as("node")).distinct()
           .withColumn("has_out", lit(true)),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("has_out"), lit(false))
-        .as("has_out"))
-      .localCheckpoint()
+        .as("has_out")), count(lit(1)).as("n"))
     // scalar plumbing: n, the uniform share, the teleport term and
-    // the per-round dangling mass are all SINGLE NUMBERS — collected
-    // to the driver (bounded, one row) and folded into the round's
+    // the per-round dangling mass are all SINGLE NUMBERS — observed
+    // on the checkpoints' own jobs and folded into the round's
     // expressions as literals instead of riding broadcast crossJoins
     // through every plan. Long division in Scala matches SQL `div`
     // on these non-negative operands.
-    val n = nodes.count()
+    val n = Fixpoint.long(nm, "n")
     // the edge table's checkpoint is REPARTITIONED to the loop's own
     // sized width: the loop scans it every round, and with AQE off in
     // the interior (below) nothing coalesces a wider-than-needed scan
@@ -1709,16 +1696,14 @@ object RdfQueries {
     // THE DETECTION WINDOW RIDES AS COLUMNS, NOT AS SEPARATE STATE
     // TABLES: the frame at round `it` is (node, has_out, pr_0 ..
     // pr_W) with pr_j = the rank at state s_{it−j} (W = PrcWindow).
-    // One aggregate per round then yields EVERY window diff
-    // d_j = Σ|pr_0 − pr_j| plus the dangling mass — one driver job
-    // per round, zero joins for convergence. The per-state diffSum
-    // join scans this replaces cost up to PrcWindow extra jobs per
-    // round through the whole cycle-detection tail: measured 531
-    // jobs / 18.0 s wall for 7.0 s of task time on
-    // rdf_pagerank_incr cold (ProfileQ, this round) — the loop was
-    // pure barrier overhead. Cost: W extra long columns on a
-    // node-scale frame, strictly less state than the previous
-    // Vector of W separate checkpointed rank tables.
+    // The aggregates observed on each round's checkpoint then yield
+    // EVERY window diff d_j = Σ|pr_0 − pr_j| plus the dangling mass —
+    // one driver job per round, zero joins for convergence. The
+    // per-state diffSum join scans this replaces cost up to PrcWindow
+    // extra jobs per round through the whole cycle-detection tail:
+    // measured 531 jobs / 18.0 s wall for 7.0 s of task time on
+    // rdf_pagerank_incr cold (ProfileQ). Cost: W extra long columns
+    // on a node-scale frame.
     val W = PrcWindow
     val prCols = (0 to W).map(j => s"pr_$j")
     val init = (warmInit match {
@@ -1731,69 +1716,48 @@ object RdfQueries {
         .select(Seq(col("node"), col("has_out"),
           coalesce(col("wpr"), lit(uniform)).as("pr_0")) ++
           (1 to W).map(j => lit(null).cast("long").as(s"pr_$j")): _*)
-    }).localCheckpoint()
-    var dm = init.agg(coalesce(sum(when(!col("has_out"), col("pr_0"))),
-      lit(0L))).head.getLong(0)
-    var cur = init
-    var result: DataFrame = null
-    var it = 0
-    while (result == null && it < cap) {
-      val dmn = dm / n
+    })
+    // d_j stays null while lag j reaches past the first state (pr_j
+    // is still all null there), so only lags that exist can match
+    val metrics = coalesce(sum(when(!col("has_out"), col("pr_0"))), lit(0L))
+        .as("dm") +: (1 to W).map(j =>
+      sum(abs(col("pr_0") - col(s"pr_$j"))).as(s"d_$j"))
+    // smallest lag p with s_it == s_{it−p} (latest window state first)
+    def period(m: Fixpoint.Metrics): Option[Int] =
+      (1 to W).find(j => m.get(s"d_$j").contains(0L))
+    val res = Fixpoint.iterate("pagerank", Fixpoint.observed(init, metrics: _*),
+        metrics, cap) { (cur, m, _) =>
+      val dmn = Fixpoint.long(m, "dm") / n
       val contrib = ed.join(cur.select(col("node"), col("pr_0")),
           ed("src") === col("node"))
         .select(col("dst"), expr("pr_0 div odeg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
         .select(col("dst").as("cnode"), col("contrib"))
-      // LAZY checkpoint: the combined window-diff+dm aggregate below
-      // is the round's only action and materializes it as a side
-      // effect. The column shift pr_j := pr_{j−1} is a pure
-      // projection — s_{it−j} for j ≤ W stays addressable without
-      // holding any older frame. (The per-round dmn literal was also
-      // tried as broadcast data to stabilize the codegen source —
-      // measured no wall change and +1 job/round; literal kept.)
-      val next = cur
+      // The column shift pr_j := pr_{j−1} is a pure projection —
+      // s_{it−j} for j ≤ W stays addressable without holding any
+      // older frame. (The per-round dmn literal was also tried as
+      // broadcast data to stabilize the codegen source — measured no
+      // wall change and +1 job/round; literal kept.)
+      cur
         .join(contrib, col("node") === col("cnode"), "left")
         .select(Seq(col("node"), col("has_out"),
           expr(s"${base15}L + " +
             s"(85 * (coalesce(contrib, 0L) + ${dmn}L)) div 100")
             .as("pr_0")) ++
           (1 to W).map(j => col(s"pr_${j - 1}").as(s"pr_$j")): _*)
-        .localCheckpoint(false)
-      it += 1 // `next` is state s_it
-      val roundAgg = next
-        .agg(
-          coalesce(sum(when(!col("has_out"), col("pr_0"))), lit(0L))
-            .as("dm"),
-          (1 to W).map(j =>
-            coalesce(sum(abs(col("pr_0") - col(s"pr_$j"))), lit(0L))
-              .as(s"d_$j")): _*)
-        .head
-      dm = roundAgg.getLong(0)
-      // smallest lag p with s_it == s_{it−p} — same search order as
-      // the state-table form (latest window state first); lags past
-      // the states that exist (j > it) are never consulted
-      val p = (1 to math.min(it, W))
-        .find(j => roundAgg.getLong(j) == 0L)
-      p.foreach { per =>
-        val t0 = it - per
-        val pick = t0 + (cap - t0) % per // s_cap, still in the window
-        result = next.select(col("node"), col("has_out"),
-          col(s"pr_${it - pick}").as("pr_0"))
-      }
-      if (!(cur eq init))
-        org.apache.spark.sql.graftshim.ColumnBridge
-          .freeLocalCheckpoint(cur)
-      cur = next
+    } { (_, m) => period(m).isDefined }
+    val it = res.rounds // res.state is s_it
+    val out = period(res.metrics).fold(res.state) { per =>
+      val t0 = it - per
+      val pick = t0 + (cap - t0) % per // s_cap, still in the window
+      res.state.select(col("node"), col("has_out"),
+        col(s"pr_${it - pick}").as("pr_0"))
     }
-    val out = if (result != null) result else cur
     // the stored artifact consumers read — materialized EAGERLY so
     // every checkpoint the build pinned can be freed below
-    val stored = chkSer(out.select(col("node"),
+    val stored = Fixpoint.ser(out.select(col("node"),
       col("pr_0").as("pr_scaled")))
-    // free the build's working set (freeLocalCheckpoint is an
-    // idempotent unpersist)
-    val shim = org.apache.spark.sql.graftshim.ColumnBridge
-    Seq(cur, init, ed, nodes).foreach(shim.freeLocalCheckpoint)
+    Seq(res.state, ed, nodes).foreach(Fixpoint.free)
     (stored, it)
     }
     }
@@ -2020,7 +1984,7 @@ object RdfQueries {
     // artifact answers it with a projection swap + broadcast
     // semi-join, no second fixpoint.
     graft.SnapshotMemo.getOrCompute(s, s"inv-plus-closure:$d")(
-      chkSer(fullClosure(s, d)
+      Fixpoint.ser(fullClosure(s, d)
         .select(col("dst").as("src"), col("src").as("dst"))
         .join(broadcast(starSeeds(s, d)), Seq("src"), "left_semi")))
 
@@ -2053,7 +2017,7 @@ object RdfQueries {
     // the assembly
     val closure = graft.SnapshotMemo.getOrCompute(s,
       s"seq-plus-closure:$d")(
-      chkSer(fullClosure(s, d)
+      Fixpoint.ser(fullClosure(s, d)
         .join(broadcast(mids), Seq("src"), "left_semi")
         .select(col("src").as("mid"), col("dst"))))
     succ.join(closure, Seq("mid"))
