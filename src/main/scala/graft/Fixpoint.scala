@@ -41,7 +41,10 @@ object Fixpoint {
     * capped heap, and the sf1 / 3 GB rehearsal OOM'd in a block
     * unroll with them memory-resident. Consumers re-read them
     * sequentially. The LogicalRDD keeps the child's partitioning and
-    * ordering, so a block-clustered input stays block-clustered. */
+    * ordering only when the plan ran with AQE off (as
+    * `SuffixArray.build` runs it): under AQE the checkpoint reports
+    * `UnknownPartitioning` and no ordering (OPTIMIZATION_r18.md,
+    * finding 1), and every consumer re-exchanges. */
   def disk(df: DataFrame): DataFrame =
     df.localCheckpoint(true, StorageLevel.DISK_ONLY)
 
@@ -66,7 +69,9 @@ object Fixpoint {
     *
     * `start` is the initial state as [[observed]] returns it: the
     * caller checkpoints it, so the metrics observed on it can size
-    * the scope (a [[LoopConf]] width) the rounds run in. Round `r`
+    * the scope (a [[LoopConf]] width) the rounds run in. (A start
+    * that is a plan with no metrics is computed inside round 1.)
+    * Round `r`
     * (from 1) builds `step(state, metrics of state, r)` and
     * checkpoints it once with `metrics` observed on that same job;
     * that is the round's only action. The loop ends when

@@ -116,22 +116,14 @@ object CdcChunks {
   // oracle is the from-scratch full-corpus rule filtered to the
   // shard: sharing it IS the incremental contract.
   // ----------------------------------------------------------------
-  private val buildLock = new Object
-
   private[llm] def storedDigestsPath(s: SparkSession,
-      d: String): String = {
-    val path = s"${LlmQueries.storedIndexPath(d)}/cdc-digests"
-    buildLock.synchronized {
-      graft.SnapshotMemo.getOrCompute(s, s"cdc-digests:$d") {
-        chunksOfDocs(Tables(s, d, "documents")
-            .filter(!expr(LlmQueries.arrivingShardPred)))
-          .select("chunk_sha").distinct()
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+      d: String): String =
+    graft.SnapshotMemo.stored(s, d, "cdc-digests") { path =>
+      chunksOfDocs(Tables(s, d, "documents")
+          .filter(!expr(LlmQueries.arrivingShardPred)))
+        .select("chunk_sha").distinct()
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** Pure index probe for a docs batch: its chunk occurrences whose
     * digest EXISTS in the stored index. Broadcast-asymmetric (the

@@ -314,15 +314,17 @@ object LlmQueries {
 
   private def bpeTrainMergesOf(wc0: DataFrame)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var st = Fixpoint.ser(wc0
+    val (st0, m0) = Fixpoint.observed(wc0
       .withColumn("toks", expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))")))
+        "transform(sequence(1, length(word)), i -> substring(word, i, 1))")),
+      count(lit(1)).as("n"))
+    var st = st0
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var k = 1
     var done = false
     // interior exchanges sized to the measured word-vocabulary count
     // (graft.LoopConf discipline)
-    graft.LoopConf.sized(wc0.sparkSession, st.count()) {
+    graft.LoopConf.sized(wc0.sparkSession, Fixpoint.long(m0, "n")) {
     while (k <= bpeRounds && !done) {
       val best = st.filter(size(col("toks")) >= 2)
         .select(col("c"), explode(expr(
@@ -357,23 +359,16 @@ object LlmQueries {
     * queries of the family share ONE training run per corpus
     * snapshot. */
   private def bpeArtifacts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    var trained: Option[(Seq[(Int, String, String, Long)], DataFrame)] =
-      None
-    def train() = {
-      if (trained.isEmpty) trained = Some(bpeTrainMerges(s, d))
-      trained.get
-    }
-    val vocab = SnapshotMemo.getOrCompute(s, s"bpe-vocab:$d") {
+      : (DataFrame, DataFrame) =
+    SnapshotMemo.getOrCompute(s, s"bpe-trained:$d") {
       val spark = s
       import spark.implicits._
-      train()._1.toDF("merge_rank", "lhs", "rhs", "n_at_merge")
+      val (merges, state) = bpeTrainMerges(s, d)
+      (merges.toDF("merge_rank", "lhs", "rhs", "n_at_merge")
         .select(col("merge_rank").cast("int"), col("lhs"), col("rhs"),
-          concat(col("lhs"), col("rhs")).as("merged"), col("n_at_merge"))
+          concat(col("lhs"), col("rhs")).as("merged"), col("n_at_merge")),
+        state)
     }
-    val state = SnapshotMemo.getOrCompute(s, s"bpe-state:$d")(train()._2)
-    (vocab, state)
-  }
 
   /** The learned merge list (`llm_bpe_vocab`): one row per training
     * round — (rank, lhs, rhs, merged symbol, pair count at merge
@@ -401,22 +396,16 @@ object LlmQueries {
     * incremental and streaming rungs apply these merges WITHOUT
     * retraining, so tokenization of arriving text is stable across
     * refreshes until an explicit retrain swaps the artifact. */
-  private[graft] def bpeMergesPath(s: SparkSession, d: String): String = {
-    val path = s"${storedIndexPath(d)}/bpe-merges"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"bpe-merges:$d") {
-        val spark = s
-        import spark.implicits._
-        val (m, st) = bpeTrainMergesOf(wordCountsOf(
-          tokenized(s, d).filter(!expr(arrivingShardPred))))
-        Fixpoint.free(st)
-        m.toDF("merge_rank", "lhs", "rhs", "n_at_merge")
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+  private[graft] def bpeMergesPath(s: SparkSession, d: String): String =
+    SnapshotMemo.stored(s, d, "bpe-merges") { path =>
+      val spark = s
+      import spark.implicits._
+      val (m, st) = bpeTrainMergesOf(wordCountsOf(
+        tokenized(s, d).filter(!expr(arrivingShardPred))))
+      Fixpoint.free(st)
+      m.toDF("merge_rank", "lhs", "rhs", "n_at_merge")
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** Frozen-merge INFERENCE over a (word, c) frame: the stored
     * merge list applied in rank order by ONE codegen kernel call
@@ -710,15 +699,17 @@ object LlmQueries {
   def unigramVocabTrain(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val wc = Fixpoint.ser(tokenized(s, d).select(explode(col("w")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word")).agg(count(lit(1)).as("c")))
+    val (wc, wm) = Fixpoint.observed(
+      tokenized(s, d).select(explode(col("w")).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy(col("word")).agg(count(lit(1)).as("c")),
+      count(lit(1)).as("n"))
     var vocab: Map[String, Long] = unigramVocab(wc)
     val out = Seq.newBuilder[(Int, String, Long)]
     var r = 1
     // interior exchanges sized to the measured vocabulary count
     // (graft.LoopConf discipline)
-    graft.LoopConf.sized(s, wc.count()) {
+    graft.LoopConf.sized(s, Fixpoint.long(wm, "n")) {
     while (r <= unigramEmRounds) {
       val bc = s.sparkContext.broadcast(vocab)
       // E-step: optimal segmentations under the current weights;
@@ -1444,7 +1435,13 @@ object LlmQueries {
     // loop's own shuffles at session width were the dominant cost of
     // the CC family (see LoopConf).
     val nE = Fixpoint.long(em, "n")
-    val edges = e0.repartition(graft.LoopConf.partsFor(nE))
+    // Every round joins the edge list on `dst`: checkpoint it once,
+    // hash-partitioned on `dst` at the rounds' width and with AQE off
+    // so the checkpoint reports that partitioning (see Fixpoint.disk),
+    // and no round re-exchanges it.
+    val edges = graft.LoopConf.noAqe(e0.sparkSession)(Fixpoint.ser(
+      e0.repartition(graft.LoopConf.partsFor(nE), col("dst"))))
+    Fixpoint.free(e0)
     graft.LoopConf.sized(e0.sparkSession, nE) {
     // Convergence via the label sum: min-propagation only ever
     // decreases labels, so the sum is unchanged iff NO label changed —
@@ -1454,8 +1451,11 @@ object LlmQueries {
     // or a wrapped value that could alias the previous sum and end
     // the loop un-converged).
     val sumLabels = sum(col("lbl").cast("decimal(38,0)")).as("lbl_sum")
-    val start = Fixpoint.observed(edges.select(col("src").as("doc"))
-      .distinct().withColumn("lbl", col("doc")), sumLabels)
+    // Round 1 starts from the identity labelling as a plan, not a
+    // checkpoint of its own: with no previous sum, only an empty
+    // round 1 can stop the loop.
+    val start = (edges.select(col("src").as("doc")).distinct()
+      .withColumn("lbl", col("doc")), Map.empty[String, Any])
     val labels = Fixpoint.iterate("cc", start, Seq(sumLabels)) { (labels, _, _) =>
       val pulled = edges.join(labels, col("dst") === col("doc"))
         .select(col("src").as("doc"), col("lbl"))
@@ -1474,7 +1474,7 @@ object LlmQueries {
       prev.getOrElse("lbl_sum", null) == cur.getOrElse("lbl_sum", null)
     }.state
     // the edge list is only needed during the loop
-    Fixpoint.free(e0)
+    Fixpoint.free(edges)
     (labels,
       labels.select(col("doc").as("doc_id"), col("lbl").as("cluster_id")))
     }
@@ -1508,35 +1508,18 @@ object LlmQueries {
   // ---------------------------------------------------------------
   private[graft] val arrivingShardPred = "doc_id % 10 = 7"
 
-  /** Stored-index root for a corpus snapshot — under target/ (never
-    * the read-only testdata), one subdir per snapshot. */
-  private[llm] def storedIndexPath(d: String): String =
-    new java.io.File("target/graft-stored-index/" +
-      d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-
-  /** The persisted index for snapshot `d`, built at most once per
-    * session (SnapshotMemo marker) and READ BACK from parquet — every
-    * probe consumes the artifact, not the lineage. */
-  /** Serializes stored-index builds: SnapshotMemo tolerates a racing
-    * double-compute (fine for pure DataFrames), but this compute
-    * OVERWRITES parquet directories — two interleaved overwrite jobs
-    * on one path could mix files. One lock, because builds are rare
-    * and the hold time is one backfill. */
-  private val indexBuildLock = new Object
-
-  private[llm] def storedIndex(s: SparkSession, d: String): DedupIndex.Stored = indexBuildLock.synchronized {
-    val path = storedIndexPath(d)
-    SnapshotMemo.getOrCompute(s, s"dedup-index:$d") {
+  /** The persisted index for snapshot `d`, written at most once per
+    * session ([[SnapshotMemo.stored]]) and READ BACK from parquet —
+    * every probe consumes the artifact, not the lineage. */
+  private[llm] def storedIndex(s: SparkSession, d: String): DedupIndex.Stored =
+    DedupIndex.read(s, SnapshotMemo.stored(s, d, "dedup-index") { path =>
       // the index is built from a FILTER of the memoized per-corpus
       // signature artifact (signatures are per-document, so the
       // subset's bands == full bands filtered) — the corpus is never
       // re-shingled to build a snapshot index
       DedupIndex.writeIndexSig(s,
         minhashSig(s, d).filter(!expr(arrivingShardPred)), path)
-      s.range(1).toDF("built")
-    }
-    DedupIndex.read(s, path)
-  }
+    })
 
   def dedupIncremental(s: SparkSession, d: String): DataFrame =
     DedupIndex.probe(docs(s, d).filter(expr(arrivingShardPred)),
@@ -1575,20 +1558,13 @@ object LlmQueries {
     * pinned schema, and return the full rows. The oracle is
     * `SELECT * FROM documents` straight off parquet, so codec
     * LOSSLESSNESS (newlines, quotes, unicode in `text` survive the
-    * line framing) is what the hash match proves. Write-once via
-    * the memo marker; every call re-reads the files, so the read
-    * path is exercised per run. Shares [[indexBuildLock]] — the
-    * build overwrites a directory. */
-  def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = s"${storedIndexPath(d)}/jsonl"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"jsonl:$d") {
-        graft.sources.JsonlDocs.write(docs(s, d), path)
-        s.range(1).toDF("built")
-      }
-    }
-    graft.sources.JsonlDocs.read(s, path)
-  }
+    * line framing) is what the hash match proves. Written once per
+    * session ([[SnapshotMemo.stored]]); every call re-reads the
+    * files, so the read path is exercised per run. */
+  def jsonlRoundtrip(s: SparkSession, d: String): DataFrame =
+    graft.sources.JsonlDocs.read(s, SnapshotMemo.stored(s, d, "jsonl") {
+      path => graft.sources.JsonlDocs.write(docs(s, d), path)
+    })
 
   private val DocCols =
     Seq("doc_id", "text", "lang", "source", "n_chars")
@@ -1601,13 +1577,9 @@ object LlmQueries {
     * write once per snapshot; the read is a plain columnar scan
     * with the same pushdown/pruning properties as parquet. */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = s"${storedIndexPath(d)}/orc"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"orc:$d") {
-        docs(s, d).select(DocCols.map(col): _*)
-          .write.mode("overwrite").orc(path)
-        s.range(1).toDF("built")
-      }
+    val path = SnapshotMemo.stored(s, d, "orc") { path =>
+      docs(s, d).select(DocCols.map(col): _*)
+        .write.mode("overwrite").orc(path)
     }
     s.read.orc(path).select(DocCols.map(col): _*)
   }
@@ -1620,16 +1592,10 @@ object LlmQueries {
     * oracle is again the documents table verbatim — a quoting /
     * escaping / newline bug anywhere in the pair of configs
     * hash-mismatches on the text column. */
-  def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = s"${storedIndexPath(d)}/csv"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"csv:$d") {
-        csvWrite(docs(s, d).select(DocCols.map(col): _*), path)
-        s.range(1).toDF("built")
-      }
-    }
-    csvRead(s, path)
-  }
+  def csvRoundtrip(s: SparkSession, d: String): DataFrame =
+    csvRead(s, SnapshotMemo.stored(s, d, "csv") { path =>
+      csvWrite(docs(s, d).select(DocCols.map(col): _*), path)
+    })
 
   /** The lossless CSV config pair — ONE definition so the write and
     * read legs (and the adversarial-text spec) cannot drift. Two
@@ -1716,43 +1682,38 @@ object LlmQueries {
     * agreement pins the expression, not the plumbing. Null and
     * empty texts carry a null ratio (no defined ratio). */
   private[graft] def compressGoldenPath(s: SparkSession, d: String): String =
-    indexBuildLock.synchronized {
-      val path = s"${storedIndexPath(d)}/compress-golden"
-      SnapshotMemo.getOrCompute(s, s"compress-golden:$d") {
-        import s.implicits._
-        docs(s, d).select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .mapPartitions { it =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            it.map { case (id, text) =>
-              if (text == null) (id, null: String, None: Option[Long])
-              else {
-                val raw = text.getBytes(
-                  java.nio.charset.StandardCharsets.UTF_8)
-                md.reset()
-                val sha = md.digest(raw)
-                  .map(b => f"${b & 0xff}%02x").mkString
-                val ratio =
-                  if (raw.isEmpty) None
-                  else {
-                    val defl = new java.util.zip.Deflater(6)
-                    try {
-                      defl.setInput(raw)
-                      defl.finish()
-                      val buf = new Array[Byte](512)
-                      var out = 0L
-                      while (!defl.finished()) out += defl.deflate(buf)
-                      Some(out * 1000L / raw.length)
-                    } finally defl.end()
-                  }
-                (id, sha, ratio)
-              }
+    SnapshotMemo.stored(s, d, "compress-golden") { path =>
+      import s.implicits._
+      docs(s, d).select(col("doc_id"), col("text"))
+        .as[(Long, String)]
+        .mapPartitions { it =>
+          val md = java.security.MessageDigest.getInstance("SHA-256")
+          it.map { case (id, text) =>
+            if (text == null) (id, null: String, None: Option[Long])
+            else {
+              val raw = text.getBytes(
+                java.nio.charset.StandardCharsets.UTF_8)
+              md.reset()
+              val sha = md.digest(raw)
+                .map(b => f"${b & 0xff}%02x").mkString
+              val ratio =
+                if (raw.isEmpty) None
+                else {
+                  val defl = new java.util.zip.Deflater(6)
+                  try {
+                    defl.setInput(raw)
+                    defl.finish()
+                    val buf = new Array[Byte](512)
+                    var out = 0L
+                    while (!defl.finished()) out += defl.deflate(buf)
+                    Some(out * 1000L / raw.length)
+                  } finally defl.end()
+                }
+              (id, sha, ratio)
             }
-          }.toDF("doc_id", "text_sha", "ratio_x1000")
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+          }
+        }.toDF("doc_id", "text_sha", "ratio_x1000")
+        .write.mode("overwrite").parquet(path)
     }
 
   /** sha256 of the normalized (lowercased, whitespace-collapsed)
@@ -1763,21 +1724,15 @@ object LlmQueries {
 
   /** Persisted exact-hash index over the existing snapshot:
     * (dedup_key, keep_id = min doc_id per key), read back from
-    * parquet. Shares [[indexBuildLock]] — the build overwrites a
-    * parquet path. */
+    * parquet. */
   private def storedExactIndex(s: SparkSession, d: String): DataFrame =
-    indexBuildLock.synchronized {
-      val path = s"${storedIndexPath(d)}/exact"
-      SnapshotMemo.getOrCompute(s, s"exact-index:$d") {
-        docs(s, d).filter(!expr(arrivingShardPred))
-          .select(col("doc_id"), tokenizedKeyExpr.as("dedup_key"))
-          .groupBy(col("dedup_key"))
-          .agg(min(col("doc_id")).as("keep_id"))
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      s.read.parquet(path)
-    }
+    s.read.parquet(SnapshotMemo.stored(s, d, "exact") { path =>
+      docs(s, d).filter(!expr(arrivingShardPred))
+        .select(col("doc_id"), tokenizedKeyExpr.as("dedup_key"))
+        .groupBy(col("dedup_key"))
+        .agg(min(col("doc_id")).as("keep_id"))
+        .write.mode("overwrite").parquet(path)
+    })
 
   // ---------------------------------------------------------------
   // SimHash fingerprint: 16-bit signature, bit j = majority over the
@@ -2294,19 +2249,14 @@ object LlmQueries {
     * excluded — they don't exist at build time) + every index
     * vector's assignment, written partitioned by `cid` so the
     * inverted lists are physical partition directories. Built at
-    * most once per session (memo marker) and read back from
-    * parquet — every probe consumes the artifact, not the lineage.
-    * Shares [[indexBuildLock]]: the build overwrites directories. */
+    * most once per session ([[SnapshotMemo.stored]]) and read back
+    * from parquet — every probe consumes the artifact, not the
+    * lineage. */
   private[llm] def storedAnnIndex(s: SparkSession, d: String): AnnIndex.Stored =
-    indexBuildLock.synchronized {
-      val path = s"${storedIndexPath(d)}/ann"
-      SnapshotMemo.getOrCompute(s, s"ann-index:$d") {
-        AnnIndex.write(s, quantized(s, d).filter(!expr(arrivingVecPred)),
-          path, nCentroids, kmIters)
-        s.range(1).toDF("built")
-      }
-      AnnIndex.read(s, path)
-    }
+    AnnIndex.read(s, SnapshotMemo.stored(s, d, "ann") { path =>
+      AnnIndex.write(s, quantized(s, d).filter(!expr(arrivingVecPred)),
+        path, nCentroids, kmIters)
+    })
 
   /** Incremental ANN probe (`llm_ivf_incremental`): every vector of
     * the arriving shard gets its top-5 neighbors from the STORED
@@ -2327,16 +2277,12 @@ object LlmQueries {
     * sub-codes, codes partitioned by cid beside the assignment
     * store. Built at most once per session; every probe reads the
     * artifact. */
-  private[llm] def storedPqIndex(s: SparkSession, d: String): AnnIndex.StoredPq =
-    indexBuildLock.synchronized {
-      val ann = storedAnnIndex(s, d)
-      val path = s"${storedIndexPath(d)}/ann-pq"
-      SnapshotMemo.getOrCompute(s, s"ann-pq-index:$d") {
-        AnnIndex.writePq(s, ann, path, pqSub, pqDim, nCentroids)
-        s.range(1).toDF("built")
-      }
-      AnnIndex.readPq(s, path)
-    }
+  private[llm] def storedPqIndex(s: SparkSession, d: String): AnnIndex.StoredPq = {
+    val ann = storedAnnIndex(s, d)
+    AnnIndex.readPq(s, SnapshotMemo.stored(s, d, "ann-pq") { path =>
+      AnnIndex.writePq(s, ann, path, pqSub, pqDim, nCentroids)
+    })
+  }
 
   /** Incremental IVFPQ probe (`llm_ivfpq_incremental`): every
     * arriving vector gets its top-5 ADC neighbors from the STORED
@@ -3575,22 +3521,15 @@ object LlmQueries {
     * an incremental span-dedup pass maintains between ingests.
     * Hash-only (16 bytes per distinct gram): token-scale in row
     * count but never carries text; at 100 TB it's bucket-partitioned
-    * by `h` so probes co-locate. Built under [[indexBuildLock]]
-    * (overwrites a directory) and READ BACK from parquet — probes
+    * by `h` so probes co-locate. READ BACK from parquet — probes
     * consume the artifact, not the lineage. */
-  private[llm] def storedSpanGramsPath(s: SparkSession, d: String): String = {
-    val path = s"${storedIndexPath(d)}/span-grams"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"span-grams:$d") {
-        posGramsOf(docs(s, d).filter(!expr(arrivingShardPred))
-            .select(col("doc_id"), tokenExpr.as("w")))
-          .select("h").distinct()
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+  private[llm] def storedSpanGramsPath(s: SparkSession, d: String): String =
+    SnapshotMemo.stored(s, d, "span-grams") { path =>
+      posGramsOf(docs(s, d).filter(!expr(arrivingShardPred))
+          .select(col("doc_id"), tokenExpr.as("w")))
+        .select("h").distinct()
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** Pure index-probe span stats for a `(doc_id, text, ...)` batch
     * against a stored gram set: positions whose gram EXISTS in the
@@ -3898,19 +3837,13 @@ object LlmQueries {
   /** The stored weight-table artifact (the trained-model handoff
     * seam, like the WordPiece vocab): written once per snapshot,
     * read + broadcast by the scorer. */
-  private[graft] def qualityWeightsPath(s: SparkSession, d: String): String = {
-    val path = s"${storedIndexPath(d)}/quality-weights"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"quality-weights:$d") {
-        val spark = s
-        import spark.implicits._
-        qualityWeights.toDF("feature", "w")
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+  private[graft] def qualityWeightsPath(s: SparkSession, d: String): String =
+    SnapshotMemo.stored(s, d, "quality-weights") { path =>
+      val spark = s
+      import spark.implicits._
+      qualityWeights.toDF("feature", "w")
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** LEARNED quality scoring (`llm_quality_score`) — the curation
     * operator real pipelines run most (CCNet's fastText filter,
@@ -5252,24 +5185,18 @@ object LlmQueries {
     * [[trainBoostedOf]]): written once per snapshot, read +
     * broadcast by [[qualityBoostedScore]]. */
   private[graft] def qualityEnsemblePath(s: SparkSession,
-      d: String): String = {
-    val path = s"${storedIndexPath(d)}/quality-ensemble"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"quality-ensemble:$d") {
-        val spark = s
-        import spark.implicits._
-        val stumps = trainBoostedOf(stumpFeatsOf(docs(s, d)),
-          boostRounds)
-        stumps.map(st => (st.round.toLong, st.feature, st.threshold,
-          st.polarity, st.wErr, st.wTotal, st.alpha))
-          .toDF("round", "feature", "threshold", "polarity",
-            "w_err", "w_total", "alpha")
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+      d: String): String =
+    SnapshotMemo.stored(s, d, "quality-ensemble") { path =>
+      val spark = s
+      import spark.implicits._
+      val stumps = trainBoostedOf(stumpFeatsOf(docs(s, d)),
+        boostRounds)
+      stumps.map(st => (st.round.toLong, st.feature, st.threshold,
+        st.polarity, st.wErr, st.wTotal, st.alpha))
+        .toDF("round", "feature", "threshold", "polarity",
+          "w_err", "w_total", "alpha")
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** BOOSTED-stump training (`llm_quality_boosted`) — closes the
     * quality train→score loop the round-13 verdict called for: the
@@ -5525,21 +5452,15 @@ object LlmQueries {
   /** The stored NB counts artifact: (lang, gram, cnt) over the
     * TRAINING split — written once per snapshot, read back from
     * parquet by every scorer (the [[qualityEnsemblePath]] seam). */
-  private[graft] def langIdCountsPath(s: SparkSession, d: String): String = {
-    val path = s"${storedIndexPath(d)}/langid-counts"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"langid-counts:$d") {
-        langIdFixture(s, d).filter(!expr(langIdTestPred))
-          .select(col("lang_true").as("lang"),
-            explode(col("grams")).as("gram"))
-          .groupBy(col("lang"), col("gram"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+  private[graft] def langIdCountsPath(s: SparkSession, d: String): String =
+    SnapshotMemo.stored(s, d, "langid-counts") { path =>
+      langIdFixture(s, d).filter(!expr(langIdTestPred))
+        .select(col("lang_true").as("lang"),
+          explode(col("grams")).as("gram"))
+        .groupBy(col("lang"), col("gram"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(path)
     }
-  }
 
   /** The trained artifact surfaced (`llm_langid_train`): the full
     * per-language gram counts — vocabulary-sized (≤ ~70 grams ×
@@ -6078,27 +5999,21 @@ object LlmQueries {
     * sample (first 128 docs by id — a driver-side read like the
     * BPE vocabulary collects), persisted, read back by every
     * consumer. */
-  private[llm] def zstdDictPath(s: SparkSession, d: String): String = {
-    val path = s"${storedIndexPath(d)}/zstd-dict"
-    indexBuildLock.synchronized {
-      SnapshotMemo.getOrCompute(s, s"zstd-dict:$d") {
-        val spark = s
-        import spark.implicits._
-        val samples = docs(s, d).orderBy(col("doc_id")).limit(128)
-          .select(col("text")).as[String].collect()
-          .map(_.getBytes("UTF-8"))
-        val buf = new Array[Byte](16 * 1024)
-        val n = com.github.luben.zstd.Zstd
-          .trainFromBuffer(samples, buf, false)
-        require(!com.github.luben.zstd.Zstd.isError(n),
-          s"zstd dictionary training failed: $n")
-        Seq(java.util.Arrays.copyOf(buf, n.toInt)).toDF("dict")
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        s.range(1).toDF("built")
-      }
-      path
+  private[llm] def zstdDictPath(s: SparkSession, d: String): String =
+    SnapshotMemo.stored(s, d, "zstd-dict") { path =>
+      val spark = s
+      import spark.implicits._
+      val samples = docs(s, d).orderBy(col("doc_id")).limit(128)
+        .select(col("text")).as[String].collect()
+        .map(_.getBytes("UTF-8"))
+      val buf = new Array[Byte](16 * 1024)
+      val n = com.github.luben.zstd.Zstd
+        .trainFromBuffer(samples, buf, false)
+      require(!com.github.luben.zstd.Zstd.isError(n),
+        s"zstd dictionary training failed: $n")
+      Seq(java.util.Arrays.copyOf(buf, n.toInt)).toDF("dict")
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
-  }
 
   /** Dictionary-zstd decode (`llm_zstd_dict`) — the §5 layer every
     * small-record deployment runs: a zstd-jni-TRAINED dictionary
@@ -8610,11 +8525,11 @@ object LlmQueries {
     // relationally. The (doc_id, sha256(text)) join key self-selects
     // the matching snapshot's golden rows out of the glob; DISTINCT
     // collapses identical cross-snapshot matches (the ratio is a
-    // pure function of the text). Absolute path resolved at
-    // Verify-dump time, so DuckDB's working directory is irrelevant.
+    // pure function of the text). The glob is absolute, so DuckDB's
+    // working directory is irrelevant.
     "llm_compress_ratio" -> {
-      val glob = new java.io.File("target/graft-stored-index")
-        .getAbsolutePath + "/*/compress-golden/*.parquet"
+      val glob =
+        s"${SnapshotMemo.storedRoot}/*/compress-golden/*.parquet"
       s"""SELECT DISTINCT d.doc_id, g.ratio_x1000,
          |  CASE WHEN d.text IS NULL THEN 'null'
          |       WHEN length(d.text) = 0 THEN 'empty'

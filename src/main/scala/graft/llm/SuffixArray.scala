@@ -104,8 +104,7 @@ object SuffixArray {
     SnapshotMemo.getOrCompute(s, s"sa-len:$d")(
       Tables(s, d, "documents")
         .agg(coalesce(sum(length(col("text")).cast(LongType) + 1L),
-          lit(0L)).as("n")).localCheckpoint())
-      .head.getLong(0)
+          lit(0L)).as("n")).head.getLong(0))
 
   private def widthFor(s: SparkSession, n: Long): Int =
     math.max(s.sparkContext.defaultParallelism, graft.LoopConf.partsFor(n))
@@ -260,13 +259,12 @@ object SuffixArray {
     * table and the first densify lands at depth 16; a corpus with
     * genuinely wide codes degrades the schedule gracefully by
     * itself. */
-  private def codeRange(s: SparkSession, d: String): (Long, Long) = {
-    val key = s"sa-coderange:$d"
-    val r = SnapshotMemo.getOrCompute(s, key)(
-      positions(s, d).agg(min(col("code")).as("lo"),
-        max(col("code")).as("m")).localCheckpoint()).head
-    (r.getLong(0), r.getLong(1))
-  }
+  private def codeRange(s: SparkSession, d: String): (Long, Long) =
+    SnapshotMemo.getOrCompute(s, s"sa-coderange:$d") {
+      val r = positions(s, d).agg(min(col("code")).as("lo"),
+        max(col("code")).as("m")).head
+      (r.getLong(0), r.getLong(1))
+    }
 
   private def maxCode(s: SparkSession, d: String): Long =
     codeRange(s, d)._2

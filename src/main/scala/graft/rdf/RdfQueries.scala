@@ -1093,24 +1093,14 @@ object RdfQueries {
     case _ => None
   }
 
-  /** Serializes single-file builds: the write overwrites a directory
-    * (same discipline as the llm family's indexBuildLock). */
-  private val singleFileLock = new Object
-
   /** The fixture corpus as ONE Turtle file on disk (built once per
     * snapshot, memoized), re-parsed through the chunked
     * [[TurtleChunked]] path — 64 KiB chunks force tens of parallel
     * regions on the sf0.01 file. */
   private def turtleChunkedQ(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File("target/graft-stored-index/" +
-      d.replaceAll("[^A-Za-z0-9._-]", "_") + "/turtle-single")
-      .getAbsolutePath
-    singleFileLock.synchronized {
-      graft.SnapshotMemo.getOrCompute(s, s"turtle-single:$d") {
-        Turtle.serialize(tri(s, d).coalesce(1))
-          .write.mode("overwrite").text(dir)
-        s.range(1).toDF("built")
-      }
+    val dir = graft.SnapshotMemo.stored(s, d, "turtle-single") { dir =>
+      Turtle.serialize(tri(s, d).coalesce(1))
+        .write.mode("overwrite").text(dir)
     }
     val part = new java.io.File(dir).listFiles()
       .find(f => f.getName.startsWith("part-")).get

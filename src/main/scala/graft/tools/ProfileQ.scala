@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.ListenerBridge
 
 import graft.GraftSession
 
@@ -62,7 +63,7 @@ object ProfileQ {
     // same warmup as Bench.main
     Seq("lineitem", "part", "documents", "embeddings", "orders")
       .foreach(t => graft.Tables(spark, sfDir, t).count())
-    Thread.sleep(300) // drain listener
+    ListenerBridge.drain(spark.sparkContext)
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       (0 until reps).foreach { i =>
@@ -72,7 +73,7 @@ object ProfileQ {
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // let listener catch up
+        ListenerBridge.drain(spark.sparkContext)
         val label = if (i == 0) "cold" else s"warm$i"
         println(f"[profile] $name $label wall=$wall%.2fs jobs=${jobs.get}" +
           f" executions=${executions.size}" +

@@ -215,8 +215,8 @@ object ScaleRehearsal {
     spark.stop()
     spark = session(cpus)
     locally {
-      val ttlDir = new java.io.File("target/graft-stored-index/" +
-        out.replaceAll("[^A-Za-z0-9._-]", "_") + "/turtle-single")
+      val ttlDir = new java.io.File(
+        graft.SnapshotMemo.storedPath(out, "turtle-single"))
       val part = ttlDir.listFiles().find(_.getName.startsWith("part-")).get
       val lines = java.nio.file.Files.readAllLines(part.toPath)
       val (head, body) = {

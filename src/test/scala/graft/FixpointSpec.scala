@@ -4,10 +4,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{AnnIndex, LlmQueries}
@@ -38,11 +38,11 @@ class FixpointSpec extends AnyFunSuite {
           }
         }
     }
-    TestListenerBus.drain(sc)
+    ListenerBridge.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
-      TestListenerBus.drain(sc)
+      ListenerBridge.drain(sc)
     } finally sc.removeSparkListener(listener)
     seen.asScala.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
   }

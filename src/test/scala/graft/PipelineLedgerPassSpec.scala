@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.ListenerBridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -124,7 +124,7 @@ class PipelineLedgerPassSpec extends AnyFunSuite {
       // elapsed = TTL: every key is stale every week, so the weeks
       // from the second on process the same data
       val perWeek = (1 to 8).map { week =>
-        TestListenerBus.drain(spark.sparkContext)
+        ListenerBridge.drain(spark.sparkContext)
         jobs.set(0)
         spark.sparkContext.setJobGroup(group, s"week $week")
         try {
@@ -139,7 +139,7 @@ class PipelineLedgerPassSpec extends AnyFunSuite {
           ledger = r.ledger
           assert(r.metrics.attempted == keys.size)
         } finally spark.sparkContext.clearJobGroup()
-        TestListenerBus.drain(spark.sparkContext)
+        ListenerBridge.drain(spark.sparkContext)
         (ledger.queryExecution.analyzed.collectLeaves().size, jobs.get())
       }
       assert(perWeek(1)._2 > 0)

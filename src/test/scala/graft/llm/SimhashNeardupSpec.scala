@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,7 +39,8 @@ class SimhashNeardupSpec extends AnyFunSuite {
       .toSet
     // independent expectation from the memoized signature table
     val sigs = graft.SnapshotMemo
-      .getOrCompute(s, s"simhash64:$d")(sys.error("must be memoized"))
+      .getOrCompute[DataFrame](s, s"simhash64:$d")(
+        sys.error("must be memoized"))
       .collect().map(r => (r.getLong(0),
         (1 to 4).map(k => r.getLong(k)).toVector))
     val rep = sigs.groupBy(_._2).map { case (_, g) =>

@@ -220,12 +220,13 @@ class SuffixArraySpec extends AnyFunSuite {
     val before = sc.getPersistentRDDs.keySet
     val pos = SuffixArray.positions(spark, fx.dir)
     val added = sc.getPersistentRDDs.keySet -- before
-    // the build memoizes two artifacts: the corpus length and positions
-    val memo = Seq(pos, graft.SnapshotMemo.getOrCompute(spark,
-      s"sa-len:${fx.dir}")(fail("corpus length was not memoized")))
-    val leaves = memo.flatMap(_.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id })
+    // the build memoizes the corpus length (a plain value, no
+    // persisted rows) and positions
+    assert(graft.SnapshotMemo.getOrCompute[Long](spark,
+      s"sa-len:${fx.dir}")(fail("corpus length was not memoized")) > 0)
+    val leaves = pos.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
     assert(added === leaves.toSet)
-    assert(memo.forall(!_.columns.contains("text")))
+    assert(!pos.columns.contains("text"))
   }
 }
